@@ -148,26 +148,28 @@ object Bench {
       .mkString("{", ",", "}")
     val total = results.collect { case (_, Right(v)) => v }.sum
     val nFail = results.count(_._2.isLeft)
-    val anchorJson = {
-      val mins = anchorRef.keys.toSeq.sorted.flatMap { n =>
-        val vs = Seq(anchorStart, anchorMid, anchorEnd).flatMap(_.get(n))
-        if (vs.isEmpty) None else Some(n -> vs.min)
-      }
-      val ratios = mins.map { case (n, v) => v / anchorRef(n) }.sorted
+    val anchorMins = anchorRef.keys.toSeq.sorted.flatMap { n =>
+      val vs = Seq(anchorStart, anchorMid, anchorEnd).flatMap(_.get(n))
+      if (vs.isEmpty) None else Some(n -> vs.min)
+    }
+    val windowFactor: Option[Double] = {
+      val ratios = anchorMins.map { case (n, v) => v / anchorRef(n) }.sorted
+      if (!anchorsOn || ratios.isEmpty) None
+      else if (ratios.size % 2 == 1) Some(ratios(ratios.size / 2))
+      else Some((ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2)
+    }
+    val wfJson = windowFactor.fold("")(wf => s""""window_factor":${r3(wf)},""")
+    val anchorJson =
       if (anchorScale && anchorMissing.nonEmpty)
         s""""anchors":null,"anchors_error":${jstr(
           s"unresolved anchor queries: ${anchorMissing.mkString(",")} — " +
             "re-pin Bench.anchorRef")},"""
-      else if (!anchorsOn || ratios.isEmpty) ""
+      else if (windowFactor.isEmpty) ""
       else {
-        val wf =
-          if (ratios.size % 2 == 1) ratios(ratios.size / 2)
-          else (ratios(ratios.size / 2 - 1) + ratios(ratios.size / 2)) / 2
-        val am = mins.map { case (n, v) => s"${jstr(n)}:${r3(v)}" }
+        val am = anchorMins.map { case (n, v) => s"${jstr(n)}:${r3(v)}" }
           .mkString("{", ",", "}")
-        s""""anchors":$am,"window_factor":${r3(wf)},"""
+        s""""anchors":$am,$wfJson"""
       }
-    }
     // Key order is deliberate: the headline summary (metric/value/sf)
     // goes LAST so a tail-truncated capture always retains the total
     // even when the per-query map overflows the window. JSON key order
@@ -183,8 +185,6 @@ object Bench {
     // any consumer looking for the canonical "total" record cannot
     // mistake it for the full line, which still prints below,
     // byte-compatible with every prior round.
-    val wfJson = anchorJson.split(",").find(_.startsWith("\"window_factor\""))
-      .map(s => s + ",").getOrElse("")
     println(
       s"""{"metric":"total_compact","value":${r3(total)},"unit":"sec","n":${names.size},"n_failed":$nFail,$wfJson"sf":"$sfDir"}""")
     println(json)

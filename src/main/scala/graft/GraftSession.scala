@@ -58,11 +58,11 @@ object GraftSession {
     * The bounded gate streams hold small keyed state (hours, users,
     * band keys), so batch-sized parallelism (the session's core count)
     * buys nothing downstream of the watermark while multiplying the
-    * per-batch commit bill. State size, not corpus size, is what
-    * should set this in production — raise it via
-    * SPARK_GRAFT_STREAM_PARTITIONS for large keyed state (it must be
-    * fixed for the life of a checkpoint; every gate/bench run starts
-    * from a fresh checkpoint, so re-runs stay comparable).
+    * per-batch commit bill: the value is min(session value, 8), so it
+    * only ever lowers. State size, not corpus size, is what should set
+    * it in production; it must be fixed for the life of a checkpoint,
+    * and every gate/bench run starts from a fresh checkpoint, so
+    * re-runs stay comparable.
     *
     * Restoring immediately after `.start()` is safe: StreamExecution
     * clones the session synchronously at construction, so the running
@@ -81,18 +81,7 @@ object GraftSession {
     streamParallelismLock.synchronized {
       val key = "spark.sql.shuffle.partitions"
       val prev = spark.conf.get(key)
-      val sessionN = scala.util.Try(prev.toInt).getOrElse(8)
-      // env override validated (ADVICE r16): garbage or non-positive
-      // values fall back to the default instead of failing obscurely
-      // inside the stream; the value is capped at the session's own
-      // parallelism so the knob only ever LOWERS (the SessionSpec
-      // contract) — raising state parallelism above batch parallelism
-      // is a cluster-deployment decision, not a gate-bench one.
-      val n = sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS")
-        .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .filter(_ > 0)
-        .map(math.min(_, sessionN))
-        .getOrElse(math.min(sessionN, 8))
+      val n = math.min(scala.util.Try(prev.toInt).getOrElse(8), 8)
       spark.conf.set(key, n.toString)
       try body finally spark.conf.set(key, prev)
     }

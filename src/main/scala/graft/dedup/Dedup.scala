@@ -354,6 +354,21 @@ object Dedup {
       .distinct()
   }
 
+  /** One-shot materialization of a multi-referenced derived frame
+    * (typically the exact-Jaccard reduction): a lazy localCheckpoint
+    * protects it from recomputation — the sf1 soak measured exchange
+    * reuse failing to dedupe it under AQE — at the cost of extra job +
+    * block machinery per consumer. Lazy (eager = false): plan
+    * CONSTRUCTION must not run Spark jobs.
+    *
+    * MEASURED A/B at sf0.1 (26-query graph family, same host window,
+    * r11): materialize-always 55.5 s vs fused-plan-never 60.2 s — the
+    * materialization wins at gate scale too (without blocks, the
+    * single-reference shapes genuinely recompute the reduction), and
+    * it wins big at sf1 (the soak's q238 44.3 → 21.4 s class of fix). */
+  private[graft] def oneShot(df: DataFrame): DataFrame =
+    df.localCheckpoint(eager = false)
+
   /** Connected components over an undirected pair list (first two
     * columns = the two endpoint ids): every node labeled with the
     * minimum id reachable from it.
@@ -373,42 +388,6 @@ object Dedup {
     * `localCheckpoint` truncates lineage each round so the plan never
     * grows with the loop; the driver only ever sees per-round scalar
     * counts — no data rides through the driver. */
-  /** One-shot materialization policy for multi-referenced derived
-    * frames (typically the exact-Jaccard reduction). A lazy
-    * localCheckpoint protects the frame from recomputation — the sf1
-    * soak measured exchange reuse failing to dedupe it under AQE —
-    * at the cost of extra job + block machinery per consumer.
-    *
-    * MEASURED A/B at sf0.1 (26-query graph family, same host window,
-    * r11): materialize-always 55.5 s vs fused-plan-never 60.2 s — the
-    * materialization wins at gate scale too (without blocks, the
-    * single-reference shapes genuinely recompute the reduction), and
-    * it wins big at sf1 (the soak's q238 44.3 → 21.4 s class of fix).
-    * So the DEFAULT is materialize-always (threshold 0); the env knob
-    * remains for corpora/hosts where the trade tips the other way —
-    * the decision signal is documents.parquet's file length:
-    * driver-side FS metadata, NO Spark job at plan construction (the
-    * repo convention). An unreadable path reads as big (materialize —
-    * the safe side). LOOP-PROBED frames are NOT eligible for the
-    * knob: a per-round probe without blocks re-derives the upstream
-    * every round, at any scale — those stay unconditional. */
-  private val OneShotCkptMinBytes =
-    sys.env.get("GRAFT_ONESHOT_MIN_BYTES").map(_.toLong).getOrElse(0L)
-  private val corpusBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def bigCorpus(spark: SparkSession, dir: String): Boolean =
-    corpusBytesCache.computeIfAbsent(dir, d => {
-      val p = new org.apache.hadoop.fs.Path(s"$d/documents.parquet")
-      try java.lang.Long.valueOf(
-        p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          .getFileStatus(p).getLen)
-      catch { case _: java.io.IOException => java.lang.Long.valueOf(Long.MaxValue) }
-    }) >= OneShotCkptMinBytes
-
-  /** Materialize-if-big (see [[bigCorpus]]). */
-  private[graft] def oneShot(df: DataFrame, big: Boolean): DataFrame =
-    if (big) df.localCheckpoint(eager = false) else df
-
   def connectedComponents(pairs: DataFrame, propagationBudget: Int = 20): DataFrame = {
     val Seq(a, b) = pairs.columns.take(2).toSeq
     // SINGLE-REFERENCE symmetrize: explode each pair into both
@@ -860,27 +839,21 @@ object Dedup {
     * degree, join (a→b) with (b→c), semi-check (a→c) — three bounded
     * equi-joins, no symmetric-edge blowup, skew-proof fan-out (see
     * [[orientByDegree]]). */
-  private[graft] def triangleCountsFrom(edges: DataFrame,
-      big: Boolean = true): DataFrame = {
+  private[graft] def triangleCountsFrom(edges: DataFrame): DataFrame = {
     // the edge subtree (for q92: the whole LSH/inverted-index join) is
     // referenced 3x by orientByDegree and the oriented set 3x below —
     // materialize each ONCE (the q67 localCheckpoint pattern) instead
-    // of relying on exchange reuse to dedupe up to 9 recomputations;
-    // size-adaptive (oneShot) because below the corpus threshold the
-    // fused single-job plan with exchange reuse is cheaper.
-    // eager = false: plan CONSTRUCTION must not run Spark jobs (a
-    // caller composing/inspecting the query pays nothing until the
-    // first action)
-    val e = oneShot(edges, big)
-    triangleCountsFromCheckpointed(e, endpointDegrees(e), big)
+    // of relying on exchange reuse to dedupe up to 9 recomputations
+    val e = oneShot(edges)
+    triangleCountsFromCheckpointed(e, endpointDegrees(e))
   }
 
   /** Core triangle enumeration over an ALREADY-materialized edge set +
     * its degree table (q170 shares both — no re-checkpoint, no second
     * degree shuffle). */
   private def triangleCountsFromCheckpointed(e: DataFrame,
-      deg: DataFrame, big: Boolean = true): DataFrame = {
-    val p = oneShot(orientByDegree(e, deg), big)
+      deg: DataFrame): DataFrame = {
+    val p = oneShot(orientByDegree(e, deg))
     val tri = p.alias("ab")
       .join(p.alias("bc"), col("ab.dst") === col("bc.src"))
       .select(col("ab.src").as("a"), col("ab.dst").as("b"),
@@ -900,8 +873,7 @@ object Dedup {
     * oracle (which enumerates id-ordered triples) is unchanged by the
     * degree ordering. */
   def triangleCounts(spark: SparkSession, dir: String): DataFrame =
-    triangleCountsFrom(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-        bigCorpus(spark, dir))
+    triangleCountsFrom(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
       .orderBy(col("doc_id"))
 
   /** LOCAL CLUSTERING COEFFICIENT per node: triangles(v) /
@@ -912,14 +884,12 @@ object Dedup {
     * and the symmetrized degree count; nodes with deg < 2 define cc=0.
     * Integer counts, ONE division. */
   def clusteringCoefficient(spark: SparkSession, dir: String): DataFrame = {
-    val big = bigCorpus(spark, dir)
-    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-      big)
+    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
     // one degree table serves the clustering denominator AND the
     // triangle orientation (and e is materialized exactly once)
-    val degrees = oneShot(endpointDegrees(e), big)
+    val degrees = oneShot(endpointDegrees(e))
     val deg = degrees.select(col("v").as("doc_id"), col("deg").as("degree"))
-    deg.join(triangleCountsFromCheckpointed(e, degrees, big),
+    deg.join(triangleCountsFromCheckpointed(e, degrees),
         Seq("doc_id"), "left")
       .withColumn("n_triangles", coalesce(col("n_triangles"), lit(0L)))
       .withColumn("cc",
@@ -975,8 +945,7 @@ object Dedup {
     * near-dup graph's bounded degrees; a hubby graph caps hop-through
     * degree first (the q92 orientation lesson, same mitigation). */
   def twoHopNeighbors(spark: SparkSession, dir: String): DataFrame = {
-    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-      bigCorpus(spark, dir))
+    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
     val sym = e.union(e.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
     val h2 = sym.alias("x").join(sym.alias("y"), col("x.dst") === col("y.src"))
@@ -1341,12 +1310,10 @@ object Dedup {
     // count (triangleCountsFrom re-checkpoints for its own 3-way join);
     // calling triangleCounts(spark, dir) here would pay the dominant
     // co-occurrence reduction a second time
-    val big = bigCorpus(spark, dir)
-    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-      big)
+    val e = oneShot(jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
     val sym = e.union(e.select(col("doc_b"), col("doc_a")))
       .toDF("src", "dst")
-    val tri = triangleCountsFrom(e, big)
+    val tri = triangleCountsFrom(e)
       .agg(expr("sum(n_triangles) DIV 3").as("n_triangles"))
     val paths = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .agg(sum(expr("(d * (d - 1)) DIV 2")).as("n_two_paths"))
@@ -1371,7 +1338,7 @@ object Dedup {
   def degreeAssortativity(spark: SparkSession, dir: String): DataFrame = {
     val e = jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b"))
     val sym = oneShot(e.union(e.select(col("doc_b"), col("doc_a")))
-      .toDF("src", "dst"), bigCorpus(spark, dir))
+      .toDF("src", "dst"))
     val deg = sym.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .select(col("src").as("node"), col("d"))
     val xy = sym
@@ -1781,6 +1748,9 @@ object Dedup {
       .select(col("doc_id"), col("bk.config").as("config"),
         col("bk.n_bands").as("n_bands"), col("bk.band").as("band"),
         col("bk.bkey").as("bkey"))
+    // referenced twice below (candidate count + hit probe) — the
+    // banded self-join over all five configs is the dominant subtree;
+    // materialize it ONCE like `exact` (optimization r16)
     val cand = oneShot(bands.alias("x").join(bands.alias("y"),
         col("x.config") === col("y.config") &&
         col("x.band") === col("y.band") &&
@@ -1788,17 +1758,12 @@ object Dedup {
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.config").as("config"), col("x.n_bands").as("n_bands"),
         col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct(),
-      // referenced twice below (candidate count + hit probe) — the
-      // banded self-join over all five configs is the dominant
-      // subtree; materialize it ONCE like `exact` (optimization r16)
-      bigCorpus(spark, dir))
+      .distinct())
+    // referenced twice below (hit probe + n_true); materialize the
+    // dominant co-occurrence reduction ONCE (q67 pattern) instead of
+    // relying on exchange reuse across two different consumers
     val exact = oneShot(jaccardScoredPairs(spark, dir)
-      .filter(col("jaccard") >= 0.5).select(col("doc_a"), col("doc_b")),
-      // referenced twice below (hit probe + n_true); materialize the
-      // dominant co-occurrence reduction ONCE (q67 pattern) instead of
-      // relying on exchange reuse across two different consumers
-      bigCorpus(spark, dir))
+      .filter(col("jaccard") >= 0.5).select(col("doc_a"), col("doc_b")))
     val d = (x: org.apache.spark.sql.Column) => x.cast(DoubleType)
     cand.groupBy(col("config"), col("n_bands"))
       .agg(count(lit(1)).as("n_candidates"))
@@ -1865,7 +1830,7 @@ object Dedup {
       // lazy localCheckpoint, not persist(): materialized once on first
       // use, and the blocks are GC-freed with the frame — a persist()
       // here would sit in the cache registry for the whole gate run
-      .transform(oneShot(_, bigCorpus(spark, dir)))
+      .transform(oneShot)
     val tot = tf.groupBy(col("doc_id")).agg(sum(col("c")).as("t"))
     val cand = jaccardEdges(spark, dir)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
@@ -1983,11 +1948,10 @@ object Dedup {
   def retentionWhatif(spark: SparkSession, dir: String): DataFrame = {
     val docs = spread(load(spark, dir, "documents"))
       .select(col("doc_id"), size(tokens(col("text"))).cast(LongType).as("ntok"))
+    // lazy localCheckpoint (q67 pattern), not persist(): blocks free
+    // with the frame instead of accumulating across the gate run
     val pairs = oneShot(
-      jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-      // lazy localCheckpoint (q67 pattern), not persist(): blocks free
-      // with the frame instead of accumulating across the gate run
-      bigCorpus(spark, dir))
+      jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
     val clusters = connectedComponents(pairs)
       .select(col("id").as("doc_id"), col("label").as("cluster_id"))
     val j = docs.join(clusters, Seq("doc_id"), "left")
@@ -2078,8 +2042,7 @@ object Dedup {
     // twice, and the blocks free with the frame (no cache-registry
     // residue across a 353-query run)
     val pairs = oneShot(
-      jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")),
-      bigCorpus(spark, dir))
+      jaccardEdges(spark, dir).select(col("doc_a"), col("doc_b")))
     val deg = pairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("degree"))

@@ -1576,10 +1576,9 @@ object Pipeline {
       indexDir: String, batches: DataFrame, checkpointDir: String,
       repairOnStart: Boolean = true,
       onAudit: (Long, DataFrame) => Unit = (_, _) => ()): Unit = {
-    val q = batches.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (b: DataFrame, batchId: Long) =>
+    graft.streaming.Streams.runBounded(batches, "graft_stream_ingest",
+        checkpointDir, stateful = false)(
+      _.foreachBatch { (b: DataFrame, batchId: Long) =>
         if (repairOnStart) {
           repairIngestIndexes(spark, corpusDir, indexDir): Unit
         }
@@ -1601,9 +1600,7 @@ object Pipeline {
           org.apache.commons.io.FileUtils
             .deleteDirectory(new java.io.File(snap))
         }
-      }
-      .start()
-    try q.awaitTermination() finally q.stop()
+      })
   }
 
   /** q388 — BANDING AUDIT OVER THE GROWN INGEST INDEX (VERDICT r15

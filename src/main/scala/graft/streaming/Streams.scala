@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import graft.Tables._
 
 /** Structured Streaming coverage (SURVEY.md §2.10 — the reference
@@ -68,7 +69,7 @@ object Streams {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    runToMemory(spark, agg, "graft_stream_hourly")
+    runToMemory(agg, "graft_stream_hourly")
       .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy(col("hour_start"), col("event_type"))
@@ -94,7 +95,7 @@ object Streams {
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    runToMemory(spark, agg, "graft_stream_union")
+    runToMemory(agg, "graft_stream_union")
       .select(col("window.start").cast("timestamp_ntz").as("hour_start"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy(col("hour_start"), col("event_type"))
@@ -126,56 +127,95 @@ object Streams {
       .agg(sum(col("n_events")).as("n_events"),
         count(lit(1)).as("n_hours"),
         max(col("n_events")).as("busiest_hour_events"))
-    runToMemoryAppend(spark, daily, "graft_stream_chained")
+    runToMemory(daily, "graft_stream_chained", "append")
       .select(col("window.start").cast("timestamp_ntz").as("day_start"),
         col("n_events"), col("n_hours"), col("busiest_hour_events"))
       .orderBy(col("day_start"))
   }
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
+  /** The StreamingQueryProgress of each bounded run's last execution,
+    * keyed by run name (= query name): micro-batch count, state rows
+    * and per-batch trigger time, so an audit can separate plan cost
+    * (state growth, extra batches) from fixed Spark machinery
+    * (checkpoint WAL, sink commit log, no-data watermark batch). */
+  private val progressByRun =
+    new java.util.concurrent.ConcurrentHashMap[String, Array[StreamingQueryProgress]]()
+
+  /** The recorded progress of run `name`; empty if it has not run in
+    * this JVM. */
+  private[graft] def progress(name: String): Array[StreamingQueryProgress] =
+    progressByRun.getOrDefault(name, Array.empty)
+
+  /** THE bounded streaming run: every AvailableNow query in the engine
+    * starts, waits and stops here. `sink` configures the writer
+    * (format and output mode, or a foreachBatch body); the run is named
+    * `name` (a memory sink's result view), checkpoints to the caller's
+    * `ckpt` — never deleted here, because callers such as
+    * [[streamFanOut]] replay against it — runs to completion, records
+    * its [[progress]], and is stopped in `finally`, so a failed batch
+    * leaves no active query behind and the error names the run.
+    *
+    * Stateful runs start under [[graft.GraftSession.withStreamParallelism]]
+    * (one state store per shuffle partition, committed every batch).
+    * Stateless foreachBatch runs keep the session's full parallelism:
+    * their per-batch work is batch jobs (q188's MERGE joins measured
+    * 1.9× slower throttled). */
+  private[graft] def runBounded(df: DataFrame, name: String, ckpt: String,
+      stateful: Boolean)(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit = {
+    val spark = df.sparkSession
+    spark.catalog.dropTempView(name): Unit
+    val w = sink(df.writeStream).queryName(name)
+      .option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow())
+    val start = () => w.start()
+    val q =
+      if (stateful) graft.GraftSession.withStreamParallelism(spark)(start())
+      else start()
+    try q.awaitTermination()
+    finally { progressByRun.put(name, q.recentProgress); q.stop() }
   }
 
-  /** Shared memory-sink run protocol for the bounded complete-mode
-    * streaming queries (q40/q43/q88/q102/q103/q104): fresh temp view + temp
-    * checkpoint, AvailableNow to completion, checkpoint deleted so
-    * Bench reruns never resume, result read back from the view. */
-  /** [[runToMemory]]'s append-mode twin — required for chained
-    * stateful operators (q262), where complete mode is unsupported:
-    * only watermark-closed windows are emitted, which is the
-    * production semantics of a multi-stage streaming rollup. */
-  private def runToMemoryAppend(spark: SparkSession, agg: DataFrame,
-      name: String): DataFrame = {
-    if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt")
-    val q = graft.GraftSession.withStreamParallelism(spark) {
-      agg.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    try q.awaitTermination()
-    finally { q.stop(); deleteRecursively(ckpt.toFile) }
-    spark.table(name)
+  /** A bounded stateful run through the memory sink — complete mode for
+    * the aggregations; append for chained or arbitrary state, where
+    * complete is unsupported and only watermark-closed output emits —
+    * on a fresh temp checkpoint deleted after the run, so Bench reruns
+    * never resume. Returns the result view. */
+  private[graft] def runToMemory(df: DataFrame, name: String,
+      mode: String = "complete"): DataFrame = {
+    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toFile
+    try runBounded(df, name, ckpt.toString, stateful = true)(
+      _.format("memory").outputMode(mode))
+    finally FileUtils.deleteQuietly(ckpt): Unit
+    df.sparkSession.table(name)
   }
 
-  private def runToMemory(spark: SparkSession, agg: DataFrame,
-      name: String): DataFrame = {
-    if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt")
-    val q = graft.GraftSession.withStreamParallelism(spark) {
-      agg.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    try q.awaitTermination()
-    finally { q.stop(); deleteRecursively(ckpt.toFile) }
-    spark.table(name)
+  /** THE tmp-path rule for every per-run staging, sink and checkpoint
+    * root: deterministic per (prefix, data dir, JVM). The dir's hash
+    * keeps paths whose sanitized forms collide apart (`/x/sf0.1` vs
+    * `/x/sf0_1`); the pid keeps a concurrent Verify/test pair on one
+    * data dir from racing on each other's files. */
+  private[graft] def tmpPath(prefix: String, dir: String): String =
+    s"${sys.props("java.io.tmpdir")}/$prefix" +
+      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${Integer.toHexString(dir.hashCode)}" +
+      s"_${ProcessHandle.current().pid()}"
+
+  /** [[tmpPath]], wiped first so a rerun prices the full computation
+    * and never resumes an old checkpoint. */
+  private def freshTmp(prefix: String, dir: String): String = {
+    val p = tmpPath(prefix, dir)
+    FileUtils.deleteQuietly(new java.io.File(p)): Unit
+    p
+  }
+
+  /** A bounded stateful run into a CHECKPOINTED PARQUET FILE SINK in
+    * append mode under the run's fresh tmp root (`out` + `ckpt`):
+    * executor → files, so an O(events) stream never resides on the
+    * driver. Returns the committed files for a batch rollup. */
+  private def runToFiles(df: DataFrame, name: String, dir: String): DataFrame = {
+    val base = freshTmp(name, dir)
+    runBounded(df, name, s"$base/ckpt", stateful = true)(
+      _.format("parquet").option("path", s"$base/out").outputMode("append"))
+    df.sparkSession.read.parquet(s"$base/out")
   }
 
   /** Streaming exactly-once dedup + aggregation: dropDuplicates keyed
@@ -193,26 +233,8 @@ object Streams {
       .dropDuplicates("event_id", "event_type")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
-    runToMemory(spark, agg, "graft_stream_dedup").orderBy(col("event_type"))
+    runToMemory(agg, "graft_stream_dedup").orderBy(col("event_type"))
   }
-
-  /** Deterministic (sink, checkpoint) tmp locations keyed by query
-    * prefix + dataset dir + JVM pid — one rule for every file-sink
-    * streaming query. The dir's hash disambiguates paths whose
-    * sanitized forms collide (e.g. `/x/sf0.1` vs `/x/sf0_1`); the pid
-    * keeps a concurrent Verify/test pair on the same data dir from
-    * racing on overwrite/delete of shared sink and checkpoint files. */
-  private def streamPaths(prefix: String, dir: String): (String, String) = {
-    val safe =
-      dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + Integer.toHexString(dir.hashCode) +
-        "_" + ProcessHandle.current().pid()
-    (s"${sys.props("java.io.tmpdir")}/$prefix$safe",
-      s"${sys.props("java.io.tmpdir")}/${prefix}_ckpt$safe")
-  }
-
-  /** Bounded-state dedup sink/checkpoint locations (wiped per call). */
-  private[graft] def dedupBoundedPaths(dir: String): (String, String) =
-    streamPaths("graft_stream_dedup_wm", dir)
 
   /** The streaming dedup: the event stream, watermarked, deduplicated
     * by (event_id, event_type) with WATERMARK-BOUNDED state. Exposed
@@ -242,24 +264,11 @@ object Streams {
     * reside on the driver), then the per-type rollup runs as a batch
     * query over the committed files — the same two-stage shape as
     * [[streamJoin]]. */
-  def streamDedupBounded(spark: SparkSession, dir: String): DataFrame = {
-    val (out, ckpt) = dedupBoundedPaths(dir)
-    deleteRecursively(new java.io.File(out))
-    deleteRecursively(new java.io.File(ckpt))
-    val q = graft.GraftSession.withStreamParallelism(spark) {
-      dedupBoundedStream(spark, dir).writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    try q.awaitTermination() finally q.stop()
-    spark.read.parquet(out)
+  def streamDedupBounded(spark: SparkSession, dir: String): DataFrame =
+    runToFiles(dedupBoundedStream(spark, dir), "graft_stream_dedup_wm", dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_events"))
       .orderBy(col("event_type"))
-  }
 
   /** SLIDING event-time windows (2-hour width, 1-hour slide) as a
     * stream — each event contributes to two overlapping windows, the
@@ -277,7 +286,7 @@ object Streams {
       .withWatermark("ts", "2 hours")
       .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    runToMemory(spark, agg, "graft_stream_sliding")
+    runToMemory(agg, "graft_stream_sliding")
       .select(col("window.start").cast("timestamp_ntz").as("win_start"),
         col("event_type"), col("n_events"), col("sum_value"))
       .orderBy(col("win_start"), col("event_type"))
@@ -295,7 +304,7 @@ object Streams {
       .agg(count(lit(1)).as("n_events"))
       .orderBy(col("n_events").desc, col("user_id"))
       .limit(10)
-    runToMemory(spark, agg, "graft_stream_topk")
+    runToMemory(agg, "graft_stream_topk")
       .orderBy(col("n_events").desc, col("user_id"))
   }
 
@@ -315,7 +324,7 @@ object Streams {
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    runToMemory(spark, agg, "graft_stream_sessions")
+    runToMemory(agg, "graft_stream_sessions")
       .select(col("user_id"),
         col("session_window.start").cast("timestamp_ntz").as("session_start"),
         col("session_window.end").cast("timestamp_ntz").as("session_end"),
@@ -341,7 +350,7 @@ object Streams {
       .join(broadcast(dim), col("nkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"), dsum(col("value")).as("sum_value"))
-    runToMemory(spark, agg, "graft_stream_static").orderBy(col("n_name"))
+    runToMemory(agg, "graft_stream_static").orderBy(col("n_name"))
   }
 
   /** Sessionization through the custom-state API
@@ -430,42 +439,6 @@ object Streams {
       .orderBy(col("user_id"), col("session_start"))
   }
 
-  /** Deterministic file-sink + checkpoint locations keyed by dataset
-    * dir (the roundtrip-tmp-path convention): wiped at the start of
-    * each call so Bench reruns price the full computation and never
-    * resume a previous run's checkpoint. */
-  private[graft] def streamJoinPaths(dir: String): (String, String) =
-    streamPaths("graft_stream_join", dir)
-
-  /** Progress profiles of [[streamJoin]]/[[streamOuterJoin]] runs,
-    * KEYED BY QUERY KIND: (micro-batches executed, max state rows
-    * across batches, total ms inside micro-batch execution). Captured
-    * from StreamingQueryProgress so the overhead audit can separate
-    * plan cost (state explosion, extra batches) from fixed Spark
-    * machinery (checkpoint WAL, sink commit log, no-data watermark
-    * batch). Keyed by (kind, dataset dir) — the full identity of a
-    * run — so two concurrent stream-join queries in one JVM (parallel
-    * suites, a future parallel bench, even two SAME-KIND joins over
-    * different dirs) cannot clobber each other's profile, and a
-    * reader always knows which run a profile belongs to. */
-  private val joinProfiles =
-    new java.util.concurrent.ConcurrentHashMap[String, (Int, Long, Long)]()
-
-  /** The recorded profile for `kind` ("join" | "ojoin") over dataset
-    * `dir`; zeros if that query has not run in this JVM. */
-  private[graft] def joinProfile(kind: String, dir: String): (Int, Long, Long) =
-    joinProfiles.getOrDefault(s"$kind|$dir", (0, 0L, 0L))
-
-  private def captureJoinProfile(kind: String, dir: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val ps = q.recentProgress
-    val stateRows = ps.flatMap(_.stateOperators.map(_.numRowsTotal))
-      .foldLeft(0L)(math.max)
-    val totalMs = ps.map(p => Option(p.durationMs.get("triggerExecution"))
-      .map(_.longValue).getOrElse(0L)).sum
-    joinProfiles.put(s"$kind|$dir", (ps.length, stateRows, totalMs))
-  }
-
   /** Streaming LATEST-STATE materialized view — q135's golden record
     * kept continuously current over the event stream: every per-field
     * latest-wins max(struct) argmax is a mergeable aggregate, so the
@@ -486,11 +459,8 @@ object Streams {
         max(when(col("event_type") === "signup", col("ts")))
           .cast("timestamp_ntz").as("last_signup_ts"),
         count(lit(1)).as("n_events"))
-    runToMemory(spark, agg, "graft_stream_golden").orderBy(col("user_id"))
+    runToMemory(agg, "graft_stream_golden").orderBy(col("user_id"))
   }
-
-  private[graft] def streamOuterJoinPaths(dir: String): (String, String) =
-    streamPaths("graft_stream_ojoin", dir)
 
   /** Stream-stream LEFT OUTER join with event-time bounds — the
     * capability inner joins can't cover: clicks that NEVER convert
@@ -525,19 +495,7 @@ object Streams {
               buy_ts >= click_ts AND
               buy_ts <= click_ts + interval 4 hours"""),
       "left_outer")
-    val (out, ckpt) = streamOuterJoinPaths(dir)
-    deleteRecursively(new java.io.File(out))
-    deleteRecursively(new java.io.File(ckpt))
-    val q = graft.GraftSession.withStreamParallelism(spark) {
-      joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    try q.awaitTermination() finally { captureJoinProfile("ojoin", dir, q); q.stop() }
-    spark.read.parquet(out)
+    runToFiles(joined, "graft_stream_ojoin", dir)
       .groupBy(col("click_user").as("user_id"))
       .agg(count(lit(1)).as("n_emitted"),
         count(col("value")).as("n_matched"),
@@ -578,19 +536,7 @@ object Streams {
       expr("""click_user = buy_user AND
               buy_ts >= click_ts AND
               buy_ts <= click_ts + interval 4 hours"""))
-    val (out, ckpt) = streamJoinPaths(dir)
-    deleteRecursively(new java.io.File(out))
-    deleteRecursively(new java.io.File(ckpt))
-    val q = graft.GraftSession.withStreamParallelism(spark) {
-      joined.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-    }
-    try q.awaitTermination() finally { captureJoinProfile("join", dir, q); q.stop() }
-    spark.read.parquet(out)
+    runToFiles(joined, "graft_stream_join", dir)
       .groupBy(col("click_user").as("user_id"))
       .agg(count(lit(1)).as("n_attributed"), dsum(col("value")).as("sum_value"))
       .orderBy(col("user_id"))
@@ -616,23 +562,15 @@ object Streams {
     val src = eventsStream(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"))
     var batches = 0L
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
+    runBounded(src, "graft_stream_fanout", ckpt, stateful = false)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         batch.persist()
         try {
           batch.write.mode("overwrite").parquet(s"$parquetPath/batch_id=$batchId")
           batch.write.mode("overwrite").json(s"$jsonPath/batch_id=$batchId")
           batches += 1
         } finally { batch.unpersist(); () }
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      // NOT withStreamParallelism: this query is STATELESS (no state
-      // stores to commit per batch) and its per-batch work is batch
-      // writes that want the session's full parallelism
-      .start()
-    try q.awaitTermination() finally q.stop()
+      })
     batches
   }
 
@@ -659,21 +597,14 @@ object Streams {
     * in-place row-level merge, but the MERGE JOIN ITSELF (the
     * expensive part) is identical. */
   def streamMerge(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_stream_merge${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
-    val srcDir = s"$base/src"
+    val base = freshTmp("graft_stream_merge", dir)
     val stateDir = s"$base/state"
     val dec = org.apache.spark.sql.types.DecimalType(28, 2)
-    events(spark, dir).select(col("event_id"), col("user_id"), col("value"))
-      .repartition(4).write.mode("overwrite").parquet(srcDir)
-    val schema = spark.read.parquet(srcDir).schema
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
+    val stream = splitStream(
+      events(spark, dir).select(col("event_id"), col("user_id"), col("value")), base)
     var version = -1L
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          batchId: Long) =>
+    runBounded(stream, "graft_stream_merge", s"$base/ckpt", stateful = false)(
+      _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val delta = batch
           .groupBy(col("user_id"))
           .agg(sum(d2(col("value"))).cast(dec).as("delta"),
@@ -692,14 +623,7 @@ object Streams {
                 + coalesce(col("dn"), lit(0L))).as("n_events"))
         merged.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
         version = batchId
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.AvailableNow())
-      // NOT withStreamParallelism: stateless foreachBatch — the
-      // per-batch full-outer MERGE joins are batch jobs that want the
-      // session's full parallelism (measured 1.9× slower throttled)
-      .start()
-    try q.awaitTermination() finally q.stop()
+      })
     require(version >= 3, s"expected >=4 micro-batches, last id $version")
     spark.read.parquet(s"$stateDir/v=$version")
       .select(col("user_id"), col("balance").cast("double").as("balance"),
@@ -795,11 +719,11 @@ object Streams {
     }
   }
 
-  /** Run `body` (a transformWithState query) under the RocksDB state
-    * store provider — the TWS API requirement — with CHANGELOG
-    * CHECKPOINTING on, restoring both conf keys after. One definition
-    * for the four TWS gates (q198/q199/q228/q271), replacing four
-    * inlined set/restore blocks.
+  /** Run the transformWithState query `plan` to the append-mode memory
+    * sink as run `name`, under the RocksDB state store provider — the
+    * TWS API requirement — with CHANGELOG CHECKPOINTING on, restoring
+    * both conf keys after. One definition for the four TWS gates
+    * (q198/q199/q228/q271); returns the sink's result view.
     *
     * Changelog checkpointing (optimization r17, guide §5): the default
     * RocksDB commit uploads a FULL snapshot zip of every store
@@ -811,7 +735,8 @@ object Streams {
     * on the real filesystem; replay = snapshot + changelogs). The flag
     * is tied to the checkpoint's lifetime — every gate/bench run
     * starts from a fresh checkpoint, so re-runs stay comparable. */
-  private def withTwsStateStore[T](spark: SparkSession)(body: => T): T = {
+  private def runTws(spark: SparkSession, name: String)(
+      plan: => DataFrame): DataFrame = {
     val keys = Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -819,7 +744,7 @@ object Streams {
         "true")
     val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
     keys.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally prev.foreach {
+    try runToMemory(plan, name, "append") finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
@@ -833,38 +758,18 @@ object Streams {
   def streamEventLog(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_tws_log${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
-    events(spark, dir)
-      .select(col("user_id"),
-        (d2(col("value")) * 100).cast("long").as("cents"))
-      .repartition(4).write.mode("overwrite").parquet(s"$base/src")
-    val schema = spark.read.parquet(s"$base/src").schema
-    withTwsStateStore(spark) {
-      val out = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-        .as[TwsListIn]
-        .groupByKey(_.user_id)
-        .transformWithState(new EventLogProc, TimeMode.None(),
-          OutputMode.Append())
-      val name = "graft_tws_log"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = graft.GraftSession.withStreamParallelism(spark) {
-        out.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(col("n")).as("n_events"),
-          min(col("min_cents")).as("min_cents"),
-          max(col("max_cents")).as("max_cents"))
-        .orderBy(col("user_id"))
-    }
+    val src = splitStream(events(spark, dir).select(col("user_id"),
+      (d2(col("value")) * 100).cast("long").as("cents")),
+      freshTmp("graft_tws_log", dir))
+    runTws(spark, "graft_tws_log") {
+      src.as[TwsListIn].groupByKey(_.user_id)
+        .transformWithState(new EventLogProc, TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.groupBy(col("user_id"))
+      .agg(max(col("n")).as("n_events"),
+        min(col("min_cents")).as("min_cents"),
+        max(col("max_cents")).as("max_cents"))
+      .orderBy(col("user_id"))
   }
 
   /** STREAMING DISTINCT-TYPE COUNT via transformWithState MapState —
@@ -876,34 +781,15 @@ object Streams {
   def streamDistinctTypes(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_tws_types${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
-    events(spark, dir).select(col("user_id"), col("event_type"))
-      .repartition(4).write.mode("overwrite").parquet(s"$base/src")
-    val schema = spark.read.parquet(s"$base/src").schema
-    withTwsStateStore(spark) {
-      val out = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-        .as[TwsTypeIn]
-        .groupByKey(_.user_id)
-        .transformWithState(new DistinctTypesProc, TimeMode.None(),
-          OutputMode.Append())
-      val name = "graft_tws_types"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = graft.GraftSession.withStreamParallelism(spark) {
-        out.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(col("n_distinct_types")).as("n_distinct_types"))
-        .orderBy(col("user_id"))
-    }
+    val src = splitStream(events(spark, dir).select(col("user_id"), col("event_type")),
+      freshTmp("graft_tws_types", dir))
+    runTws(spark, "graft_tws_types") {
+      src.as[TwsTypeIn].groupByKey(_.user_id)
+        .transformWithState(new DistinctTypesProc, TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.groupBy(col("user_id"))
+      .agg(max(col("n_distinct_types")).as("n_distinct_types"))
+      .orderBy(col("user_id"))
   }
 
   case class TwsTimerIn(user_id: Long, ts: java.sql.Timestamp, us: Long)
@@ -962,33 +848,21 @@ object Streams {
   def streamTimerFlush(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_tws_timer${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
+    val src = s"${freshTmp("graft_tws_timer", dir)}/src"
     events(spark, dir)
       .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
         expr("unix_micros(cast(ts as timestamp))").as("us"))
-      .write.mode("overwrite").parquet(s"$base/src")
-    val schema = spark.read.parquet(s"$base/src").schema
-    withTwsStateStore(spark) {
-      val out = spark.readStream.schema(schema).parquet(s"$base/src")
+      .write.mode("overwrite").parquet(src)
+    val schema = spark.read.parquet(src).schema
+    runTws(spark, "graft_tws_timer") {
+      spark.readStream.schema(schema).parquet(src)
         .withWatermark("ts", "1 hour")
         .as[TwsTimerIn]
         .groupByKey(_.user_id)
         .transformWithState(new QuietUserProc, TimeMode.EventTime(),
           OutputMode.Append())
-      val name = "graft_tws_timer"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = graft.GraftSession.withStreamParallelism(spark) {
-        out.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.awaitTermination() finally q.stop()
-      spark.table(name).orderBy(col("user_id"))
-    }
+        .toDF()
+    }.orderBy(col("user_id"))
   }
 
   /** STREAMING SOURCE SKETCH — q275's per-source MinHash signature
@@ -1004,16 +878,9 @@ object Streams {
     * the corpus. == the per-source signature the batch q275 oracle
     * machinery computes (one oracle rule, two execution modes). */
   def streamSourceSketch(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_src_sketch${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
-    spark.read.parquet(s"$dir/documents.parquet")
-      .select(col("doc_id"), col("source"), col("text"))
-      .repartition(4).write.mode("overwrite").parquet(s"$base/src")
-    val schema = spark.read.parquet(s"$base/src").schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-    val agg = src
+    val agg = splitStream(spark.read.parquet(s"$dir/documents.parquet")
+        .select(col("doc_id"), col("source"), col("text")),
+        freshTmp("graft_src_sketch", dir))
       .select(col("source"),
         call_function("minhash_sig",
           graft.dedup.Dedup.shingleHashes(col("text"), mod = true)).as("sig"))
@@ -1022,7 +889,7 @@ object Streams {
         count(lit(1)).as("n_docs"))
       .select(col("source"), col("n_docs"),
         concat_ws(",", col("ssig").cast("array<string>")).as("source_sig"))
-    runToMemory(spark, agg, "graft_stream_src_sketch").orderBy(col("source"))
+    runToMemory(agg, "graft_stream_src_sketch").orderBy(col("source"))
   }
 
   // ---------------------------------------------------------------
@@ -1052,40 +919,50 @@ object Streams {
     * BATCHES are shifted one forward instead, see lshPairsTtlStream). */
   private val CanaryShift = 1000000000L
 
-  /** Staging/sink root for one streaming-dedup run — pid-keyed so
-    * concurrent Verify/test JVMs never contend on the dir. */
-  private def dedupBase(prefix: String, dir: String): String = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    s"${sys.props("java.io.tmpdir")}/$prefix${safe}_${ProcessHandle.current().pid()}"
+  /** Stream the parquet files under `src` back one file per
+    * micro-batch, oldest mtime first. */
+  private def fileStream(spark: SparkSession, src: String): DataFrame =
+    spark.readStream.schema(spark.read.parquet(src).schema)
+      .option("maxFilesPerTrigger", "1").parquet(src)
+
+  /** Stage `df` as a 4-file parquet split under `base/src` and stream it
+    * back with maxFilesPerTrigger=1, so a stateful run genuinely
+    * carries state across four micro-batches instead of one degenerate
+    * batch (q188/q198/q199/q228/q278). */
+  private def splitStream(df: DataFrame, base: String): DataFrame = {
+    df.repartition(4).write.mode("overwrite").parquet(s"$base/src")
+    fileStream(df.sparkSession, s"$base/src")
   }
 
-  /** Stage `df` (carrying an int `batch` column in 0 until n) as ONE
-    * parquet file per batch under `base/src`, mtimes forced ascending:
-    * the file source (maxFilesPerTrigger=1) processes oldest-first, so
+  /** Stage `df` (carrying an int `batch` column in 0 until 4) as ONE
+    * parquet file per batch under a wiped `base/src`, mtimes forced
+    * ascending, and stream it back: the file source
+    * (maxFilesPerTrigger=1) processes oldest-first, so
     * micro-batch k carries exactly the rows stamped batch k and the
     * TTL gates' watermark sequence is deterministic (wm during batch k
     * = batch k−1's event time − horizon). The source expression is
     * rendered ONCE to `base/all` and the batch files are cut from that
-    * parquet — n filtered writes off a generator would re-run the
+    * parquet — 4 filtered writes off a generator would re-run the
     * whole render/encode pipeline per batch file. setLastModified's
     * boolean IS checked (ADVICE r12): on a filesystem where the stamp
     * fails, batch order would silently fall back to move-time mtimes
     * and the deterministic watermark sequence the TTL oracles depend
     * on would be gone — fail fast instead of emitting a wrong row set. */
   private def stageOrderedBatches(spark: SparkSession, df: DataFrame,
-      base: String, n: Int): String = {
+      base: String): DataFrame = {
+    FileUtils.deleteQuietly(new java.io.File(base)): Unit
     df.write.mode("overwrite").parquet(s"$base/all")
     val staged = spark.read.parquet(s"$base/all")
     new java.io.File(s"$base/src").mkdirs(): Unit
     val mtime0 = new java.io.File(base).lastModified()
-    // the n batch cuts are independent single-file jobs off the same
+    // the batch cuts are independent single-file jobs off the same
     // staged parquet — run them concurrently so each cut's single
     // coalesce(1) task back-fills the others' scheduling gaps
     // (optimization r16, guide §2.6); the deterministic ascending
     // mtime stamps still happen per batch file after ITS move, so the
     // oldest-first processing order the TTL oracles depend on is
     // unchanged.
-    graft.util.Concurrency.awaitSettled((0 until n).map { k => () => {
+    graft.util.Concurrency.awaitSettled((0 until 4).map { k => () => {
       val stage = s"$base/stage$k"
       staged.filter(col("batch") === k)
         .coalesce(1).write.mode("overwrite").parquet(stage)
@@ -1097,7 +974,7 @@ object Streams {
       require(dst.setLastModified(mtime0 + k * 60000L),
         s"cannot stamp mtime for batch $k")
     }})
-    s"$base/src"
+    fileStream(spark, s"$base/src")
   }
 
   /** THE one stateful pairing core behind every streaming near-dup
@@ -1164,6 +1041,25 @@ object Streams {
       }
   }
 
+  /** The in-stream MinHash verdict (q31's verify rule): the
+    * signature-overlap estimate, emitted as an ordered pair at ≥ 0.5. */
+  private def minhashEstimate(id: Long, sg: Array[Long], pid: Long,
+      psg: Array[Long]): Option[(Long, Long, Double)] = {
+    val K = graft.dedup.Dedup.K
+    var eq = 0; var i = 0
+    while (i < K) { if (sg(i) == psg(i)) eq += 1; i += 1 }
+    val est = eq.toDouble / K
+    if (est >= 0.5) Some((math.min(pid, id), math.max(pid, id), est)) else None
+  }
+
+  /** The in-stream perceptual verdict (q357/q362's radius): Hamming
+    * distance ≤ 3 between two 64-bit hashes, as an ordered pair. */
+  private def hamming3(id: Long, h: Long, pid: Long,
+      ph: Long): Option[(Long, Long, Int)] = {
+    val d = java.lang.Long.bitCount(h ^ ph)
+    if (d <= 3) Some((math.min(pid, id), math.max(pid, id), d)) else None
+  }
+
   /** The text-LSH streaming detector behind q319/q338/q371, returned
     * UN-STARTED so the spec can drive it and read the state-operator
     * expiry metrics. Documents are stamped with event time T0 +
@@ -1181,9 +1077,6 @@ object Streams {
       base: String, horizon: String,
       plantCanaries: Boolean = false): DataFrame = {
     import spark.implicits._
-    val K = graft.dedup.Dedup.K
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
     val docs = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id"), col("text"))
       .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int"))
@@ -1194,16 +1087,12 @@ object Streams {
             concat(col("text"), lit(" canaryx")).as("text"),
             pmod(col("doc_id") + 1, lit(4)).cast("int").as("batch"))
           .filter((col("doc_id") - CanaryShift) % 97 === 0))
-    val srcDir = stageOrderedBatches(spark,
-      stamped.withColumn("ts",
-        expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")), base, 4)
-    val schema = spark.read.parquet(srcDir).schema
     // the watermark-tagged ts attribute itself must flow through every
     // projection into the stateful operator (a derived copy would fail
     // the event-time-timeout analysis check)
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withWatermark("ts", horizon)
+    val src = stageOrderedBatches(spark,
+      stamped.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
+      base).withWatermark("ts", horizon)
     val sigs = src.select(col("doc_id"),
       call_function("minhash_sig",
         graft.dedup.Dedup.shingleHashes(col("text"), mod = true)).as("sig"),
@@ -1212,126 +1101,96 @@ object Streams {
       .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
         col("doc_id"), col("sig"), col("ts"))
       .as[(String, Long, Array[Long], java.sql.Timestamp)]
-    ttlPairs[Array[Long], (Long, Long, Double)](banded, (id, sg, pid, psg) => {
-      var eq = 0; var i = 0
-      while (i < K) { if (sg(i) == psg(i)) eq += 1; i += 1 }
-      val est = eq.toDouble / K
-      if (est >= 0.5) Some((math.min(pid, id), math.max(pid, id), est))
-      else None
-    }).toDF("doc_a", "doc_b", "est_jaccard")
+    ttlPairs[Array[Long], (Long, Long, Double)](banded, minhashEstimate)
+      .toDF("doc_a", "doc_b", "est_jaccard")
   }
 
-  /** The perceptual-image streaming detector behind q366/q369 — the
-    * media twin of [[lshPairsTtlStream]]: generated scene payloads are
-    * rendered ONCE to a staging table, cut into 4 mtime-ordered batch
-    * files (batch = doc_id mod 4), decoded + 8×8-aHashed executor-side
-    * per micro-batch (the [[graft.multimodal.Multimodal]] batch
-    * kernels verbatim — stateless typed mapPartitions, legal on a
-    * streaming Dataset), fanned into the 4×16-bit pigeonhole bands,
-    * and paired by [[ttlPairs]] (Hamming distance ≤ 3). Event time is
-    * re-derived from doc_id AFTER the typed hash map — aHash's kernel
-    * contract stays payload-only, and a watermark declared before a
-    * projection that drops its column would not reach the stateful
-    * operator. Payload bytes never enter state — only (doc_id, hash,
-    * ts), 24 bytes per resident, survives the decode. */
-  private[graft] def imagePairsTtlStream(spark: SparkSession, dir: String,
-      base: String, horizon: String): DataFrame = {
-    import spark.implicits._
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
-    val srcDir = stageOrderedBatches(spark,
-      graft.multimodal.Multimodal.generatedMedia(spark, dir).toDF()
-        .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")),
-      base, 4)
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val hashed = graft.multimodal.Multimodal
-      .aHash(src.select(col("doc_id"), col("payload"), col("format"),
-        col("width"), col("height"))
-        .as[graft.multimodal.Multimodal.MediaRecord]).toDF()
-      .withColumn("ts",
-        expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
-      .withWatermark("ts", horizon)
-    val banded = hashed
-      .select(col("doc_id"), col("ahash"), col("ts"),
-        explode(graft.functions.Banding.hashBands(col("ahash"), 4, 16)).as("bk"))
-      .select(concat_ws("|", col("bk.band"), col("bk.bkey")).as("bucket"),
-        col("doc_id"), col("ahash"), col("ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-    ttlPairs[Long, (Long, Long, Int)](banded, (id, h, pid, ph) => {
-      val d = java.lang.Long.bitCount(h ^ ph)
-      if (d <= 3) Some((math.min(pid, id), math.max(pid, id), d)) else None
-    }).toDF("doc_a", "doc_b", "dist")
-  }
+  /** A perceptual-hash column: how doc ids render to payload rows, how
+    * a streamed payload frame decodes (executor-side, the batch kernels
+    * verbatim — stateless typed mapPartitions, legal on a streaming
+    * Dataset) to `doc_id` + the 64-bit hash column `hashCol`, which is
+    * also that column's name in the persisted band index. */
+  private[graft] case class HashKernel(render: DataFrame => DataFrame,
+      decode: DataFrame => DataFrame, hashCol: String)
 
-  /** The INDEX-SEEDED streaming image detector — the streaming twin
-    * of the q380 persisted-index probe (VERDICT r15 #6). The old
-    * liability: a (re)started stream begins with EMPTY band-bucket
-    * state, so near-dups of already-ingested corpus docs go
-    * undetected unless the whole corpus is replayed through the
-    * stream — re-paying every corpus render/decode into state on
-    * every restart. Here the corpus side is
-    * [[graft.multimodal.Multimodal.saveImageIndex]]'s parquet, joined
-    * STREAM-STATIC per micro-batch on (band, bkey) — stateless, so
-    * there is nothing to lose on restart and the corpus is never
-    * re-rendered — while within-stream duplicates keep flowing
-    * through the [[ttlPairs]] watermark-bounded state core. The
-    * stream carries only the delta slice (the shared doc_id % 10 == 0
-    * rule). Cross-band duplicate emissions collapse in the caller's
-    * final distinct (the ttlPairs convention). */
-  private[graft] def imagePairsTtlStreamIndexed(spark: SparkSession,
-      dir: String, base: String, horizon: String,
-      indexDir: String): DataFrame = {
+  private[graft] val ImageKernel = HashKernel(
+    ids => graft.multimodal.Multimodal.generatedMediaOf(ids).toDF(),
+    src => graft.multimodal.Multimodal.aHash(src
+      .select(col("doc_id"), col("payload"), col("format"), col("width"),
+        col("height"))
+      .as(Encoders.product[graft.multimodal.Multimodal.MediaRecord])).toDF(),
+    "ahash")
+
+  private[graft] val AudioKernel = HashKernel(
+    ids => graft.multimodal.Audio.generatedAudioOf(ids).toDF(),
+    src => graft.multimodal.Audio.fpOf(src
+      .select(col("doc_id"), col("payload"), col("format"))
+      .as(Encoders.product[graft.multimodal.Audio.AudioRecord])).toDF(),
+    "fp")
+
+  /** THE Hamming-banded streaming detector behind the image (q366/q369,
+    * q384) and audio (q386) gates — the media twin of
+    * [[lshPairsTtlStream]]. The `ids` docs are rendered ONCE to a
+    * staging table, cut into 4 mtime-ordered batch files (batch =
+    * doc_id mod 4), decoded + hashed per micro-batch by `kernel`,
+    * fanned into the 4×16-bit pigeonhole bands, and paired by
+    * [[ttlPairs]] at Hamming ≤ 3. Event time is re-derived from doc_id
+    * AFTER the decode — the kernel contract stays payload-only, and a
+    * watermark declared before a projection that drops its column
+    * would not reach the stateful operator. Payload bytes never enter
+    * state — only (doc_id, hash, ts), 24 bytes per resident.
+    *
+    * INDEX-SEEDED when `indexDir` is given (the streaming twin of the
+    * q380 persisted-index probe, VERDICT r15 #6): a (re)started stream
+    * begins with EMPTY band-bucket state, so near-dups of
+    * already-ingested corpus docs would go undetected unless the whole
+    * corpus were replayed into state on every restart. Instead the
+    * corpus side is the persisted band index
+    * ([[graft.multimodal.Multimodal.saveImageIndex]],
+    * [[graft.multimodal.Audio.saveAudioIndex]]) joined STREAM-STATIC
+    * per micro-batch on (band, bkey) — stateless, so a restart loses
+    * nothing and the corpus is never re-rendered — while within-stream
+    * duplicates keep flowing through the state core; `ids` is then
+    * only the delta slice. Cross-band duplicate emissions collapse in
+    * the caller's final distinct (the ttlPairs convention). */
+  private[graft] def hammingPairsTtlStream(spark: SparkSession,
+      ids: DataFrame, kernel: HashKernel, base: String, horizon: String,
+      indexDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
-    val delta = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") % 10 === 0).select(col("doc_id"))
-    val srcDir = stageOrderedBatches(spark,
-      graft.multimodal.Multimodal.generatedMediaOf(delta).toDF()
-        .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")),
-      base, 4)
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val hashed = graft.multimodal.Multimodal
-      .aHash(src.select(col("doc_id"), col("payload"), col("format"),
-        col("width"), col("height"))
-        .as[graft.multimodal.Multimodal.MediaRecord]).toDF()
-      .withColumn("ts",
-        expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
+    val h = kernel.hashCol
+    val src = stageOrderedBatches(spark, kernel.render(ids)
+      .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")), base)
+    val fanned = kernel.decode(src)
+      .withColumn("ts", expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
       .withWatermark("ts", horizon)
-    val fanned = hashed
-      .select(col("doc_id"), col("ahash"), col("ts"),
-        explode(graft.functions.Banding.hashBands(col("ahash"), 4, 16))
-          .as("bk"))
-      .select(col("doc_id"), col("ahash"), col("ts"),
+      .select(col("doc_id"), col(h), col("ts"),
+        explode(graft.functions.Banding.hashBands(col(h), 4, 16)).as("bk"))
+      .select(col("doc_id"), col(h), col("ts"),
         col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    // corpus flags: stateless stream-static equi-join against the
-    // persisted index — band-keyed parquet, zero corpus decode
-    val ix = spark.read.parquet(s"$indexDir/bands")
-      .select(col("doc_id").as("c_doc"), col("ahash").as("c_hash"),
-        col("band"), col("bkey"))
-    val corpusHits = fanned.join(ix, Seq("band", "bkey"))
-      .withColumn("dist",
-        bit_count(col("ahash").bitwiseXOR(col("c_hash")))
-          .cast(org.apache.spark.sql.types.IntegerType))
-      .filter(col("dist") <= 3)
-      .select(least(col("doc_id"), col("c_doc")).as("doc_a"),
-        greatest(col("doc_id"), col("c_doc")).as("doc_b"), col("dist"))
     val banded = fanned
       .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
-        col("doc_id"), col("ahash"), col("ts"))
+        col("doc_id"), col(h), col("ts"))
       .as[(String, Long, Long, java.sql.Timestamp)]
-    val streamPairs = ttlPairs[Long, (Long, Long, Int)](banded,
-      (id, h, pid, ph) => {
-        val d = java.lang.Long.bitCount(h ^ ph)
-        if (d <= 3) Some((math.min(pid, id), math.max(pid, id), d))
-        else None
-      }).toDF("doc_a", "doc_b", "dist")
-    streamPairs.unionByName(corpusHits)
+    val streamPairs = ttlPairs[Long, (Long, Long, Int)](banded, hamming3)
+      .toDF("doc_a", "doc_b", "dist")
+    indexDir.fold(streamPairs) { ix =>
+      val corpus = spark.read.parquet(s"$ix/bands")
+        .select(col("doc_id").as("c_doc"), col(h).as("c_hash"),
+          col("band"), col("bkey"))
+      streamPairs.unionByName(fanned.join(corpus, Seq("band", "bkey"))
+        .withColumn("dist", bit_count(col(h).bitwiseXOR(col("c_hash")))
+          .cast(org.apache.spark.sql.types.IntegerType))
+        .filter(col("dist") <= 3)
+        .select(least(col("doc_id"), col("c_doc")).as("doc_a"),
+          greatest(col("doc_id"), col("c_doc")).as("doc_b"), col("dist")))
+    }
   }
+
+  /** The delta slice every index-seeded detector streams (the shared
+    * doc_id % 10 == 0 rule). */
+  private[graft] def deltaDocs(spark: SparkSession, dir: String): DataFrame =
+    spark.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") % 10 === 0)
 
   /** The INDEX-SEEDED streaming TEXT detector — q384's pattern carried
     * to the LSH column (VERDICT r16 #3): only the delta slice streams;
@@ -1350,20 +1209,12 @@ object Streams {
       dir: String, base: String, horizon: String,
       indexDir: String): DataFrame = {
     import spark.implicits._
-    val K = graft.dedup.Dedup.K
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
-    val delta = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") % 10 === 0)
+    val delta = deltaDocs(spark, dir)
       .select(col("doc_id"), col("text"))
       .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int"))
-    val srcDir = stageOrderedBatches(spark,
-      delta.withColumn("ts",
-        expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")), base, 4)
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withWatermark("ts", horizon)
+    val src = stageOrderedBatches(spark,
+      delta.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
+      base).withWatermark("ts", horizon)
     // O(batch) per micro-batch: shingle hashes (exact verify side) and
     // the MinHash signature, computed once per arriving doc
     val enriched = src.select(col("doc_id"), col("text"), col("ts"))
@@ -1395,76 +1246,21 @@ object Streams {
       .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
         col("doc_id"), col("sig"), col("ts"))
       .as[(String, Long, Array[Long], java.sql.Timestamp)]
-    val streamPairs = ttlPairs[Array[Long], (Long, Long, Double)](bucketed,
-      (id, sg, pid, psg) => {
-        var eq = 0; var i = 0
-        while (i < K) { if (sg(i) == psg(i)) eq += 1; i += 1 }
-        val est = eq.toDouble / K
-        if (est >= 0.5) Some((math.min(pid, id), math.max(pid, id), est))
-        else None
-      }).toDF("doc_a", "doc_b", "score")
-    streamPairs.unionByName(corpusHits)
+    ttlPairs[Array[Long], (Long, Long, Double)](bucketed, minhashEstimate)
+      .toDF("doc_a", "doc_b", "score")
+      .unionByName(corpusHits)
   }
 
-  /** The INDEX-SEEDED streaming AUDIO detector — the q384/q385 pattern
-    * completed across all three ingest columns: the corpus side is
-    * [[graft.multimodal.Audio.saveAudioIndex]]'s banded fingerprint
-    * parquet (stateless stream-static join, restart-proof); arriving
-    * clips run the REAL WAV decode→fingerprint kernel
-    * ([[graft.multimodal.Audio.fpOf]] — the batch kernel verbatim,
-    * stateless typed map per micro-batch); within-stream duplicates
-    * pair through [[ttlPairs]] at Hamming ≤ 3. */
-  private[graft] def audioPairsTtlStreamIndexed(spark: SparkSession,
-      dir: String, base: String, horizon: String,
-      indexDir: String): DataFrame = {
-    import spark.implicits._
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
-    val delta = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") % 10 === 0).select(col("doc_id"))
-    val srcDir = stageOrderedBatches(spark,
-      graft.multimodal.Audio.generatedAudioOf(delta).toDF()
-        .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")),
-      base, 4)
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val fped = graft.multimodal.Audio.fpOf(
-        src.select(col("doc_id"), col("payload"), col("format"))
-          .as[graft.multimodal.Audio.AudioRecord]).toDF()
-      .withColumn("ts",
-        expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
-      .withWatermark("ts", horizon)
-    // the same 4×16 fan-out as Audio.fpBandsOf, with the watermark-
-    // tagged ts column riding along (a projection that dropped it
-    // would fail the event-time-timeout analysis check)
-    val fanned = fped
-      .select(col("doc_id"), col("fp"), col("ts"),
-        explode(graft.functions.Banding.hashBands(col("fp"), 4, 16))
-          .as("bk"))
-      .select(col("doc_id"), col("fp"), col("ts"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val ixb = spark.read.parquet(s"$indexDir/bands")
-      .select(col("doc_id").as("c_doc"), col("fp").as("c_fp"),
-        col("band"), col("bkey"))
-    val corpusHits = fanned.join(ixb, Seq("band", "bkey"))
-      .withColumn("dist",
-        bit_count(col("fp").bitwiseXOR(col("c_fp")))
-          .cast(org.apache.spark.sql.types.IntegerType))
-      .filter(col("dist") <= 3)
-      .select(least(col("doc_id"), col("c_doc")).as("doc_a"),
-        greatest(col("doc_id"), col("c_doc")).as("doc_b"), col("dist"))
-    val bucketed = fanned
-      .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
-        col("doc_id"), col("fp"), col("ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-    val streamPairs = ttlPairs[Long, (Long, Long, Int)](bucketed,
-      (id, h, pid, ph) => {
-        val d = java.lang.Long.bitCount(h ^ ph)
-        if (d <= 3) Some((math.min(pid, id), math.max(pid, id), d))
-        else None
-      }).toDF("doc_a", "doc_b", "dist")
-    streamPairs.unionByName(corpusHits)
+  /** Run one streaming near-dup detector — staged (by
+    * [[stageOrderedBatches]], which wipes it first) under the tmp root
+    * of run `name`, which it receives — through the append-mode memory
+    * sink, and collapse its cross-band duplicate emissions. The staging
+    * root is deleted after the run: the pairs live in the memory sink. */
+  private def detectPairs(spark: SparkSession, dir: String, name: String)(
+      detector: String => DataFrame): DataFrame = {
+    val base = tmpPath(name, dir)
+    try runToMemory(detector(base), name, "append").distinct()
+    finally FileUtils.deleteQuietly(new java.io.File(base)): Unit
   }
 
   /** q338 — STREAMING CANARY CHECK: q335's planted-duplicate
@@ -1478,23 +1274,18 @@ object Streams {
     * batch and streaming canary checks must agree exactly, because
     * under [[ReplayHorizon]] the streaming pair set equals q31's. */
   def streamCanaries(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_stream_canary", dir)
-    try {
-      val pairs = lshPairsTtlStream(spark, dir, base, ReplayHorizon,
-        plantCanaries = true)
-      val det = runToMemoryAppend(spark, pairs, "graft_stream_canary")
-        .distinct()
-        .filter(col("doc_a") % 97 === 0 &&
-          col("doc_b") === col("doc_a") + CanaryShift)
-        .agg(count(lit(1)).as("n_detected"))
-      spark.read.parquet(s"$dir/documents.parquet")
-        .filter(col("doc_id") % 97 === 0)
-        .agg(count(lit(1)).as("n_planted"))
-        .crossJoin(broadcast(det))
-        .withColumn("detection_rate",
-          col("n_detected").cast(org.apache.spark.sql.types.DoubleType) /
-            col("n_planted"))
-    } finally deleteRecursively(new java.io.File(base))
+    val det = detectPairs(spark, dir, "graft_stream_canary")(
+        lshPairsTtlStream(spark, dir, _, ReplayHorizon, plantCanaries = true))
+      .filter(col("doc_a") % 97 === 0 &&
+        col("doc_b") === col("doc_a") + CanaryShift)
+      .agg(count(lit(1)).as("n_detected"))
+    spark.read.parquet(s"$dir/documents.parquet")
+      .filter(col("doc_id") % 97 === 0)
+      .agg(count(lit(1)).as("n_planted"))
+      .crossJoin(broadcast(det))
+      .withColumn("detection_rate",
+        col("n_detected").cast(org.apache.spark.sql.types.DoubleType) /
+          col("n_planted"))
   }
 
   /** q319 — STREAMING LSH NEAR-DUP DETECTION: the incremental twin of
@@ -1508,16 +1299,9 @@ object Streams {
     * two forms can never fork. The same code deployed on a continuous
     * stream is state-bounded at one horizon per bucket; the
     * watermark-tight twin whose gate PROVES eviction is q371. */
-  def streamLshDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_lsh_dedup", dir)
-    try {
-      runToMemoryAppend(spark,
-          lshPairsTtlStream(spark, dir, base, ReplayHorizon),
-          "graft_stream_lsh_dedup")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
-  }
+  def streamLshDedup(spark: SparkSession, dir: String): DataFrame =
+    detectPairs(spark, dir, "graft_stream_lsh_dedup")(
+      lshPairsTtlStream(spark, dir, _, ReplayHorizon)).orderBy("doc_a", "doc_b")
 
   /** q371 — TTL-BOUNDED STREAMING LSH DEDUP: q319 under the tight
     * [[TtlHorizon]] — the r12 verdict's top item, closing the last
@@ -1531,19 +1315,12 @@ object Streams {
     * NoTimeout implementation fails this gate with q31's full set.
     * State bound: residents per band bucket ≤ one watermark window of
     * colliding signatures, independent of stream length. */
-  def streamLshDedupTtl(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_lsh_ttl", dir)
-    try {
-      runToMemoryAppend(spark,
-          lshPairsTtlStream(spark, dir, base, TtlHorizon),
-          "graft_stream_lsh_ttl")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
-  }
+  def streamLshDedupTtl(spark: SparkSession, dir: String): DataFrame =
+    detectPairs(spark, dir, "graft_stream_lsh_ttl")(
+      lshPairsTtlStream(spark, dir, _, TtlHorizon)).orderBy("doc_a", "doc_b")
 
   /** q366 — STREAMING PERCEPTUAL IMAGE DEDUP: q319's ingest-dedup
-    * shape applied to MEDIA via [[imagePairsTtlStream]]. Runs under
+    * shape applied to MEDIA via [[hammingPairsTtlStream]]. Runs under
     * [[ReplayHorizon]] — the gate is the can-never-fork contract: the
     * emitted pair set must equal batch q357's EXACTLY (oracle = q357's
     * string verbatim), so batching, state carry-over, and the banding
@@ -1552,21 +1329,15 @@ object Streams {
     * here with a replay-wide horizon, so a continuous deployment is
     * state-bounded; the watermark-tight twin whose gate PROVES
     * eviction is q369. */
-  def streamImageDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_img_dedup", dir)
-    try {
-      runToMemoryAppend(spark,
-          imagePairsTtlStream(spark, dir, base, ReplayHorizon),
-          "graft_stream_img_dedup")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
-  }
+  def streamImageDedup(spark: SparkSession, dir: String): DataFrame =
+    detectPairs(spark, dir, "graft_stream_img_dedup")(hammingPairsTtlStream(
+      spark, load(spark, dir, "documents"), ImageKernel, _, ReplayHorizon))
+      .orderBy("doc_a", "doc_b")
 
   /** q384 — INDEX-SEEDED STREAMING IMAGE DEDUP: the q380 persisted
     * index composed into the streaming detector
-    * ([[imagePairsTtlStreamIndexed]]). Only the DELTA slice (the
-    * shared doc_id % 10 == 0 rule) streams; near-dups of
+    * ([[hammingPairsTtlStream]], image kernel). Only the DELTA slice
+    * (the shared doc_id % 10 == 0 rule) streams; near-dups of
     * already-ingested corpus docs flag through the STATELESS
     * stream-static band join against `saveImageIndex`'s parquet — the
     * corpus is never rendered into the stream or carried in state, so
@@ -1579,16 +1350,11 @@ object Streams {
     * accidents are excluded by the same ≤ 3 radius argument as
     * q357's oracle. */
   def streamImageDedupIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_img_ixs", dir)
     val ix = graft.util.Scratch.indexDir("graft_img_ixs_index", dir)
     graft.multimodal.Multimodal.saveImageIndex(spark, dir, ix)
-    try {
-      runToMemoryAppend(spark,
-          imagePairsTtlStreamIndexed(spark, dir, base, ReplayHorizon, ix),
-          "graft_stream_img_ixs")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
+    detectPairs(spark, dir, "graft_stream_img_ixs")(hammingPairsTtlStream(
+      spark, deltaDocs(spark, dir), ImageKernel, _, ReplayHorizon, Some(ix)))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** q385 — INDEX-SEEDED STREAMING TEXT DEDUP: q384's restart-proof
@@ -1601,39 +1367,29 @@ object Streams {
     * restricted to both-delta endpoints — the two sets are disjoint
     * by construction and their union is exact. */
   def streamLshDedupIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_lsh_ixs", dir)
     val ix = graft.util.Scratch.indexDir("graft_lsh_ixs_index", dir)
     graft.dedup.Dedup.saveLshIndex(spark, dir, ix)
-    try {
-      runToMemoryAppend(spark,
-          lshPairsTtlStreamIndexed(spark, dir, base, ReplayHorizon, ix),
-          "graft_stream_lsh_ixs")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
+    detectPairs(spark, dir, "graft_stream_lsh_ixs")(
+      lshPairsTtlStreamIndexed(spark, dir, _, ReplayHorizon, ix))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** q386 — INDEX-SEEDED STREAMING AUDIO DEDUP: the pattern completed
     * across all three ingest columns (text q385, image q384, audio
-    * here) — [[audioPairsTtlStreamIndexed]] against `saveAudioIndex`'s
-    * parquet. Closed-form oracle: a delta doc pairs with each of its
-    * clip group's corpus members (group = doc div 4) at q362's planted
-    * distance — 1 when either side is the group base (variant 0), 2
-    * between re-encodes; within-stream planted pairs cannot exist
-    * (two multiples of 10 never share 4 consecutive ids), and
-    * cross-group fingerprints never pass Hamming ≤ 3 (q362's
+    * here) — [[hammingPairsTtlStream]], audio kernel, against
+    * `saveAudioIndex`'s parquet. Closed-form oracle: a delta doc pairs
+    * with each of its clip group's corpus members (group = doc div 4)
+    * at q362's planted distance — 1 when either side is the group
+    * base (variant 0), 2 between re-encodes; within-stream planted
+    * pairs cannot exist (two multiples of 10 never share 4 consecutive
+    * ids), and cross-group fingerprints never pass Hamming ≤ 3 (q362's
     * soundness argument). */
   def streamAudioDedupIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_aud_ixs", dir)
     val ix = graft.util.Scratch.indexDir("graft_aud_ixs_index", dir)
     graft.multimodal.Audio.saveAudioIndex(spark, dir, ix)
-    try {
-      runToMemoryAppend(spark,
-          audioPairsTtlStreamIndexed(spark, dir, base, ReplayHorizon, ix),
-          "graft_stream_aud_ixs")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
+    detectPairs(spark, dir, "graft_stream_aud_ixs")(hammingPairsTtlStream(
+      spark, deltaDocs(spark, dir), AudioKernel, _, ReplayHorizon, Some(ix)))
+      .orderBy("doc_a", "doc_b")
   }
 
   /** The index-seeded streaming SEMANTIC detector behind q389 —
@@ -1672,18 +1428,12 @@ object Streams {
       indexDir: String): DataFrame = {
     import spark.implicits._
     import graft.sim.Similarity
-    deleteRecursively(new java.io.File(base))
-    new java.io.File(base).mkdirs(): Unit
     val delta = Similarity.vecs(spark, dir)
       .filter(col("vec_id") % 10 === 0)
       .withColumn("batch", pmod(col("vec_id"), lit(4)).cast("int"))
-    val srcDir = stageOrderedBatches(spark,
-      delta.withColumn("ts",
-        expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")), base, 4)
-    val schema = spark.read.parquet(srcDir).schema
-    val src = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      .withWatermark("ts", horizon)
+    val src = stageOrderedBatches(spark,
+      delta.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
+      base).withWatermark("ts", horizon)
     // one-row static frame: the whole O(k) quantizer as an array,
     // sorted by cid for a deterministic (if semantically irrelevant)
     // layout
@@ -1746,15 +1496,9 @@ object Streams {
     * from the gate form so tools/ProbeAnn can time build and probe
     * separately (and at different k) without forking the detector. */
   private[graft] def probeSemanticStreamIndexed(spark: SparkSession,
-      dir: String, ix: String): DataFrame = {
-    val base = dedupBase("graft_sem_ixs", dir)
-    try {
-      runToMemoryAppend(spark,
-          semanticPairsStreamIndexed(spark, dir, base, ReplayHorizon, ix),
-          "graft_stream_sem_ixs")
-        .distinct()
-    } finally deleteRecursively(new java.io.File(base))
-  }
+      dir: String, ix: String): DataFrame =
+    detectPairs(spark, dir, "graft_stream_sem_ixs")(
+      semanticPairsStreamIndexed(spark, dir, _, ReplayHorizon, ix))
 
   /** q369 — TTL-BOUNDED STREAMING PERCEPTUAL DEDUP: q366 under the
     * tight [[TtlHorizon]]. The gate proves both directions against a
@@ -1766,16 +1510,10 @@ object Streams {
     * sf0.001. State bound: residents per bucket ≤ one watermark window
     * of colliding hashes (~3 batches here), 24 bytes each, independent
     * of stream length. */
-  def streamImageDedupTtl(spark: SparkSession, dir: String): DataFrame = {
-    val base = dedupBase("graft_img_ttl", dir)
-    try {
-      runToMemoryAppend(spark,
-          imagePairsTtlStream(spark, dir, base, TtlHorizon),
-          "graft_stream_img_ttl")
-        .distinct()
-        .orderBy(col("doc_a"), col("doc_b"))
-    } finally deleteRecursively(new java.io.File(base))
-  }
+  def streamImageDedupTtl(spark: SparkSession, dir: String): DataFrame =
+    detectPairs(spark, dir, "graft_stream_img_ttl")(hammingPairsTtlStream(
+      spark, load(spark, dir, "documents"), ImageKernel, _, TtlHorizon))
+      .orderBy("doc_a", "doc_b")
 
   /** STREAMING RUNNING TOTALS via `transformWithState` — the third
     * implementation of the per-user balance/count semantics, gated on
@@ -1792,57 +1530,23 @@ object Streams {
   def streamRunningTotals(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val base = s"${sys.props("java.io.tmpdir")}/graft_tws${safe}_${ProcessHandle.current().pid()}"
-    deleteRecursively(new java.io.File(base))
-    events(spark, dir)
-      .select(col("user_id"),
-        (d2(col("value")) * 100).cast("long").as("cents"))
-      .repartition(4).write.mode("overwrite").parquet(s"$base/src")
-    val schema = spark.read.parquet(s"$base/src").schema
-    withTwsStateStore(spark) {
-      val out = spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$base/src")
-        .as[TwsIn]
-        .groupByKey(_.user_id)
-        .transformWithState(new RunningTotalsProc, TimeMode.None(),
-          OutputMode.Append())
-      val name = "graft_tws_totals"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = graft.GraftSession.withStreamParallelism(spark) {
-        out.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", s"$base/ckpt")
-          .trigger(Trigger.AvailableNow())
-          .start()
-      }
-      try q.awaitTermination() finally q.stop()
-      spark.table(name)
-        .groupBy(col("user_id"))
-        .agg(max(col("cents")).as("cents"), max(col("n_events")).as("n_events"))
-        .select(col("user_id"), (col("cents") / 100.0).as("balance"),
-          col("n_events"))
-        .orderBy(col("user_id"))
-    }
+    val src = splitStream(events(spark, dir).select(col("user_id"),
+      (d2(col("value")) * 100).cast("long").as("cents")),
+      freshTmp("graft_tws", dir))
+    runTws(spark, "graft_tws_totals") {
+      src.as[TwsIn].groupByKey(_.user_id)
+        .transformWithState(new RunningTotalsProc, TimeMode.None(), OutputMode.Append())
+        .toDF()
+    }.groupBy(col("user_id"))
+      .agg(max(col("cents")).as("cents"), max(col("n_events")).as("n_events"))
+      .select(col("user_id"), (col("cents") / 100.0).as("balance"),
+        col("n_events"))
+      .orderBy(col("user_id"))
   }
 
-  /** Kafka streaming source (SURVEY §2.1's intended stream source —
-    * the reference ships kafka-python in requirements but never wires
-    * it): the exact `readStream.format("kafka")` plan a cluster runs,
-    * projecting the standard columns with the payload cast to STRING.
-    * The zero-egress build container carries no spark-sql-kafka
-    * connector jar, so the plan cannot be BUILT here (DataSource
-    * lookup fails at load()); the spec exercises this constructor and
-    * converts the documented classpath gap into a canceled — not
-    * silently skipped — test. On a cluster with the connector on the
-    * classpath the same call yields an unbounded source that every
-    * query in this module runs on unchanged (the file-stream
-    * AvailableNow twins q40/q43/q73 exist precisely so the logic is
-    * oracle-checkable offline). */
   /** The exact source contract [[kafkaSource]] configures — exposed so
-    * the spec can assert the surface OFFLINE (the zero-egress container
-    * has no spark-sql-kafka jar, so `.load()` itself cannot run; only
-    * the execution path cancels). */
+    * the spec can assert the surface offline, where `.load()` itself
+    * cannot run for want of the connector jar. */
   private[graft] val KafkaFormat = "kafka"
   private[graft] def kafkaOptions(servers: String, topic: String): Map[String, String] =
     Map("kafka.bootstrap.servers" -> servers, "subscribe" -> topic)
@@ -1851,6 +1555,18 @@ object Streams {
     "CAST(value AS STRING) AS value",
     "topic", "partition", "offset", "timestamp")
 
+  /** Kafka streaming source (SURVEY §2.1's intended stream source —
+    * the reference ships kafka-python in requirements but never wires
+    * it): the exact `readStream.format("kafka")` plan a cluster runs,
+    * projecting the standard columns with the payload cast to STRING.
+    * Without the spark-sql-kafka connector jar on the classpath the
+    * plan cannot be BUILT (DataSource lookup fails at load()); the spec
+    * exercises this constructor and converts that classpath gap into a
+    * canceled — not silently skipped — test. With the connector the
+    * same call yields an unbounded source that every query in this
+    * module runs on unchanged (the file-stream AvailableNow twins
+    * q40/q43/q73 exist precisely so the logic is oracle-checkable
+    * offline). */
   def kafkaSource(spark: SparkSession, servers: String, topic: String): DataFrame =
     spark.readStream.format(KafkaFormat)
       .options(kafkaOptions(servers, topic))
@@ -1872,7 +1588,7 @@ object Streams {
     val agg = graft.ops.Validate.dayUserBitmap(
       eventsStream(spark, dir, withTs = true))
     graft.ops.Validate.bitmapRollup(
-      runToMemory(spark, agg, "graft_stream_bitmap"))
+      runToMemory(agg, "graft_stream_bitmap"))
   }
 
   /** q297 — STREAMING EXACT QUANTILES via histogram state: the stream
@@ -1893,7 +1609,7 @@ object Streams {
         (d2(col("value")) * 100).cast("long").as("cents"))
       .groupBy(col("event_type"), col("cents"))
       .agg(count(lit(1)).as("c"))
-    val h = runToMemory(spark, hist, "graft_stream_quartiles")
+    val h = runToMemory(hist, "graft_stream_quartiles")
     val wCdf = org.apache.spark.sql.expressions.Window
       .partitionBy(col("event_type")).orderBy(col("cents"))
       .rowsBetween(Long.MinValue, 0)

@@ -1,5 +1,7 @@
 package graft.util
 
+import org.apache.commons.io.FileUtils
+
 /** Per-call scratch directories for the registered index-probe forms
   * (q331/q380/q382), fixing two lifecycle defects of the earlier
   * per-process naming (ADVICE r14): (1) two concurrent calls in one
@@ -20,14 +22,8 @@ object Scratch {
   private lazy val hookInstalled: Unit = {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       val it = created.iterator()
-      while (it.hasNext) deleteRecursively(it.next())
+      while (it.hasNext) FileUtils.deleteQuietly(it.next())
     }, "graft-scratch-cleanup"))
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete(): Unit
   }
 
   /** Delete every scratch dir created so far and forget them — the
@@ -39,7 +35,7 @@ object Scratch {
     * fully-materialized queries, which is exactly that contract. */
   def purge(): Unit = {
     var f = created.poll()
-    while (f != null) { deleteRecursively(f); f = created.poll() }
+    while (f != null) { FileUtils.deleteQuietly(f); f = created.poll() }
   }
 
   /** A fresh, unique scratch dir keyed to (prefix, data dir): unique

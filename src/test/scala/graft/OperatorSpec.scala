@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,11 +15,6 @@ class OperatorSpec extends AnyFunSuite {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf)
   private def run2(name: String, dir: String) = SparkEntry.queries(name)(spark, dir)
-
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree)
-    f.delete(): Unit
-  }
 
   test("every registered query has an oracle and returns rows") {
     val qs = SparkEntry.queries
@@ -155,7 +151,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(!plan.contains("PushedFilters: [In(tok"), plan)
       assert(fromIdx.collect().toSeq ===
         run("q108_inverted_search").collect().toSeq)
-    } finally rmTree(new java.io.File(idx))
+    } finally FileUtils.deleteQuietly(new java.io.File(idx))
   }
 
   test("pareto frontier: no survivor is dominated, no dominator excluded") {
@@ -311,7 +307,7 @@ class OperatorSpec extends AnyFunSuite {
         .collect().toSeq
       val inline = run("q36_ann_ivf").collect().toSeq
       assert(fromIndex === inline)
-    } finally rmTree(new java.io.File(idx))
+    } finally FileUtils.deleteQuietly(new java.io.File(idx))
   }
 
   test("trained IVF index recall is at least the hash-sample index recall") {
@@ -333,7 +329,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(rTrained >= rHash,
         s"trained quantizer recall $rTrained < hash-sample recall $rHash")
       assert(rTrained > 0.0)
-    } finally rmTree(new java.io.File(base))
+    } finally FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("Lloyd training monotonically improves the quantizer objective") {
@@ -499,6 +495,24 @@ class OperatorSpec extends AnyFunSuite {
     assert(spark.read.json(s"$base/json").count() === n)
   }
 
+  test("a bounded foreachBatch run whose body throws fails naming the run and leaves no query active") {
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-fail").toFile
+    val name = "graft_spec_failing_run"
+    try {
+      val src = spark.readStream
+        .schema(spark.read.parquet(s"$sf/events.parquet").schema)
+        .option("pathGlobFilter", "events.parquet").parquet(sf)
+      val e = intercept[Exception] {
+        streaming.Streams.runBounded(src, name, ckpt.toString, stateful = false)(
+          _.foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            sys.error("batch body failed") })
+      }
+      assert(String.valueOf(e.getMessage).contains(name), e.getMessage)
+      assert(!spark.streams.active.exists(_.name == name),
+        "the failed run is still active")
+    } finally FileUtils.deleteQuietly(ckpt)
+  }
+
   test("kafka source contract is pinned offline: format, options, projection") {
     // the surface a cluster-side run configures, asserted WITHOUT a
     // broker or connector jar — only .load() needs the jar
@@ -540,15 +554,23 @@ class OperatorSpec extends AnyFunSuite {
     // machinery, which a long-lived production stream amortizes
     val ev = Tables.events(spark, sf)
     val inputRows = ev.filter(col("event_type").isin("click", "purchase")).count()
+    // (micro-batches, max state rows across batches, total trigger ms)
+    def profile(run: String): (Int, Long, Long) = {
+      val ps = streaming.Streams.progress(run)
+      (ps.length,
+        ps.flatMap(_.stateOperators.map(_.numRowsTotal)).foldLeft(0L)(math.max),
+        ps.map(p => Option(p.durationMs.get("triggerExecution"))
+          .map(_.longValue).getOrElse(0L)).sum)
+    }
     run("q73_stream_join").collect()
-    val (b1, s1, ms1) = streaming.Streams.joinProfile("join", sf)
+    val (b1, s1, ms1) = profile("graft_stream_join")
     info(s"q73: $b1 micro-batches, max state rows $s1, trigger ms $ms1")
     // AvailableNow on one source file: 1 data batch (+ possibly a
     // no-data batch that only advances the watermark)
     assert(b1 >= 1 && b1 <= 3, s"q73 ran $b1 micro-batches — plan re-batches")
     assert(s1 <= inputRows, s"q73 state $s1 exceeds watermark-bounded input $inputRows")
     run("q119_stream_outer_join").collect()
-    val (b2, s2, ms2) = streaming.Streams.joinProfile("ojoin", sf)
+    val (b2, s2, ms2) = profile("graft_stream_ojoin")
     info(s"q119: $b2 micro-batches, max state rows $s2, trigger ms $ms2")
     assert(b2 >= 1 && b2 <= 3, s"q119 ran $b2 micro-batches — plan re-batches")
     assert(s2 <= inputRows, s"q119 state $s2 exceeds watermark-bounded input $inputRows")
@@ -571,7 +593,7 @@ class OperatorSpec extends AnyFunSuite {
       batch.exceptAll(streamed).isEmpty)
     // the raw match stream lands in the checkpointed FILE sink, not on
     // the driver: the sink directory holds exactly the join's matches
-    val (out, _) = streaming.Streams.streamJoinPaths(sf)
+    val out = s"${streaming.Streams.tmpPath("graft_stream_join", sf)}/out"
     val sunk = spark.read.parquet(out).count()
     val nMatches = c.join(p, col("cu") === col("pu") &&
         col("pts") >= col("cts") &&
@@ -1612,7 +1634,7 @@ class OperatorSpec extends AnyFunSuite {
     // content-defined anchoring must still align; a third doc is unique
     val dir = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_span_fixture")
-    rmTree(dir)
+    FileUtils.deleteQuietly(dir)
     try {
       import spark.implicits._
       val block = ("the quick brown fox jumps over the lazy dog again and " +
@@ -1629,7 +1651,7 @@ class OperatorSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getLong(2)).toMap
       assert(got.keySet === Set(1L, 2L), got.toString)
       assert(got.values.forall(_ >= 1L), got.toString)
-    } finally rmTree(dir)
+    } finally FileUtils.deleteQuietly(dir)
   }
 
   test("source boilerplate + template scrub: invariants hold and a planted template is caught") {
@@ -1665,7 +1687,7 @@ class OperatorSpec extends AnyFunSuite {
     // below half -> trim); source B is template-free -> keep
     val dir = new java.io.File(s"${sys.props("java.io.tmpdir")}" +
       s"/graft_template_fixture_${ProcessHandle.current().pid()}")
-    rmTree(dir)
+    FileUtils.deleteQuietly(dir)
     try {
       import spark.implicits._
       val tpl = "nav home about contact legal privacy terms sitemap" // 8 tokens
@@ -1687,7 +1709,7 @@ class OperatorSpec extends AnyFunSuite {
         .map(r => r.getLong(0) -> r.getString(5)).toMap
       assert(acts === Map(1L -> "trim", 2L -> "trim", 3L -> "drop",
         4L -> "keep", 5L -> "keep"), acts.toString)
-    } finally rmTree(dir)
+    } finally FileUtils.deleteQuietly(dir)
   }
 
   test("source overlap: full pair matrix, bounded estimates, identical sources read 1.0") {
@@ -1707,7 +1729,7 @@ class OperatorSpec extends AnyFunSuite {
     // jaccards exactly 1.0); C is disjoint from both
     val dir = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_overlap_fixture")
-    rmTree(dir)
+    FileUtils.deleteQuietly(dir)
     try {
       import spark.implicits._
       val shared = (1 to 30).map(i => s"shared corpus sentence number $i with stable words")
@@ -1724,7 +1746,7 @@ class OperatorSpec extends AnyFunSuite {
       assert(got(("A", "B")) === ((1.0, 1.0)), got.toString)
       assert(got(("A", "C"))._1 === 0.0, got.toString)
       assert(got(("B", "C"))._1 === 0.0, got.toString)
-    } finally rmTree(dir)
+    } finally FileUtils.deleteQuietly(dir)
   }
 
   test("fisher separation: one ratio per dim, nonnegative, matches a brute force") {
@@ -3108,23 +3130,14 @@ class OperatorSpec extends AnyFunSuite {
     // stops answering. A NoTimeout implementation reports 0 here.
     val base = s"${sys.props("java.io.tmpdir")}/graft_spec_lsh_ttl_${ProcessHandle.current().pid()}"
     val pairs = streaming.Streams.lshPairsTtlStream(spark, sf, base, "90 minutes")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-ckpt")
-    val name = "graft_spec_lsh_ttl"
-    if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-    val q = pairs.writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt.toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
     try {
-      val state = q.recentProgress.flatMap(Option(_)).flatMap(_.stateOperators)
+      streaming.Streams.runToMemory(pairs, "graft_spec_lsh_ttl", "append")
+      val state = streaming.Streams.progress("graft_spec_lsh_ttl")
+        .flatMap(Option(_)).flatMap(_.stateOperators)
       val removed = state.map(_.numRowsRemoved).sum
       assert(removed > 0,
         "no state rows physically removed — buckets linger filtered-but-resident")
-    } finally {
-      rmTree(new java.io.File(base)); rmTree(ckpt.toFile)
-    }
+    } finally FileUtils.deleteQuietly(new java.io.File(base))
   }
 
   test("index-seeded streaming image dedup: corpus near-dups flag statelessly and survive a cold restart") {
@@ -3137,20 +3150,12 @@ class OperatorSpec extends AnyFunSuite {
     def runOnce(tag: String): Set[(Long, Long, Int)] = {
       val base = s"${sys.props("java.io.tmpdir")}/graft_spec_imgix_src_" +
         s"${tag}_${ProcessHandle.current().pid()}"
-      val pairs = streaming.Streams.imagePairsTtlStreamIndexed(
-        spark, sf, base, "4 hours", ix)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-ckpt-ix")
-      val name = s"graft_spec_img_ix_$tag"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = pairs.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      try spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      finally { rmTree(new java.io.File(base)); rmTree(ckpt.toFile) }
+      val pairs = streaming.Streams.hammingPairsTtlStream(spark,
+        streaming.Streams.deltaDocs(spark, sf),
+        streaming.Streams.ImageKernel, base, "4 hours", Some(ix))
+      try streaming.Streams.runToMemory(pairs, s"graft_spec_img_ix_$tag", "append")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      finally FileUtils.deleteQuietly(new java.io.File(base))
     }
     try {
       val first = runOnce("1")
@@ -3174,7 +3179,7 @@ class OperatorSpec extends AnyFunSuite {
       // persisted index, not state
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally rmTree(new java.io.File(ix))
+    } finally FileUtils.deleteQuietly(new java.io.File(ix))
   }
 
   test("index-seeded streaming text dedup: corpus matches come from the persisted LSH index and survive a cold restart") {
@@ -3189,18 +3194,9 @@ class OperatorSpec extends AnyFunSuite {
         s"${tag}_${ProcessHandle.current().pid()}"
       val pairs = streaming.Streams.lshPairsTtlStreamIndexed(
         spark, sf, base, "4 hours", ix)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-ckpt-lx")
-      val name = s"graft_spec_lsh_ix_$tag"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = pairs.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      try spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally { rmTree(new java.io.File(base)); rmTree(ckpt.toFile) }
+      try streaming.Streams.runToMemory(pairs, s"graft_spec_lsh_ix_$tag", "append")
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      finally FileUtils.deleteQuietly(new java.io.File(base))
     }
     try {
       val first = runOnce("1")
@@ -3216,7 +3212,7 @@ class OperatorSpec extends AnyFunSuite {
         assert(first.contains(p), s"missing corpus flag $p"))
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally rmTree(new java.io.File(ix))
+    } finally FileUtils.deleteQuietly(new java.io.File(ix))
   }
 
   test("index-seeded streaming audio dedup: corpus matches come from the persisted audio index and survive a cold restart") {
@@ -3225,20 +3221,12 @@ class OperatorSpec extends AnyFunSuite {
     def runOnce(tag: String): Set[(Long, Long, Int)] = {
       val base = s"${sys.props("java.io.tmpdir")}/graft_spec_audix_src_" +
         s"${tag}_${ProcessHandle.current().pid()}"
-      val pairs = streaming.Streams.audioPairsTtlStreamIndexed(
-        spark, sf, base, "4 hours", ix)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-ckpt-ax")
-      val name = s"graft_spec_aud_ix_$tag"
-      if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-      val q = pairs.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination() finally q.stop()
-      try spark.table(name).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      finally { rmTree(new java.io.File(base)); rmTree(ckpt.toFile) }
+      val pairs = streaming.Streams.hammingPairsTtlStream(spark,
+        streaming.Streams.deltaDocs(spark, sf),
+        streaming.Streams.AudioKernel, base, "4 hours", Some(ix))
+      try streaming.Streams.runToMemory(pairs, s"graft_spec_aud_ix_$tag", "append")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      finally FileUtils.deleteQuietly(new java.io.File(base))
     }
     try {
       val first = runOnce("1")
@@ -3260,7 +3248,7 @@ class OperatorSpec extends AnyFunSuite {
         assert(firstPairs.contains(p), s"missing corpus flag $p"))
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally rmTree(new java.io.File(ix))
+    } finally FileUtils.deleteQuietly(new java.io.File(ix))
   }
 
   test("index-seeded streaming semantic dedup: stateless probe matches the batch probe, corpus side is the IVF index, planted within-stream pairs emit, and the set survives a cold restart") {
@@ -3303,19 +3291,10 @@ class OperatorSpec extends AnyFunSuite {
         Sim.saveIvfIndexOn(spark, vv.filter(col("vec_id") % 10 =!= 0), ixr)
         val pairs = streaming.Streams.semanticPairsStreamIndexed(
           spark, dir, base, "4 hours", ixr)
-        val ckpt = java.nio.file.Files.createTempDirectory("graft-spec-ckpt-sx")
-        val name = s"graft_spec_sem_ix_$tag"
-        if (spark.catalog.tableExists(name)) spark.catalog.dropTempView(name)
-        val q = pairs.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        try q.awaitTermination() finally q.stop()
-        try spark.table(name).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        finally { rmTree(new java.io.File(base)); rmTree(ckpt.toFile)
-          rmTree(new java.io.File(ixr)) }
+        try streaming.Streams.runToMemory(pairs, s"graft_spec_sem_ix_$tag", "append")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+        finally { FileUtils.deleteQuietly(new java.io.File(base))
+          FileUtils.deleteQuietly(new java.io.File(ixr)) }
       }
       val first = runOnce(sf, "1")
       assert(first.nonEmpty)
@@ -3369,8 +3348,8 @@ class OperatorSpec extends AnyFunSuite {
         pairSet.foreach { case (a, b) =>
           assert(involved.contains(a) && involved.contains(b),
             s"unplanted pair ($a,$b) emitted") }
-      } finally rmTree(new java.io.File(synth))
-    } finally rmTree(new java.io.File(ix))
+      } finally FileUtils.deleteQuietly(new java.io.File(synth))
+    } finally FileUtils.deleteQuietly(new java.io.File(ix))
   }
 
   test("replica bucket diff flags only faulted buckets and q98-equal replicas flag none") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,11 +20,6 @@ class SchemaSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.test()
   private val sf = "/root/testdata/sf0.001"
-
-  private def rmTree(f: java.io.File): Unit = {
-    val kids = f.listFiles(); if (kids != null) kids.foreach(rmTree)
-    f.delete(): Unit
-  }
 
   test("corpus canary: events.ts physical type is one the adaptive loader handles") {
     val raw = spark.read.parquet(s"$sf/events.parquet")
@@ -70,7 +66,7 @@ class SchemaSpec extends AnyFunSuite {
     import spark.implicits._
     val base = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_schema_fixture")
-    rmTree(base)
+    FileUtils.deleteQuietly(base)
     val nanosDir = s"${base.getAbsolutePath}/nanos"
     val microsDir = s"${base.getAbsolutePath}/micros"
     try {
@@ -98,7 +94,7 @@ class SchemaSpec extends AnyFunSuite {
       val ga = a.select("event_id", "ts").collect().map(_.toString).sorted
       val gb = b.select("event_id", "ts").collect().map(_.toString).sorted
       assert(ga.sameElements(gb), s"${ga.toSeq} vs ${gb.toSeq}")
-    } finally rmTree(base)
+    } finally FileUtils.deleteQuietly(base)
   }
 
   test("q271 boundary: a timer registered exactly AT the final watermark fires (<= rule)") {
@@ -112,7 +108,7 @@ class SchemaSpec extends AnyFunSuite {
     //   user 4 last t0+10h    => timer t0+10h30 > wm   -> stays open
     val base = new java.io.File(
       s"${sys.props("java.io.tmpdir")}/graft_timer_boundary")
-    rmTree(base)
+    FileUtils.deleteQuietly(base)
     val dir = base.getAbsolutePath
     try {
       val t0 = java.time.LocalDateTime.of(2024, 1, 1, 0, 0, 0)
@@ -131,6 +127,6 @@ class SchemaSpec extends AnyFunSuite {
         s"timer-at-watermark emission drifted (got $out): if Spark's " +
           "expiry rule changed to strict <, flip the q271 oracle " +
           "(Streams.scala) to match")
-    } finally rmTree(base)
+    } finally FileUtils.deleteQuietly(base)
   }
 }

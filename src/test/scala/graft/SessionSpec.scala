@@ -16,8 +16,7 @@ class SessionSpec extends AnyFunSuite {
 
   test("withStreamParallelism lowers inside the body and restores after") {
     val prev = spark.conf.get(Key)
-    val expected = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS",
-      math.min(prev.toInt, 8).toString)
+    val expected = math.min(prev.toInt, 8).toString
     val seen = GraftSession.withStreamParallelism(spark) {
       spark.conf.get(Key)
     }
@@ -44,8 +43,7 @@ class SessionSpec extends AnyFunSuite {
       val seen = GraftSession.withStreamParallelism(spark) {
         spark.conf.get(Key)
       }
-      if (!sys.env.contains("SPARK_GRAFT_STREAM_PARTITIONS"))
-        assert(seen.toInt <= 2)
+      assert(seen === "2")
       assert(spark.conf.get(Key) === "2")
     } finally spark.conf.set(Key, prev)
   }
