@@ -18,6 +18,12 @@ import org.apache.spark.sql.SparkSession
   *    as raw int64 nanos and are converted explicitly; generations
   *    that store TIMESTAMP(MICROS) are unaffected by this flag and
   *    pass through natively (see Tables.tsToNtz — schema-adaptive).
+  *  - parallelPartitionDiscovery.threshold is Int.MaxValue: every master
+  *    here is local[N], where Spark's parallel listing "job" (started
+  *    past 32 paths) runs its tasks on the driver's own cores and only
+  *    adds scheduling and a Hadoop-conf broadcast — on the 36-day gas
+  *    store it was one of a serve's 4 jobs. On a cluster over an object
+  *    store restore the default (32), so listing fans out to executors.
   */
 object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
@@ -34,6 +40,8 @@ object GraftSession {
       // coalesces the small-file end. On a real cluster size this to
       // executor memory / core count as usual.
       .config("spark.sql.files.maxPartitionBytes", "16m")
+      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+        Int.MaxValue.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

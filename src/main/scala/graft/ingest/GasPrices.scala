@@ -14,8 +14,9 @@ import org.apache.spark.sql.types._
   *    greencell/redcell/pricecell (dags/get_prices_load_mongodb.py:23-26)
   *    → `regexp_extract_all` per cell family.
   *  - S3 positional zip of the four cell lists, silently truncating to
-  *    the shortest (dags/get_prices_load_mongodb.py:30) → `posexplode`
-  *    + inner equi-join on ordinal; the inner join IS the truncation.
+  *    the shortest (dags/get_prices_load_mongodb.py:30) → per page, each
+  *    list `slice`d to the `least` list size, then `inline(arrays_zip)`;
+  *    the slice IS the truncation, in one narrow pass with no join.
   *  - F1 whitespace-normalized text-fragment join (`" ".join(
   *    stripped_strings)`, dags/get_prices_load_mongodb.py:31-34) →
   *    strip tags, collapse whitespace, trim.
@@ -31,20 +32,21 @@ import org.apache.spark.sql.types._
   *    (api/mongo/main.py:63-77) and the all-time variant
   *    (api/postgres/api.py:16-33).
   *
-  * Scale notes: parsing is a narrow per-row pipeline (the ordinal join
-  * is broadcast at any realistic page count); the canonical store is
-  * date-partitioned parquet so top-of-day prunes to one partition.
+  * Scale notes: parsing is a narrow per-page pipeline; the canonical
+  * store is date-partitioned parquet so top-of-day prunes to one
+  * partition. A daily load (`parse` + `writeCanonical`) is one shuffle
+  * on `date`, which serves both keep-last and the one-file-per-date
+  * layout: 2 Spark jobs. A serve (`topOfDay(spark.read.parquet(store),
+  * day).collect()`) is 2 jobs: the read's schema-footer job and one
+  * exchange-free aggregate over the day's partition (no listing job on
+  * local[N]; see [[graft.GraftSession]]).
   */
 object GasPrices {
 
-  /** Raw page text → one row per aligned (price, station, city,
-    * time/user) cell quadruple. Input: one row per page in `pages`
-    * column `html`; a page id column `page_id` keeps ordinals
-    * page-local. */
   /** The four cell families (S2) — single source of truth shared by
     * [[parse]] and the [[droppedRowCount]] metric so the regexes can
     * never desynchronize. */
-  private val cellFamilies: Seq[(String, String)] = Seq(
+  private[graft] val cellFamilies: Seq[(String, String)] = Seq(
     ("price_raw", """<td[^>]*class="(?:greencell|redcell|pricecell)"[^>]*>(.*?)</td>"""),
     ("station_raw", """<td[^>]*class="stationcell"[^>]*>(.*?)</td>"""),
     ("city_raw", """<td[^>]*class="citycell"[^>]*>(.*?)</td>"""),
@@ -53,14 +55,23 @@ object GasPrices {
   private def cells(pattern: String): Column =
     regexp_extract_all(col("html"), lit(pattern), lit(1))
 
+  /** S3, the reference's zip(): one row per aligned raw cell quadruple
+    * (`price_raw`, `station_raw`, `city_raw`, `timeuser_raw`). Per page
+    * every family's list is cut to the shortest one and the lists are
+    * zipped position by position: a narrow pass, no join, no page key. */
+  private[graft] def align(pages: DataFrame): DataFrame = {
+    val names = cellFamilies.map(_._1)
+    val shortest = least(names.map(n => size(col(n))): _*)
+    pages
+      .select(cellFamilies.map { case (name, pat) => cells(pat).as(name) }: _*)
+      .select(names.map(n => slice(col(n), lit(1), shortest).as(n)): _*)
+      .select(inline(arrays_zip(names.map(col): _*)))
+  }
+
+  /** Raw page text → one row per aligned (price, station, city,
+    * time/user) cell quadruple. Input: one row per page, column `html`. */
   def parse(pages: DataFrame, runDate: LocalDate): DataFrame = {
-    // One posexplode per family; inner join on (page_id, pos) aligns the
-    // four lists and drops unmatched tails — the reference's zip().
-    val exploded = cellFamilies.map { case (name, pat) =>
-      pages.select(col("page_id"),
-        posexplode(cells(pat)).as(Seq("pos", name)))
-    }
-    val aligned = exploded.reduce((a, b) => a.join(b, Seq("page_id", "pos")))
+    val aligned = align(pages)
 
     // F1: stripped_strings-join ≈ drop tags, collapse whitespace, trim.
     def norm(c: Column): Column =
@@ -94,29 +105,38 @@ object GasPrices {
     * dags/get_prices_load_minio.py:80) made explicit. Rerun-idempotent
     * via dynamic partition overwrite — the reference's append sinks
     * double-load on reruns (SURVEY §2.10). */
-  def writeCanonical(df: DataFrame, path: String): Unit = {
+  def writeCanonical(df: DataFrame, path: String): Unit =
+    keepLast(df).write.mode("overwrite")
+      // only partitions present in this batch are replaced; without
+      // this the (static) overwrite would truncate every earlier date
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("date")
+      .parquet(path)
+
+  /** [[writeCanonical]]'s input: the last report per (date, station),
+    * hash-partitioned on `date`. That one shuffle clusters the window
+    * (its (date, station) partitioning is satisfied by `date` alone)
+    * and puts each date in one task, so each date dir gets one file. */
+  private[graft] def keepLast(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // chronological keep-last: the raw "10:42AM" token sorts wrongly as
     // a string ("9:.." > "10:.."), so parse it to a time-of-day key
     val tkey = try_to_timestamp(col("time"), lit("h:mma"))
     val w = Window.partitionBy(col("date"), col("station"))
       .orderBy(tkey.desc_nulls_last, col("time").desc, col("user").desc)
-    df.withColumn("rn", row_number().over(w))
+    df.repartition(col("date"))
+      .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-      .repartition(col("date"))
-      .write.mode("overwrite")
-      // only partitions present in this batch are replaced; without
-      // this the (static) overwrite would truncate every earlier date
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("date")
-      .parquet(path)
   }
 
   /** A1/A2: the day's highest and lowest price with station and city —
     * the reference's flagship serving query (api/mongo/main.py:63-77),
-    * as one partially-aggregable pass (max_by/min_by, no sort). */
+    * as one pass (max_by/min_by, no sort). One day is bounded by the
+    * station count, so the filtered rows are coalesced to one partition
+    * and the global aggregate plans no exchange: one Spark job. */
   def topOfDay(df: DataFrame, day: LocalDate): DataFrame =
     df.filter(col("date") === lit(java.sql.Date.valueOf(day)))
+      .coalesce(1)
       .agg(
         max_by(struct(col("price"), col("station"), col("city")), col("price"))
           .as("highest_price"),

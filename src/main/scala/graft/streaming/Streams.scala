@@ -193,11 +193,14 @@ object Streams {
     * root: deterministic per (prefix, data dir, JVM). The dir's hash
     * keeps paths whose sanitized forms collide apart (`/x/sf0.1` vs
     * `/x/sf0_1`); the pid keeps a concurrent Verify/test pair on one
-    * data dir from racing on each other's files. */
+    * data dir from racing on each other's files. Every root is
+    * registered with [[graft.util.Scratch]], so it is deleted between
+    * queries and at JVM exit; a lazy frame over it ([[runToFiles]])
+    * stays readable until then. */
   private[graft] def tmpPath(prefix: String, dir: String): String =
-    s"${sys.props("java.io.tmpdir")}/$prefix" +
+    graft.util.Scratch.track(s"${sys.props("java.io.tmpdir")}/$prefix" +
       s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${Integer.toHexString(dir.hashCode)}" +
-      s"_${ProcessHandle.current().pid()}"
+      s"_${ProcessHandle.current().pid()}")
 
   /** [[tmpPath]], wiped first so a rerun prices the full computation
     * and never resumes an old checkpoint. */

@@ -3,17 +3,18 @@ package graft.util
 import org.apache.commons.io.FileUtils
 
 /** Per-call scratch directories for the registered index-probe forms
-  * (q331/q380/q382), fixing two lifecycle defects of the earlier
+  * (q331/q380/q382), and the streaming runs' per-run tmp roots
+  * ([[track]]), fixing two lifecycle defects of the earlier
   * per-process naming (ADVICE r14): (1) two concurrent calls in one
   * process on the same data dir raced — one's `mode(overwrite)` index
   * write against the other's live probe of the same path — a monotone
   * per-process counter now makes every call's dir unique; (2) repeated
   * runs accumulated parquet under java.io.tmpdir forever — every dir
   * is registered with ONE JVM shutdown hook that deletes them all at
-  * exit. Deletion cannot happen earlier than exit: the probe frames
-  * returned by the callers are LAZY reads of the dir, and a caller
-  * (Verify, Bench's second sweep, a spec re-collect) may materialize
-  * them at any later point in the process's life. */
+  * exit, or at the next [[purge]] between queries. Deletion cannot
+  * happen earlier: the frames returned by the callers are LAZY reads
+  * of the dir, and a caller (Verify, Bench's second sweep, a spec
+  * re-collect) may materialize them at any later point until then. */
 object Scratch {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0L)
@@ -42,11 +43,19 @@ object Scratch {
     * per CALL within the process, deleted at JVM exit (or at the next
     * [[purge]], whichever comes first). */
   def indexDir(prefix: String, dataDir: String): String = {
-    hookInstalled
     val safe = dataDir.replaceAll("[^A-Za-z0-9]", "_")
-    val d = new java.io.File(sys.props("java.io.tmpdir"),
+    track(new java.io.File(sys.props("java.io.tmpdir"),
       s"$prefix${safe}_${ProcessHandle.current().pid()}_${counter.incrementAndGet()}")
-    created.add(d): Unit
-    d.getAbsolutePath
+      .getAbsolutePath)
+  }
+
+  /** Register a dir named by its caller (the streaming runs' per-run
+    * tmp roots) under the same contract: deleted at the next [[purge]]
+    * or at JVM exit. Registering one path twice is harmless. Returns
+    * `path`. */
+  def track(path: String): String = {
+    hookInstalled
+    created.add(new java.io.File(path)): Unit
+    path
   }
 }

@@ -2,7 +2,8 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -16,11 +17,12 @@ class GasPricesSpec extends AnyFunSuite {
   private lazy val spark = GraftSession.test()
   private val day = LocalDate.of(2023, 4, 1)
 
-  private def parsed = {
+  private def fixturePages = {
     import spark.implicits._
-    GasPrices.parse(
-      Seq((1L, GasPrices.fixtureHtml)).toDF("page_id", "html"), day)
+    Seq((1L, GasPrices.fixtureHtml)).toDF("page_id", "html")
   }
+
+  private def parsed = GasPrices.parse(fixturePages, day)
 
   test("parse aligns cell families and drops the unmatched tail row") {
     val rows = parsed.orderBy(col("price")).collect()
@@ -69,7 +71,7 @@ class GasPricesSpec extends AnyFunSuite {
 
   test("droppedRowCount reports the zip-truncated rows the reference hides") {
     import spark.implicits._
-    val pages = Seq((1L, GasPrices.fixtureHtml)).toDF("page_id", "html")
+    val pages = fixturePages
     // fixture: 4 price cells, 3 complete rows -> exactly 1 dropped
     assert(GasPrices.droppedRowCount(pages) === 1L)
     // the metric agrees with what parse actually drops
@@ -124,10 +126,7 @@ class GasPricesSpec extends AnyFunSuite {
     }
     val base = java.nio.file.Files.createTempDirectory("graft-compact").toString
     // fragment: two ingest days, each scattered across 6 shuffled files
-    val twoDays = parsed.union(GasPrices.parse(
-      { import spark.implicits._
-        Seq((1L, GasPrices.fixtureHtml)).toDF("page_id", "html") },
-      day.plusDays(1)))
+    val twoDays = parsed.union(GasPrices.parse(fixturePages, day.plusDays(1)))
     twoDays.repartition(6)
       .write.partitionBy("date").parquet(s"$base/frag")
     val before = partFiles(s"$base/frag").size
@@ -143,10 +142,8 @@ class GasPricesSpec extends AnyFunSuite {
 
   test("expirePartitions drops only stale date partitions, without a rewrite") {
     val dir = java.nio.file.Files.createTempDirectory("graft-expire").toString + "/store"
-    val threeDays = (0 to 2).map(i => GasPrices.parse(
-      { import spark.implicits._
-        Seq((1L, GasPrices.fixtureHtml)).toDF("page_id", "html") },
-      day.plusDays(i))).reduce(_ union _)
+    val threeDays = (0 to 2).map(i => GasPrices.parse(fixturePages, day.plusDays(i)))
+      .reduce(_ union _)
     threeDays.write.partitionBy("date").parquet(dir)
     assert(spark.read.parquet(dir).select("date").distinct().count() === 3)
     val dropped = GasPrices.expirePartitions(spark, dir, day.plusDays(1))
@@ -195,5 +192,117 @@ class GasPricesSpec extends AnyFunSuite {
     val back = spark.read.parquet(dir)
     assert(back.select("date").distinct().count() === 2)
     assert(back.count() === 6)
+  }
+
+  /** Spark jobs `body` starts, counted by a listener on a job group of
+    * its own. A fence job in a second group runs after `body`; the
+    * listener bus delivers events in order, so once the fence's start
+    * is seen every job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"gas-jobs-${java.util.UUID.randomUUID()}"
+    val fence = s"$group-fence"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val fenced = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => jobs.incrementAndGet(): Unit
+          case Some(`fence`) => fenced.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(fence, "fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the fence job's start was never delivered")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a serve over a 36-day store runs 2 jobs, a daily load 2 with one file per date") {
+    import spark.implicits._
+    val store = java.nio.file.Files.createTempDirectory("graft-gas-jobs").toString + "/store"
+    // 36 date dirs: more than Spark's default parallel-listing threshold (32)
+    val days = (0 until 36).map(i => java.sql.Date.valueOf(day.plusDays(i.toLong)))
+    GasPrices.writeCanonical(parsed.drop("date").crossJoin(days.toDF("date")), store)
+    assert(new java.io.File(store).list().count(_.startsWith("date=")) === 36)
+
+    var served: Array[Row] = Array.empty
+    val serveJobs = jobsOf {
+      served = GasPrices.topOfDay(spark.read.parquet(store), day.plusDays(7)).collect()
+    }
+    // the read's schema-footer job and one exchange-free aggregate
+    assert(serveJobs <= 2, s"a serve ran $serveJobs jobs")
+    assert(served.length === 1)
+    assert(served.head.getStruct(0).getDecimal(0).toString === "166.4")
+
+    val loadDay = day.plusDays(35)
+    val loadJobs = jobsOf {
+      GasPrices.writeCanonical(GasPrices.parse(fixturePages, loadDay), store)
+    }
+    // one shuffle on date: its map stage and the window + write stage
+    assert(loadJobs <= 2, s"a daily load ran $loadJobs jobs")
+    GasPrices.writeCanonical(GasPrices.parse(fixturePages, loadDay), store) // rerun
+    val files = new java.io.File(store, s"date=$loadDay").list()
+      .count(_.endsWith(".parquet"))
+    assert(files === 1)
+    assert(spark.read.parquet(store).filter(col("date") === java.sql.Date.valueOf(loadDay))
+      .count() === 3)
+  }
+
+  /** The join form `align` replaced, kept as its reference: one
+    * posexplode per cell family, inner-joined on (page_id, pos); the
+    * inner join drops each page's unmatched tail. */
+  private def alignByJoin(pages: DataFrame): DataFrame =
+    GasPrices.cellFamilies.map { case (name, pat) =>
+      pages.select(col("page_id"),
+        posexplode(regexp_extract_all(col("html"), lit(pat), lit(1))).as(Seq("pos", name)))
+    }.reduce((a, b) => a.join(b, Seq("page_id", "pos")))
+      .select(GasPrices.cellFamilies.map(f => col(f._1)): _*)
+
+  test("zip parse equals the posexplode + ordinal-join form on ragged pages") {
+    import spark.implicits._
+    def row(cells: (String, String)*): String =
+      cells.map { case (cls, v) => s"""<td class="$cls">$v</td>""" }
+        .mkString("<tr>", "", "</tr>\n")
+    // station is the shortest family: 3 prices, 2 stations, 3 cities, 3 users
+    val shortStation = row("pricecell" -> "150.1", "stationcell" -> "A",
+        "citycell" -> "X", "usercell" -> "8:00AM a") +
+      row("redcell" -> "151.2", "citycell" -> "Y", "usercell" -> "8:30AM") +
+      row("greencell" -> "<b>152.3</b>", "stationcell" -> "C",
+        "citycell" -> "Z", "usercell" -> "9:00PM c")
+    // no price cell at all
+    val noPrice = row("stationcell" -> "D", "citycell" -> "W", "usercell" -> "7:00AM") +
+      row("stationcell" -> "E", "citycell" -> "V", "usercell" -> "7:10AM v")
+    val pages = Seq[(Long, String)](
+      (7L, GasPrices.fixtureHtml), (3L, shortStation), (42L, noPrice),
+      (1000L, null), (19L, GasPrices.fixtureHtml))
+      .toDF("page_id", "html")
+
+    val zipped = GasPrices.align(pages)
+    val joined = alignByJoin(pages)
+    assert(zipped.count() === 3 + 2 + 0 + 0 + 3)
+    assert(zipped.exceptAll(joined).isEmpty && joined.exceptAll(zipped).isEmpty)
+    // the station-short page keeps the reference's misalignment
+    assert(zipped.filter(col("price_raw") === "151.2").head.getString(1) === "C")
+
+    // dropped = per-page longest family, summed, minus the rows parse keeps
+    val longest = pages.as[(Long, String)].collect().toSeq.map(_._2).filter(_ != null)
+      .map(h => GasPrices.cellFamilies.map(_._2.r.findAllIn(h).size).max).sum
+    assert(GasPrices.droppedRowCount(pages) ===
+      longest - GasPrices.parse(pages, day).count())
+  }
+
+  test("topOfDay of a day absent from the store is one all-null row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-gas-absent").toString
+    GasPrices.writeCanonical(parsed, dir)
+    val absent = day.plusDays(100)
+    for (src <- Seq(parsed, spark.read.parquet(dir)))
+      assert(GasPrices.topOfDay(src, absent).collect().toSeq === Seq(Row(null, null)))
   }
 }

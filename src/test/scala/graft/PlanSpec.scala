@@ -56,6 +56,13 @@ class PlanSpec extends AnyFunSuite {
     self + p.children.map(countShuffles).sum
   }
 
+  /** The physical plan after shuffle insertion (AQE's initial plan). */
+  private def preparedPlan(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
   test("q49 bucketed join needs no join-side shuffle") {
     val df = run("q49_bucketed_join")
     // the only exchanges allowed are for the post-join aggregation and
@@ -299,10 +306,7 @@ class PlanSpec extends AnyFunSuite {
     // the 20-term Morton interleave stays builtin arithmetic (no UDF
     // boundary): shift/mask terms visible in the aggregate's grouping
     assert(plan.contains("shiftright"), plan)
-    val shuffles = countShuffles(df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+    val shuffles = countShuffles(preparedPlan(df))
     // one hash shuffle for the bucket aggregate + one range for ORDER BY
     assert(shuffles <= 2, s"$shuffles shuffles\n$plan")
   }
@@ -314,10 +318,7 @@ class PlanSpec extends AnyFunSuite {
     // substring "bit_xor" alone would also match the final-mode
     // aggregate and never fail)
     assert(plan.contains("partial_bit_xor"), plan)
-    val shuffles = countShuffles(df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+    val shuffles = countShuffles(preparedPlan(df))
     // per table: ONE single-row aggregate exchange, plus the spread()
     // round-robin that exists only because fixture tables are
     // single-file parquet (a real multi-split table scans parallel and
@@ -329,10 +330,7 @@ class PlanSpec extends AnyFunSuite {
     val df = run("q101_quantize_int8")
     val plan = formatted(df)
     assert(!plan.contains("BatchEvalPython") && !plan.contains("ScalaUDF"), plan)
-    val shuffles = countShuffles(df.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    })
+    val shuffles = countShuffles(preparedPlan(df))
     // spread()'s repartition + the final ORDER BY range exchange only;
     // the quantization itself never exchanges data
     assert(shuffles <= 2, s"$shuffles shuffles\n$plan")
@@ -510,10 +508,7 @@ class PlanSpec extends AnyFunSuite {
       // materialize through THIS DataFrame's QueryExecution (a write
       // would spawn a fresh one and leave this plan un-adapted)
       assert(joined.queryExecution.toRdd.count() === 60000L)
-      val plan = joined.queryExecution.executedPlan match {
-        case a: AdaptiveSparkPlanExec => a.executedPlan.toString
-        case p => p.toString
-      }
+      val plan = preparedPlan(joined).toString
       assert(plan.contains("skew=true"),
         s"AQE did not split the skewed partition:\n$plan")
     } finally saved.foreach {
@@ -932,5 +927,54 @@ class PlanSpec extends AnyFunSuite {
       Seq(corp, ix).foreach(d =>
         org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
+  }
+
+  test("gas parse is one narrow pass: no join, no broadcast, no exchange") {
+    import spark.implicits._
+    val pages = Seq((1L, graft.ingest.GasPrices.fixtureHtml), (2L, null: String))
+      .toDF("page_id", "html")
+    val plan = preparedPlan(
+      graft.ingest.GasPrices.parse(pages, java.time.LocalDate.of(2023, 4, 1)))
+    assert(plan.collect {
+      case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j
+    }.isEmpty, plan.toString)
+    assert(plan.collect {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeLike => b
+    }.isEmpty, plan.toString)
+    assert(countShuffles(plan) === 0, plan.toString)
+  }
+
+  test("gas writeCanonical's input shuffles once, hash-partitioned on date") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val gp = graft.ingest.GasPrices
+    val day = java.time.LocalDate.of(2023, 4, 1)
+    val pages = Seq((1L, gp.fixtureHtml)).toDF("page_id", "html")
+    // two days, so `date` is a column (one parsed day folds it to a
+    // literal and the shuffle to SinglePartition — still one shuffle)
+    val twoDays = gp.parse(pages, day).union(gp.parse(pages, day.plusDays(1)))
+    val plan = preparedPlan(gp.keepLast(twoDays))
+    val shuffles = plan.collect { case s: ShuffleExchangeLike => s }
+    assert(shuffles.size === 1, plan.toString)
+    shuffles.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        assert(h.expressions.flatMap(_.references.map(_.name)) === Seq("date"),
+          plan.toString)
+      case other => fail(s"expected hashpartitioning(date), got $other\n$plan")
+    }
+    val oneDay = preparedPlan(gp.keepLast(gp.parse(pages, day)))
+    assert(countShuffles(oneDay) === 1, oneDay.toString)
+  }
+
+  test("gas topOfDay over the date-partitioned store plans no exchange") {
+    import spark.implicits._
+    val gp = graft.ingest.GasPrices
+    val day = java.time.LocalDate.of(2023, 4, 1)
+    val dir = java.nio.file.Files.createTempDirectory("graft-plan-gas").toString
+    try {
+      gp.writeCanonical(gp.parse(Seq((1L, gp.fixtureHtml)).toDF("page_id", "html"), day), dir)
+      val plan = preparedPlan(gp.topOfDay(spark.read.parquet(dir), day))
+      assert(countShuffles(plan) === 0, plan.toString)
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
   }
 }
