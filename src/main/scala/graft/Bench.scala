@@ -63,7 +63,17 @@ object Bench {
     // Between queries every result is fully materialized, so stale
     // persisted blocks are safe to drop (rationale: GraftSession.dropStaleBlocks)
     def dropStaleBlocks(): Unit = GraftSession.dropStaleBlocks(spark)
-    names.foreach { n => run(n, SparkEntry.queries(n)); dropStaleBlocks() } // warmup
+    // One stderr line per sweep with the generated classes Spark
+    // compiled in it: a warm sweep that still compiles is missing the
+    // codegen cache (GraftSession's scale note on its size).
+    def sweep[T](label: String)(body: => T): T = {
+      val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+      val before = compiles.getCount
+      val r = body
+      System.err.println(s"bench sweep $label: ${compiles.getCount - before} generated classes compiled")
+      r
+    }
+    sweep("warm-up")(names.foreach { n => run(n, SparkEntry.queries(n)); dropStaleBlocks() })
     // Collect garbage left by the previous query before each measured
     // run: otherwise the pair-heavy joins (q33/q34) fill the old gen
     // and their major-GC pauses land in whichever query runs next
@@ -121,9 +131,9 @@ object Bench {
       else anchorRef.keys.toSeq.sorted
         .flatMap(n => measured(n).toOption.map(n -> _)).toMap
     val anchorStart = anchorSweep()
-    val pass1 = names.map(n => n -> measured(n)).toMap
+    val pass1 = sweep("pass 1")(names.map(n => n -> measured(n)).toMap)
     val anchorMid = anchorSweep()
-    val pass2 = names.map(n => n -> measured(n)).toMap
+    val pass2 = sweep("pass 2")(names.map(n => n -> measured(n)).toMap)
     val anchorEnd = anchorSweep()
     val results = names.map { n =>
       val r = (pass1(n), pass2(n)) match {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.util.Scratch
+import org.apache.commons.io.FileUtils
 
 /** Extended relational / source-sink coverage beyond the round-2 set:
   * pivot, correlated scalar subquery (Catalyst decorrelation), CSV and
@@ -199,8 +201,7 @@ object Extended {
     * explicit schema → aggregate. The aggregate must equal the direct
     * parquet path bit-for-bit. */
   def csvRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_csv_roundtrip${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_csv_roundtrip", dir)
     load(spark, dir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
       .write.mode("overwrite").option("header", "true").csv(out)
@@ -232,8 +233,7 @@ object Extended {
     * parse + one partial-aggregable rollup; the staged file is the
     * contract (schema-pinned read, no inference job). */
   def corruptJson(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_corrupt_json${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_corrupt_json", dir)
     load(spark, dir, "documents")
       .select(when(col("doc_id") % 13 === 0,
           concat(lit("{\"doc_id\": "), col("doc_id").cast(StringType),
@@ -258,8 +258,7 @@ object Extended {
   }
 
   def jsonRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_json_roundtrip${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_json_roundtrip", dir)
     load(spark, dir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
       .write.mode("overwrite").json(out)
@@ -285,8 +284,7 @@ object Extended {
     * gives lineage for free. The oracle states the same union
     * declaratively over the source table. */
   def schemaEvolutionRead(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_schema_evo${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_schema_evo", dir)
     val orders = load(spark, dir, "orders")
     orders.filter(col("o_orderkey") % 2 === 0)
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -313,12 +311,9 @@ object Extended {
     // managed-table overwrite would die with LOCATION_ALREADY_EXISTS.
     def recreate(name: String): String = {
       spark.sql(s"DROP TABLE IF EXISTS $name")
-      val loc = new java.io.File(s"${sys.props("java.io.tmpdir")}/graft_bucketed_${ProcessHandle.current().pid()}/$name")
-      def rm(f: java.io.File): Unit = {
-        val cs = f.listFiles(); if (cs != null) cs.foreach(rm); f.delete(): Unit
-      }
-      rm(loc)
-      loc.toString
+      val loc = s"${Scratch.tmpPath("graft_bucketed", dir)}/$name"
+      FileUtils.deleteQuietly(new java.io.File(loc)): Unit
+      loc
     }
     load(spark, dir, "customer")
       .write.mode("overwrite")
@@ -357,6 +352,26 @@ object Extended {
       .orderBy(col("o_orderpriority"))
   }
 
+  /** The JDBC URL of a scratch embedded Derby database at a
+    * [[Scratch.tmpPath]] root. The per-process root matters: embedded
+    * Derby allows ONE booting JVM per database, and a concurrent
+    * Verify/test pair must not contend. The root is purged like any
+    * other, after the database is shut down: a booted database holds
+    * its files open, and one deleted while booted cannot be re-created
+    * in the same JVM. (Derby reports a successful shutdown as an
+    * SQLException, which the purge swallows.) */
+  private def derbyUrl(prefix: String, dir: String): String = {
+    // keep derby.log out of the working directory
+    System.setProperty("derby.system.home", sys.props("java.io.tmpdir"))
+    // the ephemeral per-run scratch db needs no crash durability;
+    // without this, Derby fsyncs its transaction log per commit and
+    // the sf1 load spends its time in log syncs, not in Spark
+    System.setProperty("derby.system.durability", "test")
+    lazy val db: String = Scratch.tmpPath(prefix, dir,
+      () => java.sql.DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true"): Unit)
+    s"jdbc:derby:$db;create=true"
+  }
+
   /** q339 — JDBC SINK + SOURCE ROUND-TRIP (the reference's Postgres
     * load path, /root/reference/dags/get_prices_load_postgres.py:59-65,
     * made real): write a typed table through Spark's JDBC sink into an
@@ -375,18 +390,7 @@ object Extended {
     * dialect, type mapping, save modes — is the same production
     * `spark.read/write.jdbc` surface. */
   def jdbcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tmp = sys.props("java.io.tmpdir")
-    // keep derby.log out of the working directory
-    System.setProperty("derby.system.home", tmp)
-    // the ephemeral per-run scratch db needs no crash durability;
-    // without this, Derby fsyncs its transaction log per commit and
-    // the sf1 load spends its time in log syncs, not in Spark
-    System.setProperty("derby.system.durability", "test")
-    // per-process db path: embedded Derby allows ONE booting JVM per
-    // database, and a concurrent Verify/test pair must not contend
-    val url =
-      s"jdbc:derby:$tmp/graft_derby${safe}_${ProcessHandle.current().pid()};create=true"
+    val url = derbyUrl("graft_derby", dir)
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     // fewer, larger executeBatch round-trips per partition connection
@@ -418,13 +422,7 @@ object Extended {
     * them still arrive via the open-ended edge strides, which the
     * oracle equality proves. */
   def jdbcPartitionedScan(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val tmp = sys.props("java.io.tmpdir")
-    System.setProperty("derby.system.home", tmp)
-    // see jdbcRoundtrip: scratch db, log syncs off
-    System.setProperty("derby.system.durability", "test")
-    val url =
-      s"jdbc:derby:$tmp/graft_derby_part${safe}_${ProcessHandle.current().pid()};create=true"
+    val url = derbyUrl("graft_derby_part", dir)
     val props = new java.util.Properties()
     props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
     props.setProperty("batchsize", "10000")
@@ -575,8 +573,7 @@ object Extended {
     * reference's date-filtered serving queries (P3). */
   def partitionPruning(spark: SparkSession, dir: String): DataFrame = {
     val ev = events(spark, dir).withColumn("day", to_date(col("ts")))
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_events_by_day${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_events_by_day", dir)
     ev.repartition(col("day"))
       .write.mode("overwrite").partitionBy("day").parquet(out)
     val minDay = ev.agg(min(col("day"))).head().getDate(0)
@@ -1019,8 +1016,7 @@ object Extended {
     * round-trips: the aggregate over the re-read ORC must equal the
     * direct parquet path bit-for-bit (the oracle runs on parquet). */
   def orcRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_orc_roundtrip${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_orc_roundtrip", dir)
     load(spark, dir, "part")
       .select(col("p_partkey"), col("p_brand"), col("p_retailprice"))
       .write.mode("overwrite").orc(out)
@@ -1076,8 +1072,7 @@ object Extended {
     * rides the explicit DecimalType so the XML text form can't lose
     * double precision. */
   def xmlRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_xml_roundtrip${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_xml_roundtrip", dir)
     load(spark, dir, "part")
       .select(col("p_partkey"), col("p_brand"),
         d2(col("p_retailprice")).as("p_retailprice"))
@@ -1101,8 +1096,7 @@ object Extended {
     * check that guards exactly that assumption is part of the
     * round-trip (a doc with a newline would split and shift counts). */
   def textRoundtrip(spark: SparkSession, dir: String): DataFrame = {
-    val safe = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val out = s"${sys.props("java.io.tmpdir")}/graft_text_roundtrip${safe}_${ProcessHandle.current().pid()}"
+    val out = Scratch.tmpPath("graft_text_roundtrip", dir)
     load(spark, dir, "documents").select(col("text"))
       .write.mode("overwrite").text(out)
     spark.read.text(out)

@@ -189,23 +189,10 @@ object Streams {
     df.sparkSession.table(name)
   }
 
-  /** THE tmp-path rule for every per-run staging, sink and checkpoint
-    * root: deterministic per (prefix, data dir, JVM). The dir's hash
-    * keeps paths whose sanitized forms collide apart (`/x/sf0.1` vs
-    * `/x/sf0_1`); the pid keeps a concurrent Verify/test pair on one
-    * data dir from racing on each other's files. Every root is
-    * registered with [[graft.util.Scratch]], so it is deleted between
-    * queries and at JVM exit; a lazy frame over it ([[runToFiles]])
-    * stays readable until then. */
-  private[graft] def tmpPath(prefix: String, dir: String): String =
-    graft.util.Scratch.track(s"${sys.props("java.io.tmpdir")}/$prefix" +
-      s"${dir.replaceAll("[^A-Za-z0-9]", "_")}_${Integer.toHexString(dir.hashCode)}" +
-      s"_${ProcessHandle.current().pid()}")
-
-  /** [[tmpPath]], wiped first so a rerun prices the full computation
-    * and never resumes an old checkpoint. */
+  /** [[graft.util.Scratch.tmpPath]], wiped first so a rerun prices the
+    * full computation and never resumes an old checkpoint. */
   private def freshTmp(prefix: String, dir: String): String = {
-    val p = tmpPath(prefix, dir)
+    val p = graft.util.Scratch.tmpPath(prefix, dir)
     FileUtils.deleteQuietly(new java.io.File(p)): Unit
     p
   }
@@ -1261,7 +1248,7 @@ object Streams {
     * root is deleted after the run: the pairs live in the memory sink. */
   private def detectPairs(spark: SparkSession, dir: String, name: String)(
       detector: String => DataFrame): DataFrame = {
-    val base = tmpPath(name, dir)
+    val base = graft.util.Scratch.tmpPath(name, dir)
     try runToMemory(detector(base), name, "append").distinct()
     finally FileUtils.deleteQuietly(new java.io.File(base)): Unit
   }

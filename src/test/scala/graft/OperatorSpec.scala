@@ -593,7 +593,7 @@ class OperatorSpec extends AnyFunSuite {
       batch.exceptAll(streamed).isEmpty)
     // the raw match stream lands in the checkpointed FILE sink, not on
     // the driver: the sink directory holds exactly the join's matches
-    val out = s"${streaming.Streams.tmpPath("graft_stream_join", sf)}/out"
+    val out = s"${graft.util.Scratch.tmpPath("graft_stream_join", sf)}/out"
     val sunk = spark.read.parquet(out).count()
     val nMatches = c.join(p, col("cu") === col("pu") &&
         col("pts") >= col("cts") &&

@@ -100,8 +100,7 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     run("q64_partition_pruning").collect() // materializes the partitioned store
     val safe = sf.replaceAll("[^A-Za-z0-9]", "_")
-    val fact = spark.read.parquet(
-      s"${sys.props("java.io.tmpdir")}/graft_events_by_day${safe}_${ProcessHandle.current().pid()}")
+    val fact = spark.read.parquet(graft.util.Scratch.tmpPath("graft_events_by_day", sf))
     val twoDays = fact.select(col("day")).distinct().orderBy(col("day"))
       .limit(2).collect().map(_.getDate(0))
     import spark.implicits._
