@@ -63,14 +63,20 @@ object Bench {
     // Between queries every result is fully materialized, so stale
     // persisted blocks are safe to drop (rationale: GraftSession.dropStaleBlocks)
     def dropStaleBlocks(): Unit = GraftSession.dropStaleBlocks(spark)
-    // One stderr line per sweep with the generated classes Spark
-    // compiled in it: a warm sweep that still compiles is missing the
-    // codegen cache (GraftSession's scale note on its size).
+    // One stderr line per sweep with its fixed costs: the Spark jobs
+    // it started, the processes the JVM forked (a local filesystem that
+    // forks per file shows here) and the generated classes Spark
+    // compiled (a warm sweep that still compiles is missing the codegen
+    // cache; GraftSession's scale notes cover both).
     def sweep[T](label: String)(body: => T): T = {
+      import graft.util.Probes
       val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
       val before = compiles.getCount
-      val r = body
-      System.err.println(s"bench sweep $label: ${compiles.getCount - before} generated classes compiled")
+      val ((r, jobs), forks) = Probes.forks(Probes.allJobs(spark)(body))
+      val byCommand = forks.groupBy(c => new java.io.File(c.trim.split("\\s+").head).getName)
+        .toSeq.sortBy(-_._2.size).map { case (c, n) => s"$c ${n.size}" }.mkString(", ")
+      System.err.println(s"bench sweep $label: ${compiles.getCount - before} generated classes " +
+        s"compiled, $jobs Spark jobs, ${forks.size} processes forked ($byCommand)")
       r
     }
     sweep("warm-up")(names.foreach { n => run(n, SparkEntry.queries(n)); dropStaleBlocks() })

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.{InProcessLocalFileSystem, InProcessLocalFs}
+
 /** One place for the engine's session tuning so Verify, Bench, and the
   * test suites all run the same configuration.
   *
@@ -32,6 +34,23 @@ import org.apache.spark.sql.SparkSession
   *    This engine runs classic sessions and never adds artifacts. On a
   *    Spark Connect server, where sessions add jars, restore the default
   *    (true).
+  *  - fs.file.impl and fs.AbstractFileSystem.file.impl name the
+  *    in-process local filesystem (graft/util/LocalFs.scala): without
+  *    the native Hadoop library the stock one forks a `chmod` per file
+  *    or directory it creates and a `readlink` per link-status probe,
+  *    several per atomic checkpoint rename — ~155 forks of a few ms
+  *    each per bench pass, nearly all from q40's offset, commit and
+  *    state-store files. Checksums, `.crc` files and `FileContext`
+  *    renames stay Hadoop's own. The settings cover the `file` scheme
+  *    only: hdfs or s3a paths keep their own filesystems, and a host
+  *    with the native library loses nothing by them.
+  *  - the status store keeps at most 100 jobs and stages, 1000 tasks
+  *    and 50 SQL executions (ui.retained*): the UI is off and nothing
+  *    here reads the store, which at Spark's defaults (1000 jobs and
+  *    stages, 100,000 tasks, 1000 executions) grows with every query
+  *    until those far larger caps. A long-lived serving driver must
+  *    not grow with the requests it serves; drop the caps if an A/B
+  *    shows them slowing a serve.
   *  - codegen.cache.maxEntries is [[CodegenCacheEntries]]: the default
   *    (100) is smaller than the five bench queries' ~127 classes, and LRU
   *    over a cyclic scan evicts each class before its next use. A cold
@@ -66,6 +85,12 @@ object GraftSession {
         Int.MaxValue.toString)
       .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.hadoop.fs.file.impl", classOf[InProcessLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[InProcessLocalFs].getName)
+      .config("spark.ui.retainedJobs", "100")
+      .config("spark.ui.retainedStages", "100")
+      .config("spark.ui.retainedTasks", "1000")
+      .config("spark.sql.ui.retainedExecutions", "50")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")

@@ -1,6 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -24,7 +30,55 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. For a
+    * single file, Spark infers the schema with a one-task job that reads
+    * the file's footer; here the driver reads that footer itself and
+    * applies Spark's own one-file rule (`readSchemaFromFooter`: the
+    * Spark schema a Spark writer stored in the footer's key-value
+    * metadata, else the parquet schema converted under the session's
+    * SQL conf, `nanosAsLong` included). The scan then gets the schema
+    * up front, as `spark.read.schema(s).parquet(path)`.
+    *
+    * Nothing is cached: every call reads the footer again, so a table
+    * rewritten between two calls is read with its new schema, at the
+    * cost of one file open on the driver. A directory (a multi-file
+    * table, a partitioned store) keeps Spark's inference, whose file
+    * choice and partition discovery this does not repeat. On an object
+    * store the driver makes the footer reads the inference task would
+    * have made, so the saving there is the task and its scheduling
+    * round trip, not the reads. */
+  def read(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val file =
+      try Some(p.getFileSystem(conf).getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file.fold(spark.read.parquet(path)) { st =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
+
+  /** The schema parquet reads a frame of `schema` back with: every
+    * field, array element and map value nullable, as Spark marks a file
+    * source's columns. A stream over files the engine just wrote from a
+    * frame takes this instead of inferring it from the files. */
+  def readBack(schema: StructType): StructType = {
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    nullable(schema).asInstanceOf[StructType]
+  }
 
   /** Round-robin repartition to the cluster's parallelism. The corpus
     * stores each table as ONE parquet file with ONE row group, which

@@ -1653,7 +1653,7 @@ object Pipeline {
     // text/audio ones (optimization r16, guide §1.2: don't compute
     // things you throw away — measured 4.4 s at sf0.1).
     bandSorted(imageBandsFor(
-        spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id")),
+        load(spark, dir, "documents").select(col("doc_id")),
         WideRadius7))
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$ix/image_bands")

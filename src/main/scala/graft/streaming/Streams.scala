@@ -6,6 +6,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
+import org.apache.spark.sql.types.StructType
 import graft.Tables._
 
 /** Structured Streaming coverage (SURVEY.md §2.10 — the reference
@@ -36,10 +37,9 @@ object Streams {
     * additionally surfaces `ts` (whatever its physical parquet type —
     * see Tables.tsToNtz) as a true TIMESTAMP (session TZ pinned UTC),
     * the form watermarks require. */
-  private def eventsStream(spark: SparkSession, dir: String,
+  private[graft] def eventsStream(spark: SparkSession, dir: String,
       withTs: Boolean = false): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val src = spark.readStream.schema(schema)
+    val src = spark.readStream.schema(load(spark, dir, "events").schema)
       .option("pathGlobFilter", "events.parquet")
       .parquet(dir)
     if (withTs) {
@@ -331,7 +331,7 @@ object Streams {
     * any state store growth. Aggregated per nation in complete mode
     * (bounded: one row per dimension key); == the batch twin oracle. */
   def streamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val dim = spark.read.parquet(s"$dir/nation.parquet")
+    val dim = load(spark, dir, "nation")
       .select(col("n_nationkey"), col("n_name"))
     val agg = eventsStream(spark, dir)
       // sign-of-dividend % matches the oracle's % for ALL inputs;
@@ -826,6 +826,12 @@ object Streams {
     }
   }
 
+  /** q271's staged input: one row per event with its TIMESTAMP and
+    * epoch micros, written once and streamed back by [[streamTimerFlush]]. */
+  private[graft] def timerFlushInput(spark: SparkSession, dir: String): DataFrame =
+    events(spark, dir).select(col("user_id"), col("ts").cast("timestamp").as("ts"),
+      expr("unix_micros(cast(ts as timestamp))").as("us"))
+
   /** INACTIVITY-TRIGGERED FLUSH via event-time timers
     * ([[QuietUserProc]]): one data micro-batch registers each user's
     * quiet-point timer; the final watermark (max event time − 1 h,
@@ -839,13 +845,10 @@ object Streams {
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
     val src = s"${freshTmp("graft_tws_timer", dir)}/src"
-    events(spark, dir)
-      .select(col("user_id"), col("ts").cast("timestamp").as("ts"),
-        expr("unix_micros(cast(ts as timestamp))").as("us"))
-      .write.mode("overwrite").parquet(src)
-    val schema = spark.read.parquet(src).schema
+    val staged = timerFlushInput(spark, dir)
+    staged.write.mode("overwrite").parquet(src)
     runTws(spark, "graft_tws_timer") {
-      spark.readStream.schema(schema).parquet(src)
+      spark.readStream.schema(readBack(staged.schema)).parquet(src)
         .withWatermark("ts", "1 hour")
         .as[TwsTimerIn]
         .groupByKey(_.user_id)
@@ -868,7 +871,7 @@ object Streams {
     * the corpus. == the per-source signature the batch q275 oracle
     * machinery computes (one oracle rule, two execution modes). */
   def streamSourceSketch(spark: SparkSession, dir: String): DataFrame = {
-    val agg = splitStream(spark.read.parquet(s"$dir/documents.parquet")
+    val agg = splitStream(load(spark, dir, "documents")
         .select(col("doc_id"), col("source"), col("text")),
         freshTmp("graft_src_sketch", dir))
       .select(col("source"),
@@ -909,19 +912,21 @@ object Streams {
     * BATCHES are shifted one forward instead, see lshPairsTtlStream). */
   private val CanaryShift = 1000000000L
 
-  /** Stream the parquet files under `src` back one file per
-    * micro-batch, oldest mtime first. */
-  private def fileStream(spark: SparkSession, src: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(src).schema)
+  /** Stream the parquet files under `src`, written from a frame of
+    * `schema`, back one file per micro-batch, oldest mtime first. The
+    * writer's schema in its read-back form stands in for inferring it
+    * from the files, which would cost a job per stream. */
+  private def fileStream(spark: SparkSession, src: String, schema: StructType): DataFrame =
+    spark.readStream.schema(readBack(schema))
       .option("maxFilesPerTrigger", "1").parquet(src)
 
   /** Stage `df` as a 4-file parquet split under `base/src` and stream it
     * back with maxFilesPerTrigger=1, so a stateful run genuinely
     * carries state across four micro-batches instead of one degenerate
     * batch (q188/q198/q199/q228/q278). */
-  private def splitStream(df: DataFrame, base: String): DataFrame = {
+  private[graft] def splitStream(df: DataFrame, base: String): DataFrame = {
     df.repartition(4).write.mode("overwrite").parquet(s"$base/src")
-    fileStream(df.sparkSession, s"$base/src")
+    fileStream(df.sparkSession, s"$base/src", df.schema)
   }
 
   /** Stage `df` (carrying an int `batch` column in 0 until 4) as ONE
@@ -942,7 +947,7 @@ object Streams {
       base: String): DataFrame = {
     FileUtils.deleteQuietly(new java.io.File(base)): Unit
     df.write.mode("overwrite").parquet(s"$base/all")
-    val staged = spark.read.parquet(s"$base/all")
+    val staged = spark.read.schema(readBack(df.schema)).parquet(s"$base/all")
     new java.io.File(s"$base/src").mkdirs(): Unit
     val mtime0 = new java.io.File(base).lastModified()
     // the batch cuts are independent single-file jobs off the same
@@ -964,7 +969,7 @@ object Streams {
       require(dst.setLastModified(mtime0 + k * 60000L),
         s"cannot stamp mtime for batch $k")
     }})
-    fileStream(spark, s"$base/src")
+    fileStream(spark, s"$base/src", df.schema)
   }
 
   /** THE one stateful pairing core behind every streaming near-dup
@@ -1067,7 +1072,7 @@ object Streams {
       base: String, horizon: String,
       plantCanaries: Boolean = false): DataFrame = {
     import spark.implicits._
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val docs = load(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
       .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int"))
     val stamped =
@@ -1179,7 +1184,7 @@ object Streams {
   /** The delta slice every index-seeded detector streams (the shared
     * doc_id % 10 == 0 rule). */
   private[graft] def deltaDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/documents.parquet")
+    load(spark, dir, "documents")
       .filter(col("doc_id") % 10 === 0)
 
   /** The INDEX-SEEDED streaming TEXT detector — q384's pattern carried
@@ -1269,7 +1274,7 @@ object Streams {
       .filter(col("doc_a") % 97 === 0 &&
         col("doc_b") === col("doc_a") + CanaryShift)
       .agg(count(lit(1)).as("n_detected"))
-    spark.read.parquet(s"$dir/documents.parquet")
+    load(spark, dir, "documents")
       .filter(col("doc_id") % 97 === 0)
       .agg(count(lit(1)).as("n_planted"))
       .crossJoin(broadcast(det))

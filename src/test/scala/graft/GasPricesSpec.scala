@@ -2,7 +2,6 @@ package graft
 
 import java.time.LocalDate
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -194,35 +193,8 @@ class GasPricesSpec extends AnyFunSuite {
     assert(back.count() === 6)
   }
 
-  /** Spark jobs `body` starts, counted by a listener on a job group of
-    * its own. A fence job in a second group runs after `body`; the
-    * listener bus delivers events in order, so once the fence's start
-    * is seen every job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"gas-jobs-${java.util.UUID.randomUUID()}"
-    val fence = s"$group-fence"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val fenced = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
-          case Some(`group`) => jobs.incrementAndGet(): Unit
-          case Some(`fence`) => fenced.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(fenced.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "the fence job's start was never delivered")
-      jobs.get
-    } finally sc.removeSparkListener(listener)
-  }
+  /** Spark jobs `body` starts (the shared counter, [[graft.util.Probes.jobs]]). */
+  private def jobsOf(body: => Unit): Int = graft.util.Probes.jobs(spark)(body)._2
 
   test("a serve over a 36-day store runs 2 jobs, a daily load 2 with one file per date") {
     import spark.implicits._
