@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.util.Json
 
 /** Benchmark entry point (driver-run per round → BENCH_r{N}.json).
   *
@@ -46,13 +47,6 @@ object Bench {
         Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")
       }
     }
-
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"
-        case c => c.toString
-      } + "\""
 
     // Optional comma-separated filter for local iteration, e.g.
     // SPARK_GRAFT_QUERIES=q01_pricing_summary,q33_ngram_jaccard
@@ -157,10 +151,10 @@ object Bench {
     // decimal separator as a comma and corrupt the JSON line.
     def r3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", v)
     val qs = results.map {
-      case (k, Right(v)) => s"${jstr(k)}:${r3(v)}"
-      case (k, Left(_)) => s"${jstr(k)}:-1.0" // sentinel, excluded from total
+      case (k, Right(v)) => s"${Json.str(k)}:${r3(v)}"
+      case (k, Left(_)) => s"${Json.str(k)}:-1.0" // sentinel, excluded from total
     }.mkString("{", ",", "}")
-    val failed = results.collect { case (k, Left(e)) => s"${jstr(k)}:${jstr(e)}" }
+    val failed = results.collect { case (k, Left(e)) => s"${Json.str(k)}:${Json.str(e)}" }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, Right(v)) => v }.sum
     val nFail = results.count(_._2.isLeft)
@@ -177,12 +171,12 @@ object Bench {
     val wfJson = windowFactor.fold("")(wf => s""""window_factor":${r3(wf)},""")
     val anchorJson =
       if (anchorScale && anchorMissing.nonEmpty)
-        s""""anchors":null,"anchors_error":${jstr(
+        s""""anchors":null,"anchors_error":${Json.str(
           s"unresolved anchor queries: ${anchorMissing.mkString(",")} — " +
             "re-pin Bench.anchorRef")},"""
       else if (windowFactor.isEmpty) ""
       else {
-        val am = anchorMins.map { case (n, v) => s"${jstr(n)}:${r3(v)}" }
+        val am = anchorMins.map { case (n, v) => s"${Json.str(n)}:${r3(v)}" }
           .mkString("{", ",", "}")
         s""""anchors":$am,$wfJson"""
       }

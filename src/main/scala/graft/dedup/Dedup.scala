@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.Banding
 
 /** Deduplication operators for LLM-training-data pipelines (north-star
   * extension, BASELINE.json): exact dedup, MinHash+LSH near-dup pairs,
@@ -83,55 +84,43 @@ object Dedup {
       call_function("minhash_sig", shingleHashes(col("text"), mod = true))
         .as("sig"))
 
-  /** Band-blocked candidate pairs: self-join of (doc_id, band, bkey,
-    * payload) on the band key with doc_id ordering, deduped — the
-    * shared skeleton of MinHash LSH (q31) and SimHash banding (q79).
-    * The payload column rides along as <payload>_a/<payload>_b for the
-    * verification step. */
-  private def bandedPairs(bands: DataFrame, payload: String): DataFrame = {
+  /** LSH band keys of a (doc_id, sig) frame — ONE definition of the
+    * band split serving q31's self-join, q285's delta-vs-corpus probe,
+    * and the streaming detectors (all of which must never fork). Extra
+    * input columns (e.g. the streaming form's watermark-tagged event
+    * time) pass through untouched. */
+  private[graft] def bandKeys(sigs: DataFrame): DataFrame =
+    Banding.banded(sigs, array((0 until BANDS).map { b =>
+      struct(lit(b).as("band"),
+        concat_ws(",", (0 until R).map(r =>
+          element_at(col("sig"), b * R + r + 1).cast(StringType)): _*).as("bkey"))
+    }: _*))
+
+  /** MinHash + LSH near-duplicate pairs of a (doc_id, sig) frame — the
+    * detector q31 serves and q335's canaries audit: band-key self-join
+    * with doc_id ordering, deduped, then the signature-estimated
+    * Jaccard >= 0.5 confirms. The band join is the scale path — pair
+    * generation never touches non-colliding docs. */
+  private def lshPairs(sigs: DataFrame): DataFrame = {
+    val bands = bandKeys(sigs)
     val x = bands.alias("x")
     val y = bands.alias("y")
     x.join(y, col("x.band") === col("y.band") &&
         col("x.bkey") === col("y.bkey") &&
         col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        col(s"x.$payload").as(s"${payload}_a"),
-        col(s"y.$payload").as(s"${payload}_b"))
+        col("x.sig").as("sig_a"), col("y.sig").as("sig_b"))
       .distinct()
-  }
-
-  /** MinHash + LSH near-duplicate pairs: band-key equi-join produces
-    * candidates; the signature-estimated Jaccard >= 0.5 confirms. The
-    * band join is the scale path — pair generation never touches
-    * non-colliding docs. */
-  /** LSH band keys of a (doc_id, sig) frame — ONE definition of the
-    * band split serving q31's self-join, q285's delta-vs-corpus probe,
-    * and the streaming detectors (all of which must never fork). Extra
-    * input columns (e.g. the streaming form's watermark-tagged event
-    * time) pass through untouched. */
-  private[graft] def bandKeys(sigs: DataFrame): DataFrame = {
-    val bandStructs = array((0 until BANDS).map { b =>
-      struct(lit(b).as("band"),
-        concat_ws(",", (0 until R).map(r =>
-          element_at(col("sig"), b * R + r + 1).cast(StringType)): _*).as("bkey"))
-    }: _*)
-    val keep = sigs.columns.map(col).toSeq
-    sigs.select(keep :+ explode(bandStructs).as("bk"): _*)
-      .select(keep :+ col("bk.band").as("band") :+
-        col("bk.bkey").as("bkey"): _*)
-  }
-
-  def minhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = withSignature(spread(load(spark, dir, "documents")))
-    val bands = bandKeys(sigs)
-    bandedPairs(bands, "sig")
       .withColumn("est_jaccard",
         size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
           m => m)).cast(DoubleType) / lit(K.toDouble))
       .filter(col("est_jaccard") >= 0.5)
+  }
+
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+    lshPairs(withSignature(spread(load(spark, dir, "documents"))))
       .select(col("doc_a"), col("doc_b"), col("est_jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** 32-bit SimHash per document over tokens (with multiplicity): bit b
     * is set when the signed sum of token-hash bit b is positive. One
@@ -166,22 +155,13 @@ object Dedup {
     * hamming-space counterpart of q53's prefix filter — and the
     * pruning that q34's continuous cosine threshold provably cannot
     * have. */
-  def simhashNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val fp = simhashed(spark, dir)
-    val bandStructs = array((0 until 4).map { b =>
-      struct(lit(b).as("band"),
-        shiftrightunsigned(col("sh"), b * 8).bitwiseAND(lit(255L)).as("bkey"))
-    }: _*)
-    val bands = fp.select(col("doc_id"), col("sh"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("sh"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
-    bandedPairs(bands, "sh")
-      .withColumn("hamming",
-        bit_count(col("sh_a").bitwiseXOR(col("sh_b"))).cast(LongType))
-      .filter(col("hamming") <= 3)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
+  def simhashNearDup(spark: SparkSession, dir: String): DataFrame =
+    Banding.hammingPairs(
+      Banding.banded(simhashed(spark, dir),
+        Banding.multiBands(Seq(col("sh")), 4, 8)),
+      Seq("sh"), 4, 3)
+      .select(col("doc_a"), col("doc_b"), col("dist").cast(LongType).as("hamming"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** Trigram-shingle Jaccard >= 0.5 via inverted-index self-join on
     * 56-bit shingle hashes: explode hashed shingles, equi-join on the
@@ -1538,33 +1518,44 @@ object Dedup {
     * arrays never ride the band shuffle. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = spread(load(spark, dir, "documents"))
-    val isDelta = col("doc_id") % 10 === 0
-    val bands = bandKeys(withSignature(docs)).select(
-      col("doc_id"), col("band"), col("bkey"))
-    val cand = bands.filter(isDelta).alias("d")
-      .join(bands.filter(!isDelta).alias("c"),
+    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
+    textProbeAgainst(docs.filter(col("doc_id") % 10 === 0),
+      textBandRows(corpus), shingleSets(corpus))
+  }
+
+  /** (doc_id, band, bkey) LSH band rows of an arbitrary (doc_id, text)
+    * frame — the corpus-handle form of the probe's band side: the
+    * inline probe computes it from text, the index-backed ingest
+    * writer READS it from [[saveLshIndex]]'s parquet. One definition
+    * with [[bandKeys]]/[[withSignature]], so the two can never fork. */
+  private[graft] def textBandRows(docs: DataFrame): DataFrame =
+    bandKeys(withSignature(docs))
+      .select(col("doc_id"), col("band"), col("bkey"))
+
+  /** (doc_id, hx, n) shingle-hash sets of an arbitrary (doc_id, text)
+    * frame — the probe's exact-verify side, for the batch and for the
+    * corpus alike. */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), shingleHashes(col("text"), mod = false).as("hx"))
+      .withColumn("n", size(col("hx")).cast(LongType))
+
+  /** THE text probe: a (doc_id, text) batch against a corpus handed in
+    * as (band rows, shingle sets) — computed inline by q285, read from
+    * [[saveLshIndex]]'s parquet by q331 and the index-backed ingest
+    * writer. The batch side is always computed fresh (O(batch)).
+    * Candidates are verified with the exact shingle-set Jaccard >= 0.5,
+    * and every batch doc gets a verdict row: match count, best match
+    * (highest Jaccard, doc-id tie-break), or a clean (0, NULL, NULL). */
+  private[graft] def textProbeAgainst(batch: DataFrame,
+      corpusBands: DataFrame, corpusSets: DataFrame): DataFrame = {
+    val cand = textBandRows(batch).alias("d")
+      .join(corpusBands.alias("c"),
         col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
       .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"))
       .distinct()
-    probeVerdict(cand, probeSets(docs, isDelta), probeSets(docs, !isDelta),
-      docs.select(col("doc_id").as("new_doc")).filter(col("new_doc") % 10 === 0))
-  }
-
-  /** (doc_id, shingle-hash set, set size) for the probe's exact verify
-    * — one rule for both the inline (q285) and persisted (q331)
-    * forms. */
-  private def probeSets(docs: DataFrame, pred: Column): DataFrame =
-    docs.filter(pred).select(col("doc_id"),
-      shingleHashes(col("text"), mod = false).as("hx"))
-      .withColumn("n", size(col("hx")).cast(LongType))
-
-  /** The probe's exact-verify + per-delta-doc verdict tail, shared by
-    * q285 and q331 verbatim (band candidates in, verdict rows out). */
-  private def probeVerdict(cand: DataFrame, deltaSets: DataFrame,
-      corpusSets: DataFrame, deltaIds: DataFrame): DataFrame = {
     val ver = cand
-      .join(deltaSets.select(col("doc_id").as("new_doc"), col("hx").as("ha"),
-        col("n").as("na")), "new_doc")
+      .join(shingleSets(batch).select(col("doc_id").as("new_doc"),
+        col("hx").as("ha"), col("n").as("na")), "new_doc")
       .join(corpusSets.select(col("doc_id").as("match_doc"), col("hx").as("hb"),
         col("n").as("nb")), "match_doc")
       .withColumn("c", size(array_intersect(col("ha"), col("hb")))
@@ -1581,51 +1572,11 @@ object Dedup {
       .filter(col("rn") === 1)
       .select(col("new_doc"), col("n_matches"),
         col("match_doc").as("best_match"), col("jaccard").as("best_jaccard"))
-    deltaIds.join(best, Seq("new_doc"), "left")
+    batch.select(col("doc_id").as("new_doc")).join(best, Seq("new_doc"), "left")
       .select(col("new_doc"),
         coalesce(col("n_matches"), lit(0L)).as("n_matches"),
         col("best_match"), col("best_jaccard"))
       .orderBy(col("new_doc"))
-  }
-
-  /** The q285 probe over ARBITRARY (doc_id, text) frames — batch vs
-    * corpus — the text handle the incremental ingest writer
-    * ([[graft.ops.Pipeline]] `ingestBatch`) composes: same signature,
-    * band-key, exact-verify and verdict machinery VERBATIM, with the
-    * corpus side a persisted artifact instead of a table slice. */
-  private[graft] def textProbe(batch: DataFrame,
-      corpus: DataFrame): DataFrame =
-    textProbeAgainst(batch, textBandRows(corpus), shingleSets(corpus))
-
-  /** (doc_id, band, bkey) LSH band rows of an arbitrary (doc_id, text)
-    * frame — the corpus-handle form of the probe's band side: the
-    * inline probe computes it from text, the index-backed ingest
-    * writer READS it from [[saveLshIndex]]'s parquet. One definition
-    * with [[bandKeys]]/[[withSignature]], so the two can never fork. */
-  private[graft] def textBandRows(docs: DataFrame): DataFrame =
-    bandKeys(withSignature(docs))
-      .select(col("doc_id"), col("band"), col("bkey"))
-
-  /** (doc_id, hx, n) shingle-hash sets of an arbitrary (doc_id, text)
-    * frame — the corpus-handle form of the probe's verify side. */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame =
-    probeSets(docs, lit(true))
-
-  /** The q285 probe with the CORPUS SIDE HANDED IN as (band rows,
-    * shingle sets) — computed inline by [[textProbe]], read from the
-    * persisted index by the index-backed ingest writer. The batch side
-    * is always computed fresh (O(batch)); verdict machinery is
-    * [[probeVerdict]] verbatim. */
-  private[graft] def textProbeAgainst(batch: DataFrame,
-      corpusBands: DataFrame, corpusSets: DataFrame): DataFrame = {
-    val bBands = textBandRows(batch)
-    val cand = bBands.alias("d")
-      .join(corpusBands.alias("c"),
-        col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
-      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"))
-      .distinct()
-    probeVerdict(cand, probeSets(batch, lit(true)), corpusSets,
-      batch.select(col("doc_id").as("new_doc")))
   }
 
   /** Persist the corpus side of the q285 probe as an on-disk index:
@@ -1658,21 +1609,11 @@ object Dedup {
     * every round. Band files are partition-pruned by the probe's
     * band column; shingle sets are joined only for candidates. */
   def incrementalDedupFromIndex(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame = {
-    val docs = spread(load(spark, dir, "documents"))
-    val isDelta = col("doc_id") % 10 === 0
-    val deltaBands = bandKeys(withSignature(docs.filter(isDelta)))
-      .select(col("doc_id"), col("band"), col("bkey"))
-    val corpusBands = spark.read.parquet(s"$indexDir/bands")
-    val cand = deltaBands.alias("d")
-      .join(corpusBands.alias("c"),
-        col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
-      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"))
-      .distinct()
-    probeVerdict(cand, probeSets(docs, isDelta),
-      spark.read.parquet(s"$indexDir/shingles"),
-      docs.select(col("doc_id").as("new_doc")).filter(col("new_doc") % 10 === 0))
-  }
+      indexDir: String): DataFrame =
+    textProbeAgainst(
+      spread(load(spark, dir, "documents")).filter(col("doc_id") % 10 === 0),
+      spark.read.parquet(s"$indexDir/bands"),
+      spark.read.parquet(s"$indexDir/shingles"))
 
   /** q331's registered form: build the index fresh in a temp dir,
     * probe from it. */
@@ -1744,10 +1685,7 @@ object Dedup {
             .as("bkey"))
       }
     }: _*)
-    val bands = sigs.select(col("doc_id"), explode(bandStructs).as("bk"))
-      .select(col("doc_id"), col("bk.config").as("config"),
-        col("bk.n_bands").as("n_bands"), col("bk.band").as("band"),
-        col("bk.bkey").as("bkey"))
+    val bands = Banding.banded(sigs, bandStructs)
     // referenced twice below (candidate count + hit probe) — the
     // banded self-join over all five configs is the dominant subtree;
     // materialize it ONCE like `exact` (optimization r16)
@@ -2005,12 +1943,7 @@ object Dedup {
     val planted = docs.filter(col("doc_id") % 97 === 0)
       .select((col("doc_id") + Shift).as("doc_id"),
         concat(col("text"), lit(" canaryx")).as("text"))
-    val pairs = bandedPairs(bandKeys(withSignature(docs.unionByName(planted))),
-        "sig")
-      .withColumn("est_jaccard",
-        size(filter(zip_with(col("sig_a"), col("sig_b"), (a, b) => a === b),
-          m => m)).cast(DoubleType) / lit(K.toDouble))
-      .filter(col("est_jaccard") >= 0.5)
+    val pairs = lshPairs(withSignature(docs.unionByName(planted)))
     val det = pairs
       .filter(col("doc_a") % 97 === 0 && col("doc_b") === col("doc_a") + Shift)
       .agg(count(lit(1)).as("n_detected"))

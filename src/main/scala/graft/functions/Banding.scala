@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** PIGEONHOLE BANDING over fixed-width integer fingerprints — the one
@@ -21,78 +21,81 @@ import org.apache.spark.sql.functions._
   * Scale shape: the only thing that ever shuffles is the exploded
   * (band, bkey, hash) row — ~24 bytes — keyed by (band, bkey), which
   * is also the state-partitioning key of the streaming form.
+  *
+  * [[multiBands]] builds the band array, [[banded]] fans rows out to
+  * it, and [[hammingPairs]] is the self-join every batch detector
+  * runs.
   */
 object Banding {
 
-  /** The band fan-out column: an array of `nBands` structs
-    * `(band: Int, bkey: Long)` where `bkey` is the `bandBits`-wide
-    * slice of `hash` starting at bit `band * bandBits`. Callers
-    * `explode` it and equi-join on (band, bkey). */
-  def hashBands(hash: Column, nBands: Int, bandBits: Int): Column = {
-    require(nBands * bandBits <= 64, "bands must fit a 64-bit hash")
-    val mask = if (bandBits == 64) -1L else (1L << bandBits) - 1L
-    array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(hash, b * bandBits).bitwiseAND(lit(mask)).as("bkey"))
-    }: _*)
-  }
-
-  /** TWO-HASH pigeonhole banding over a 128-bit fingerprint carried as
-    * two 64-bit columns: band b's key concatenates the `bitsEach`-wide
-    * slice b of BOTH hashes (`bkey = slice_b(h1) | slice_b(h2) <<
-    * bitsEach`). The pigeonhole argument is unchanged — a pair within
-    * Hamming distance `nBands − 1` over the CONCATENATED 2·64 bits
-    * dirties at most `nBands − 1` bands, so at least one band matches
-    * exactly in both halves — but each band now carries
-    * `2^(2·bitsEach)` buckets instead of `2^bitsEach`: at 8×8 per
-    * hash, 65 536 buckets/band vs 256, cutting random band collisions
-    * ~256× at the SAME catchable radius. This is the q368→q372 scale
-    * lever (SCALE.md §14): widen the fingerprint, not the radius —
-    * double the discriminating bits per band while the radius the
-    * banding must catch stays ≤ nBands − 1, provided near-dup edits
-    * flip few bits of h2 (q372's quadrant-contrast hash flips NONE for
-    * the planted single-cell edits). */
-  def pairedBands(h1: Column, h2: Column, nBands: Int,
-      bitsEach: Int): Column = {
-    require(nBands * bitsEach <= 64, "band slices must fit 64-bit hashes")
-    require(2 * bitsEach < 64, "the combined band key must fit a long")
-    val mask = (1L << bitsEach) - 1L
-    array((0 until nBands).map { b =>
-      struct(lit(b).as("band"),
-        shiftright(h1, b * bitsEach).bitwiseAND(lit(mask))
-          .bitwiseOR(shiftleft(
-            shiftright(h2, b * bitsEach).bitwiseAND(lit(mask)), bitsEach))
-          .as("bkey"))
-    }: _*)
-  }
-
-  /** N-HASH pigeonhole banding — [[pairedBands]] generalized to a
-    * fingerprint carried as ANY number of 64-bit columns: band b's key
-    * concatenates slice b of every hash word
-    * (`bkey = Σ_i slice_b(h_i) << (i·bitsEach)`). Pigeonhole over the
-    * concatenated `hashes.length · 64` bits is unchanged — a pair
-    * within Hamming distance `nBands − 1` still matches at least one
-    * band exactly in EVERY word — while each band carries
-    * `2^(hashes.length · bitsEach)` buckets. This is SCALE.md §18's
-    * "widen h2" lever taken to its conclusion: with four words at 8×8
-    * slices every band carries 32 key bits, so even a band family
-    * whose h1 slice is structurally degenerate (q368's dark bottom
-    * row) keeps ≥ 21 discriminating bits from the other words and the
-    * residual collision term drops from n²/256 to ~n²/2²². The radius
-    * guarantee needs near-dup edits to flip few bits across ALL words
-    * — contrast-style h2..h4 (q375's quadrant hashes) flip NONE for a
-    * base-level edit, so planted distances live entirely in h1. */
+  /** Pigeonhole band fan-out over a fingerprint carried as one or more
+    * 64-bit columns: an array of `nBands` structs `(band: Int, bkey:
+    * Long)`, where band b's key concatenates the `bitsEach`-wide slice
+    * b of every hash word (`bkey = Σ_i slice_b(h_i) << (i·bitsEach)`).
+    * A pair within Hamming distance `nBands − 1` over the concatenated
+    * `hashes.length · 64` bits still matches at least one band exactly
+    * in EVERY word, while each band carries `2^(hashes.length ·
+    * bitsEach)` buckets: a second word at the same radius cuts random
+    * band collisions 2^bitsEach-fold (q368 → q372, SCALE.md §14), and
+    * four words at 8×8 leave even a structurally dark h1 slice ≥ 21
+    * discriminating bits (q375, SCALE.md §18). The radius guarantee
+    * needs near-dup edits to flip few bits across ALL words — q372's
+    * and q375's contrast words flip none for a base-level edit. */
   def multiBands(hashes: Seq[Column], nBands: Int, bitsEach: Int): Column = {
     require(hashes.nonEmpty, "at least one hash word")
     require(nBands * bitsEach <= 64, "band slices must fit 64-bit hashes")
     require(hashes.length * bitsEach < 64, "the combined key must fit a long")
     val mask = (1L << bitsEach) - 1L
     array((0 until nBands).map { b =>
+      val slices = hashes.map(h => shiftright(h, b * bitsEach).bitwiseAND(lit(mask)))
       struct(lit(b).as("band"),
-        hashes.zipWithIndex.map { case (h, i) =>
-          shiftleft(shiftright(h, b * bitsEach).bitwiseAND(lit(mask)),
-            i * bitsEach): Column
+        slices.zipWithIndex.map { case (s, i) =>
+          if (i == 0) s else shiftleft(s, i * bitsEach)
         }.reduce(_.bitwiseOR(_)).as("bkey"))
     }: _*)
+  }
+
+  /** `df` with one row per band: every input column plus the fields of
+    * the `bands` array's structs — `band` and `bkey` from [[multiBands]]
+    * or the text LSH split, and `family` first from [[taggedBands]].
+    * The fan-out behind every band join, band index and band audit. */
+  def banded(df: DataFrame, bands: Column): DataFrame = {
+    val keep = df.columns.map(col).toSeq
+    df.select(keep :+ explode(bands).as("bk"): _*)
+      .select(keep :+ col("bk.*"): _*)
+  }
+
+  /** Several band families in one array, each `(band, bkey)` struct
+    * tagged with its family name — what the candidate audits (q373,
+    * q376) fan out with [[banded]] to count every family's buckets in
+    * one pass over the hashes. */
+  def taggedBands(families: Seq[(String, Column)]): Column =
+    concat(families.map { case (family, bands) =>
+      transform(bands, b => struct(lit(family).as("family"),
+        b.getField("band").as("band"), b.getField("bkey").as("bkey")))
+    }: _*)
+
+  /** The Hamming near-dup self-join over [[banded]] rows `(doc_id,
+    * hashCols..., band, bkey)`: every pair `doc_a < doc_b` sharing a
+    * band whose summed `bit_count` of the xor over the hash words is
+    * at most `maxDist`, as `(doc_a, doc_b, dist)`. Lossless only while
+    * `maxDist <= nBands - 1` (the pigeonhole bound), which it checks. */
+  def hammingPairs(bands: DataFrame, hashCols: Seq[String], nBands: Int,
+      maxDist: Int): DataFrame = {
+    require(maxDist <= nBands - 1,
+      s"$nBands-band banding is lossless only for dist <= ${nBands - 1}")
+    val x = bands.alias("x")
+    val y = bands.alias("y")
+    x.join(y, col("x.band") === col("y.band") &&
+        col("x.bkey") === col("y.bkey") &&
+        col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
+        hashCols.map(h => bit_count(col(s"x.$h").bitwiseXOR(col(s"y.$h"))))
+          .reduce(_ + _).as("dist"))
+      // distance-filter BEFORE the distinct: candidates are pipelined
+      // join output (8x8 bands collide ~256x more often than 4x16), and
+      // only the few true near-pairs should reach the dedup shuffle
+      .filter(col("dist") <= maxDist)
+      .distinct()
   }
 }

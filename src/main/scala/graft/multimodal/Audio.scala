@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.Banding
 
 /** Audio-column plumbing for training-data pipelines (north-star
   * extension; completes the multimodal story next to the image path in
@@ -329,6 +330,36 @@ object Audio {
 
   case class AudioFp(doc_id: Long, fp: Long)
 
+  /** (doc_id, fp, band, bkey) rows for the decoded corpus — the banded
+    * acoustic fingerprints shared by the self-join detector (q362) and
+    * the incremental probe (q381). Undecodable clips are dropped
+    * before banding (see [[audioNearDup]]'s note). */
+  private def fpBands(spark: SparkSession, dir: String,
+      keep: org.apache.spark.sql.Column = lit(true)): DataFrame =
+    audioBandsOf(load(spark, dir, "documents").filter(keep))
+
+  /** Banded acoustic-fingerprint rows of an arbitrary doc-id frame —
+    * the probe-side handle the incremental ingest writer composes
+    * (the gated q362/q381 machinery end to end). */
+  private[graft] def audioBandsOf(ids: DataFrame): DataFrame =
+    Banding.banded(fpOf(generatedAudioOf(ids)).toDF(),
+      Banding.multiBands(Seq(col("fp")), 4, 16))
+
+  /** The decode→fingerprint kernel over an arbitrary clip Dataset —
+    * factored so the STREAMING detector (q386) can run the identical
+    * stateless typed map per micro-batch (the [[Multimodal.aHash]]
+    * pattern): payload bytes never outlive the map; only (doc_id, fp)
+    * survives. Undecodable clips drop (see [[audioNearDup]]'s note). */
+  private[graft] def fpOf(ds: Dataset[AudioRecord]): Dataset[AudioFp] = {
+    import ds.sparkSession.implicits._
+    ds.mapPartitions { it =>
+      it.grouped(Multimodal.DecodeBatch).flatMap(_.flatMap { r =>
+        decodeAudio(r.payload).map(d =>
+          AudioFp(r.doc_id, audioFingerprint(d.samples)))
+      })
+    }
+  }
+
   /** q362 — ACOUSTIC NEAR-DUP over real encoded audio: the full
     * pipeline (render -> real WAV encode -> real decode -> windowed
     * fingerprint -> pigeonhole-banded pair join) gated by a
@@ -348,67 +379,16 @@ object Audio {
     * (q361 `real_decode = false`) quarantine surface, not pair
     * candidates — on the gate corpus every clip decodes, so the
     * exclusion is a no-op the oracle already prices. */
-  /** (doc_id, fp, band, bkey) rows for the decoded corpus — the banded
-    * acoustic fingerprints shared by the self-join detector (q362) and
-    * the incremental probe (q381). Undecodable clips are dropped
-    * before banding (see [[audioNearDup]]'s note). */
-  private def fpBands(spark: SparkSession, dir: String,
-      keep: org.apache.spark.sql.Column = lit(true)): DataFrame =
-    audioBandsOf(load(spark, dir, "documents").filter(keep))
-
-  /** Banded acoustic-fingerprint rows of an arbitrary doc-id frame —
-    * the probe-side handle the incremental ingest writer composes
-    * (the gated q362/q381 machinery end to end). */
-  private[graft] def audioBandsOf(ids: DataFrame): DataFrame =
-    fpBandsOf(fpOf(generatedAudioOf(ids)).toDF())
-
-  /** The decode→fingerprint kernel over an arbitrary clip Dataset —
-    * factored so the STREAMING detector (q386) can run the identical
-    * stateless typed map per micro-batch (the [[Multimodal.aHash]]
-    * pattern): payload bytes never outlive the map; only (doc_id, fp)
-    * survives. Undecodable clips drop (see [[audioNearDup]]'s note). */
-  private[graft] def fpOf(ds: Dataset[AudioRecord]): Dataset[AudioFp] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.grouped(Multimodal.DecodeBatch).flatMap(_.flatMap { r =>
-        decodeAudio(r.payload).map(d =>
-          AudioFp(r.doc_id, audioFingerprint(d.samples)))
-      })
-    }
-  }
-
-  /** The 4×16 band fan-out of a (doc_id, fp) frame — one definition
-    * for the batch handle and the streaming detector. */
-  private[graft] def fpBandsOf(fps: DataFrame): DataFrame =
-    fps
-      .select(col("doc_id"), col("fp"),
-        explode(graft.functions.Banding.hashBands(col("fp"), 4, 16)).as("bk"))
-      .select(col("doc_id"), col("fp"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-
-  def audioNearDup(spark: SparkSession, dir: String, maxDist: Int = 3): DataFrame = {
-    require(maxDist <= 3, "4x16 banding is lossless only for dist <= 3")
-    val bands = fpBands(spark, dir)
-    val x = bands.alias("x")
-    val y = bands.alias("y")
-    x.join(y, col("x.band") === col("y.band") &&
-        col("x.bkey") === col("y.bkey") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.fp").bitwiseXOR(col("y.fp"))).as("dist"))
-      // distance-filter before the distinct — candidates are pipelined
-      // join output; only true near-pairs reach the dedup shuffle
-      .filter(col("dist") <= maxDist)
-      .distinct()
+  def audioNearDup(spark: SparkSession, dir: String, maxDist: Int = 3): DataFrame =
+    Banding.hammingPairs(fpBands(spark, dir), Seq("fp"), 4, maxDist)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** q381 — INCREMENTAL AUDIO DEDUP PROBE: q379's ingest shape on the
     * acoustic fingerprint — a new batch's clips (the shared delta
     * rule, doc_id % 10 == 0) probed against the already-ingested
     * corpus, never self-joined. Both sides run the REAL WAV
     * encode→decode→fingerprint pipeline (q362's); the verdict tail is
-    * [[Multimodal.bandProbeVerdict]] VERBATIM (band equi-join →
+    * [[Multimodal.bandProbeVerdict]] (band equi-join →
     * Hamming ≤ 3 → per-delta-doc verdict). Distinct from the image
     * twin in a way the oracle exploits: audio groups by doc div 4, so
     * a delta doc is the group BASE (doc ≡ 0 mod 20) or VARIANT 2
@@ -425,7 +405,7 @@ object Audio {
       fpBands(spark, dir, !isDelta),
       load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
         .filter(col("new_doc") % 10 === 0),
-      hash = "fp")
+      Seq("fp"), 3)
   }
 
   /** Persist the corpus side of the q381 probe as an on-disk index —
@@ -452,7 +432,7 @@ object Audio {
       spark.read.parquet(s"$indexDir/bands"),
       load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
         .filter(col("new_doc") % 10 === 0),
-      hash = "fp")
+      Seq("fp"), 3)
 
   /** q382's registered form: per-CALL temp index (unique, deleted at
     * JVM exit — [[graft.util.Scratch]]), build then probe. */

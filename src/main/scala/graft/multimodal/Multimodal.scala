@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.Tables._
+import graft.functions.Banding
 
 /** Multimodal-column plumbing for training-data pipelines (north-star
   * extension, BASELINE.json): media payloads travel as opaque `binary`
@@ -159,18 +160,6 @@ object Multimodal {
       md5(col("text").cast(BinaryType)).as("content_hash"))
       .orderBy(col("doc_id"))
 
-  /** Typed media records (payload = UTF-8 bytes as the stand-in blob). */
-  def mediaRecords(spark: SparkSession, dir: String): Dataset[MediaRecord] = {
-    import spark.implicits._
-    load(spark, dir, "documents").select(
-      col("doc_id"),
-      encode(col("text"), "UTF-8").as("payload"),
-      concat(lit("img/"), col("source")).as("format"),
-      expr(s"$hSql % 640").cast(IntegerType).as("width"),
-      expr(s"($hSql div 640) % 480").cast(IntegerType).as("height"))
-      .as[MediaRecord]
-  }
-
   /** Partition-batched decode + feature extraction: the mapPartitions
     * iterator is consumed in DecodeBatch-sized groups, mirroring the
     * batch shape a vectorized (Arrow/pandas-style) UDF would see. Rows
@@ -296,7 +285,7 @@ object Multimodal {
   }
 
   /** NEAR-DUPLICATE IMAGE pairs by Hamming distance over [[aHash]],
-    * blocked by [[graft.functions.Banding.hashBands]] pigeonhole
+    * blocked by [[graft.functions.Banding.multiBands]] pigeonhole
     * banding: split the 64-bit hash into `nBands` x `bandBits`-bit
     * bands — any pair within Hamming distance `nBands - 1` agrees
     * EXACTLY on at least one band, so the equi-join on (band, bkey)
@@ -307,31 +296,12 @@ object Multimodal {
     * same photo re-encoded, resized, or lightly edited across feeds,
     * where byte/content hashes see three unrelated blobs. */
   def imageNearDup(ds: Dataset[MediaRecord], maxDist: Int = 3,
-      nBands: Int = 4, bandBits: Int = 16): DataFrame = {
-    require(maxDist <= nBands - 1,
-      s"${nBands}x$bandBits banding is lossless only for dist <= ${nBands - 1}")
-    val hashes = aHash(ds).toDF()
-    val bands = hashes
-      .select(col("doc_id"), col("ahash"),
-        explode(graft.functions.Banding.hashBands(col("ahash"), nBands, bandBits))
-          .as("bk"))
-      .select(col("doc_id"), col("ahash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val x = bands.alias("x")
-    val y = bands.alias("y")
-    x.join(y, col("x.band") === col("y.band") &&
-        col("x.bkey") === col("y.bkey") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        bit_count(col("x.ahash").bitwiseXOR(col("y.ahash"))).as("dist"))
-      // distance-filter BEFORE the distinct: candidate volume is the
-      // banding's recall knob (8x8 bands collide ~256x more often than
-      // 4x16), and candidates are pipelined join output — only the few
-      // true near-pairs should reach the dedup shuffle
-      .filter(col("dist") <= maxDist)
-      .distinct()
+      nBands: Int = 4, bandBits: Int = 16): DataFrame =
+    Banding.hammingPairs(
+      Banding.banded(aHash(ds).toDF().select(col("doc_id"), col("ahash")),
+        Banding.multiBands(Seq(col("ahash")), nBands, bandBits)),
+      Seq("ahash"), nBands, maxDist)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** A renderable scene spec: 56-bit [[graft.Tables.phash]] seed shared
     * by the scene's variants, the variant ordinal, and the encode
@@ -653,11 +623,9 @@ object Multimodal {
     val scratch = graft.util.Scratch.indexDir("graft_clip_fh", dir)
     clipFrameHashes(spark, dir).write.parquet(scratch)
     val fh = spark.read.parquet(scratch)
-    val bands = fh.select(col("doc_id"), col("frame_idx"), col("fhash"),
-        explode(graft.functions.Banding.hashBands(col("fhash"), 4, 16))
-          .as("bk"))
-      .select(col("doc_id"), col("frame_idx"), col("fhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    val bands = Banding.banded(
+      fh.select(col("doc_id"), col("frame_idx"), col("fhash")),
+      Banding.multiBands(Seq(col("fhash")), 4, 16))
     val x = bands.alias("x")
     val y = bands.alias("y")
     val cand = x.join(y, col("x.frame_idx") === col("y.frame_idx") &&
@@ -777,11 +745,9 @@ object Multimodal {
       }.toDF("doc_id", "frame_idx", "fhash", "nf").write.parquet(scratch)
     }
     val fh = spark.read.parquet(scratch)
-    val bands = fh.select(col("doc_id"), col("frame_idx"), col("fhash"),
-        explode(graft.functions.Banding.hashBands(col("fhash"), 4, 16))
-          .as("bk"))
-      .select(col("doc_id"), col("frame_idx"), col("fhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    val bands = Banding.banded(
+      fh.select(col("doc_id"), col("frame_idx"), col("fhash")),
+      Banding.multiBands(Seq(col("fhash")), 4, 16))
     val xo = bands
       .select(col("doc_id"), col("frame_idx"), col("fhash"),
         col("band"), col("bkey"),
@@ -1024,7 +990,7 @@ object Multimodal {
 
   /** q372 — WIDE-RADIUS NEAR-DUP ON THE 128-BIT FINGERPRINT: q368's
     * planted-distance gate (radius ≤ 7, distances exactly j_a + j_b)
-    * run through [[graft.functions.Banding.pairedBands]] — 8 bands of
+    * run through two-word [[graft.functions.Banding.multiBands]] — 8 bands of
     * 16 bits (8 aHash + 8 qcHash bits each, 65 536 buckets/band) in
     * place of q368's 8×8 (256/band). Same pigeonhole losslessness at
     * the same radius; ~256× fewer random band collisions — and the
@@ -1042,23 +1008,13 @@ object Multimodal {
     * texture bits — P(≤ 7 of 128) ≈ 1e-26, so the closed-form oracle
     * stays sound far past the sf1 ceiling documented on q368. */
   def imageNearDupWide128(spark: SparkSession, dir: String): DataFrame = {
-    val hashes = qcHash(generatedMediaWide128(spark, dir)).toDF()
-    val bands = hashes
-      .select(col("doc_id"), col("ahash"), col("qhash"),
-        explode(graft.functions.Banding.pairedBands(
-          col("ahash"), col("qhash"), 8, 8)).as("bk"))
-      .select(col("doc_id"), col("ahash"), col("qhash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val x = bands.alias("x")
-    val y = bands.alias("y")
-    x.join(y, col("x.band") === col("y.band") &&
-        col("x.bkey") === col("y.bkey") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        (bit_count(col("x.ahash").bitwiseXOR(col("y.ahash"))) +
-          bit_count(col("x.qhash").bitwiseXOR(col("y.qhash")))).as("dist"))
-      .filter(col("dist") <= 7)
-      .distinct()
+    val hs = Seq("ahash", "qhash")
+    Banding.hammingPairs(
+      Banding.banded(
+        qcHash(generatedMediaWide128(spark, dir)).toDF()
+          .select((col("doc_id") +: hs.map(col)): _*),
+        Banding.multiBands(hs.map(col), 8, 8)),
+      hs, 8, 7)
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1078,17 +1034,10 @@ object Multimodal {
     * column SCALE.md §14 wanted. */
   def bandingAudit(spark: SparkSession, dir: String): DataFrame = {
     val hashes = qcHash(generatedMediaWide128(spark, dir)).toDF()
-    val narrow = graft.functions.Banding.hashBands(col("ahash"), 8, 8)
-    val paired = graft.functions.Banding.pairedBands(
-      col("ahash"), col("qhash"), 8, 8)
-    val retag = (family: String) => (bk: org.apache.spark.sql.Column) =>
-      struct(lit(family).as("family"), bk.getField("band").as("band"),
-        bk.getField("bkey").as("bkey"))
-    val tagged = hashes.select(explode(concat(
-        transform(narrow, retag("ahash64_8x8")),
-        transform(paired, retag("paired128_8x16")))).as("t"))
-      .select(col("t.family").as("family"), col("t.band").as("band"),
-        col("t.bkey").as("bkey"))
+    val tagged = Banding.banded(hashes, Banding.taggedBands(Seq(
+      "ahash64_8x8" -> Banding.multiBands(Seq(col("ahash")), 8, 8),
+      "paired128_8x16" ->
+        Banding.multiBands(Seq(col("ahash"), col("qhash")), 8, 8))))
     tagged.groupBy(col("family"), col("band"), col("bkey"))
       .agg(count(lit(1)).as("m"))
       .groupBy(col("family"))
@@ -1203,14 +1152,16 @@ object Multimodal {
     * candidate exponent 1.00 — the q375 geometry). Carries all four
     * hash words on the band row so the Hamming verify runs inside the
     * band join, like the narrow form. */
-  private[graft] def quadBandsOf(ids: DataFrame): DataFrame = {
-    val hs = Seq(col("h1"), col("h2"), col("h3"), col("h4"))
-    quadHash(generatedMediaQuad256Of(ids)).toDF()
-      .select((col("doc_id") +: hs) :+
-        explode(graft.functions.Banding.multiBands(hs, 8, 8)).as("bk"): _*)
-      .select((col("doc_id") +: hs) :+ col("bk.band").as("band") :+
-        col("bk.bkey").as("bkey"): _*)
-  }
+  private[graft] def quadBandsOf(ids: DataFrame): DataFrame =
+    quadBands(quadHash(generatedMediaQuad256Of(ids)).toDF())
+
+  /** The quad hash words, in band-row and probe order. */
+  private[graft] val QuadWords = Seq("h1", "h2", "h3", "h4")
+
+  /** 8×32 band rows `(doc_id, h1..h4, band, bkey)` of a quad hash frame. */
+  private def quadBands(hashes: DataFrame): DataFrame =
+    Banding.banded(hashes.select((col("doc_id") +: QuadWords.map(col)): _*),
+      Banding.multiBands(QuadWords.map(col), 8, 8))
 
   /** The 256-bit perceptual fingerprint, carried as four longs. */
   case class ImageHash4(doc_id: Long, h1: Long, h2: Long, h3: Long,
@@ -1279,26 +1230,9 @@ object Multimodal {
     * and feed both its banding guard and this join (the decode-once
     * discipline); q375's registered form delegates here, so the two
     * can never fork. */
-  private[graft] def imageNearDupQuad256From(hashes: DataFrame): DataFrame = {
-    val hs = Seq(col("h1"), col("h2"), col("h3"), col("h4"))
-    val bands = hashes
-      .select((col("doc_id") +: hs) :+
-        explode(graft.functions.Banding.multiBands(hs, 8, 8)).as("bk"): _*)
-      .select((col("doc_id") +: hs) :+ col("bk.band").as("band") :+
-        col("bk.bkey").as("bkey"): _*)
-    val x = bands.alias("x")
-    val y = bands.alias("y")
-    x.join(y, col("x.band") === col("y.band") &&
-        col("x.bkey") === col("y.bkey") &&
-        col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
-        Seq("h1", "h2", "h3", "h4").map(h =>
-          bit_count(col(s"x.$h").bitwiseXOR(col(s"y.$h"))))
-          .reduce(_ + _).as("dist"))
-      .filter(col("dist") <= 7)
-      .distinct()
+  private[graft] def imageNearDupQuad256From(hashes: DataFrame): DataFrame =
+    Banding.hammingPairs(quadBands(hashes), QuadWords, 8, 7)
       .orderBy(col("doc_a"), col("doc_b"))
-  }
 
   /** q376 — 256-BIT BANDING CANDIDATE AUDIT: q373's measured-collision
     * story extended to the quad fingerprint, over the SAME quad
@@ -1329,19 +1263,11 @@ object Multimodal {
     * hash frame ((doc_id, h1..h4) rows; planted group = doc_id div 5)
     * and pin the tripwire on a degenerate corpus. */
   private[graft] def bandingAudit256From(hashes: DataFrame): DataFrame = {
-    import graft.functions.Banding.multiBands
-    val fams = Seq(
-      ("ahash64_8x8", multiBands(Seq(col("h1")), 8, 8)),
-      ("paired128_8x16", multiBands(Seq(col("h1"), col("h2")), 8, 8)),
-      ("quad256_8x32",
-        multiBands(Seq(col("h1"), col("h2"), col("h3"), col("h4")), 8, 8)))
-    val tagged = hashes.select(expr("doc_id div 5").as("grp"),
-        explode(concat(fams.map { case (f, bk) =>
-          transform(bk, e => struct(lit(f).as("family"),
-            e.getField("band").as("band"), e.getField("bkey").as("bkey")))
-        }: _*)).as("t"))
-      .select(col("grp"), col("t.family").as("family"),
-        col("t.band").as("band"), col("t.bkey").as("bkey"))
+    val tagged = Banding.banded(hashes.withColumn("grp", expr("doc_id div 5")),
+      Banding.taggedBands(Seq(
+        "ahash64_8x8" -> Banding.multiBands(Seq(col("h1")), 8, 8),
+        "paired128_8x16" -> Banding.multiBands(Seq(col("h1"), col("h2")), 8, 8),
+        "quad256_8x32" -> Banding.multiBands(QuadWords.map(col), 8, 8))))
     // two-level occupancy: per (bucket, group) counts roll into per-
     // bucket totals, so the same pass yields total candidates AND the
     // same-group (planted) share — still zero pair joins
@@ -1382,31 +1308,18 @@ object Multimodal {
     * with no second fetch (cheap for a 64-bit hash, unlike q285's
     * shingle sets). */
   private def aHashBands(ds: Dataset[MediaRecord]): DataFrame =
-    aHash(ds).toDF()
-      .select(col("doc_id"), col("ahash"),
-        explode(graft.functions.Banding.hashBands(col("ahash"), 4, 16))
-          .as("bk"))
-      .select(col("doc_id"), col("ahash"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    Banding.banded(aHash(ds).toDF().select(col("doc_id"), col("ahash")),
+      Banding.multiBands(Seq(col("ahash")), 4, 16))
 
-  /** The banded-fingerprint probe's verdict tail, shared VERBATIM by
-    * q379 and q380 — and by the audio probe q381, which passes its own
-    * hash column name (delta/corpus band rows in, one verdict row per
-    * delta doc out): band-key equi-join → Hamming ≤ 3 verify →
-    * per-delta-doc match count + best match (smallest distance, doc-id
-    * tie-break the q285 spelling), clean (0, NULL, NULL) rows via the
-    * left join. */
+  /** The banded-fingerprint probe's verdict tail, shared by every
+    * Hamming probe — image q379/q380 (`ahash`, radius 3), audio
+    * q381/q382 (`fp`, radius 3) and the wide-policy ingest probe (quad
+    * words, radius 7): delta/corpus band rows in, one verdict row per
+    * delta doc out. Band-key equi-join → summed Hamming ≤ `maxDist`
+    * over `hashCols` → per-delta-doc match count + best match
+    * (smallest distance, doc-id tie-break the q285 spelling), clean
+    * (0, NULL, NULL) rows via the left join. */
   private[graft] def bandProbeVerdict(deltaBands: DataFrame,
-      corpusBands: DataFrame, deltaIds: DataFrame,
-      hash: String = "ahash"): DataFrame =
-    bandProbeVerdictN(deltaBands, corpusBands, deltaIds, Seq(hash), 3)
-
-  /** [[bandProbeVerdict]] generalized to a MULTI-WORD fingerprint and
-    * caller-set radius — the wide-policy ingest probe's verdict (quad
-    * 256-bit words, Hamming ≤ 7). The single-word overload above
-    * delegates here, so the q379/q380/q381/q382 gates pin this path
-    * too (never-fork). */
-  private[graft] def bandProbeVerdictN(deltaBands: DataFrame,
       corpusBands: DataFrame, deltaIds: DataFrame,
       hashCols: Seq[String], maxDist: Int): DataFrame = {
     val cand = deltaBands.alias("d")
@@ -1417,7 +1330,7 @@ object Multimodal {
           bit_count(col(s"d.$h").bitwiseXOR(col(s"c.$h"))))
           .reduce(_ + _).as("dist"))
       // distance-filter before the distinct — only true near-matches
-      // reach the verdict shuffle (imageNearDup's candidate rule)
+      // reach the verdict shuffle (Banding.hammingPairs' candidate rule)
       .filter(col("dist") <= maxDist)
       .distinct()
     val wBest = Window.partitionBy(col("new_doc"))
@@ -1465,7 +1378,8 @@ object Multimodal {
       imageBandsOf(docs.filter(isDelta)),
       imageBandsOf(docs.filter(!isDelta)),
       docs.select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0))
+        .filter(col("new_doc") % 10 === 0),
+      Seq("ahash"), 3)
   }
 
   /** Persist the corpus side of the q379 probe as an on-disk index:
@@ -1497,7 +1411,8 @@ object Multimodal {
       .filter(col("doc_id") % 10 === 0))
     bandProbeVerdict(deltaBands, spark.read.parquet(s"$indexDir/bands"),
       load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0))
+        .filter(col("new_doc") % 10 === 0),
+      Seq("ahash"), 3)
   }
 
   /** q380's registered form: build the index fresh in a per-CALL temp

@@ -810,12 +810,32 @@ object Pipeline {
     * q376's occupancy audit is the guard to run on a corpus before
     * adopting [[WideRadius7]]: its `noise_flagged` tripwire names the
     * corpus whose collision noise would dominate (and hence needs a
-    * fifth hash word) BEFORE the build pays a quadratic stage. */
-  sealed trait ImageDedupPolicy
+    * fifth hash word) BEFORE the build pays a quadratic stage.
+    *
+    * A policy carries everything the ingest path needs of it: its
+    * `name` in the index meta, the band rows of a doc-id frame
+    * (`bandsOf` — the probe side AND the index row shape of the
+    * ingest image gate), and the hash words and radius its probe
+    * verifies — radius and banding move TOGETHER, so a corpus built
+    * wide is ingested wide (radius-4..7 near-dups cannot re-enter
+    * through the ingest side door, VERDICT r14 #2). */
+  sealed abstract class ImageDedupPolicy(val name: String,
+      val bandsOf: DataFrame => DataFrame, val hashCols: Seq[String],
+      val maxDist: Int) {
+    /** The policy's probe verdict: delta band rows against corpus band
+      * rows, one verdict row per `deltaIds` doc. */
+    def probe(deltaBands: DataFrame, corpusBands: DataFrame,
+        deltaIds: DataFrame): DataFrame =
+      graft.multimodal.Multimodal.bandProbeVerdict(deltaBands, corpusBands,
+        deltaIds, hashCols, maxDist)
+  }
   /** Radius ≤ 3: q357's aHash + 4×16 pigeonhole banding. */
-  case object NarrowRadius3 extends ImageDedupPolicy
+  case object NarrowRadius3 extends ImageDedupPolicy("narrow_radius3",
+    graft.multimodal.Multimodal.imageBandsOf(_), Seq("ahash"), 3)
   /** Radius ≤ 7: q375's quad-256 fingerprint + 8×32 multiBands. */
-  case object WideRadius7 extends ImageDedupPolicy
+  case object WideRadius7 extends ImageDedupPolicy("wide_radius7",
+    graft.multimodal.Multimodal.quadBandsOf(_),
+    graft.multimodal.Multimodal.QuadWords, 7)
 
   /** The build's media cluster maps — image clusters from the policy's
     * REAL render→codec→decode→fingerprint pair pipeline (q357 narrow /
@@ -1010,35 +1030,6 @@ object Pipeline {
       .distinct()
       .withColumn(flag, lit(true))
 
-  /** Run independent append jobs concurrently, settle-then-rethrow
-    * (ADVICE r15/r16) — the shared policy, one definition. */
-  private def awaitSettled(jobs: Seq[() => Unit]): Unit =
-    graft.util.Concurrency.awaitSettled(jobs)
-
-  /** Policy-shaped image band rows of an arbitrary doc-id frame — the
-    * probe side AND the index row shape of the ingest image gate. */
-  private def imageBandsFor(ids: DataFrame,
-      policy: ImageDedupPolicy): DataFrame = policy match {
-    case NarrowRadius3 => graft.multimodal.Multimodal.imageBandsOf(ids)
-    case WideRadius7 => graft.multimodal.Multimodal.quadBandsOf(ids)
-  }
-
-  /** Policy-shaped image probe verdict: the q379/q380 radius-3 single-
-    * word probe under [[NarrowRadius3]]; the q375 quad-256 radius-7
-    * probe under [[WideRadius7]] — radius and banding move TOGETHER
-    * (see [[ImageDedupPolicy]]), so a corpus built wide is ingested
-    * into wide: without this, radius-4..7 near-dups would re-enter
-    * through the ingest side door (VERDICT r14 #2). */
-  private def imageProbeFor(deltaBands: DataFrame, corpusBands: DataFrame,
-      deltaIds: DataFrame, policy: ImageDedupPolicy): DataFrame =
-    policy match {
-      case NarrowRadius3 => graft.multimodal.Multimodal
-        .bandProbeVerdictN(deltaBands, corpusBands, deltaIds, Seq("ahash"), 3)
-      case WideRadius7 => graft.multimodal.Multimodal
-        .bandProbeVerdictN(deltaBands, corpusBands, deltaIds,
-          Seq("h1", "h2", "h3", "h4"), 7)
-    }
-
   /** The wide build's banding guard — q376's `noise_flagged` tripwire
     * evaluated on the quad fingerprint frame and ENFORCED: when the
     * 8×32 quad family's band candidates are majority collision noise,
@@ -1057,22 +1048,15 @@ object Pipeline {
         "word before a radius-7 build is safe (q376's tripwire)")
   }
 
-  private[graft] def policyName(p: ImageDedupPolicy): String = p match {
-    case NarrowRadius3 => "narrow_radius3"
-    case WideRadius7 => "wide_radius7"
-  }
-
-  private def policyOf(name: String): ImageDedupPolicy = name match {
-    case "narrow_radius3" => NarrowRadius3
-    case "wide_radius7" => WideRadius7
-    case other => throw new IllegalArgumentException(
-      s"unknown image policy in index meta: $other")
-  }
+  private def policyOf(name: String): ImageDedupPolicy =
+    Seq(NarrowRadius3, WideRadius7).find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown image policy in index meta: $name"))
 
   private def writePolicyMeta(spark: SparkSession, p: ImageDedupPolicy,
       path: String): Unit = {
     import spark.implicits._
-    Seq(policyName(p)).toDF("image_policy")
+    Seq(p.name).toDF("image_policy")
       .write.mode("overwrite").parquet(path)
   }
 
@@ -1095,8 +1079,8 @@ object Pipeline {
       used: ImageDedupPolicy, source: String): Unit =
     artifactPolicy(spark, corpusDir).foreach { ap =>
       require(ap == used,
-        s"corpus artifact at $corpusDir was built ${policyName(ap)} but " +
-          s"$source supplies ${policyName(used)} — pass the artifact's " +
+        s"corpus artifact at $corpusDir was built ${ap.name} but " +
+          s"$source supplies ${used.name} — pass the artifact's " +
           "policy (the radius-4..7 ingest side door stays closed)")
     }
 
@@ -1222,16 +1206,15 @@ object Pipeline {
       .withColumn("text_dup", coalesce(col("t0"), lit(false))).drop("t0")
     val s5 = withText.filter(!col("id_dup") && !col("too_short") &&
       !col("exact_dup") && !col("text_dup"))
-    val imgDup = imageProbeFor(
-        imageBandsFor(s5.select(col("doc_id")), imagePolicy),
-        h.imageBands, s5.select(col("doc_id").as("new_doc")), imagePolicy)
+    val imgDup = imagePolicy.probe(imagePolicy.bandsOf(s5.select(col("doc_id"))),
+        h.imageBands, s5.select(col("doc_id").as("new_doc")))
       .filter(col("n_matches") > 0)
       .select(col("new_doc").as("doc_id"), lit(true).as("i0"))
     val withImg = withText.join(imgDup, Seq("doc_id"), "left")
       .withColumn("img_dup", coalesce(col("i0"), lit(false))).drop("i0")
     val s6 = withImg.filter(!col("id_dup") && !col("too_short") &&
       !col("exact_dup") && !col("text_dup") && !col("img_dup"))
-    val audDup = Multimodal.bandProbeVerdictN(
+    val audDup = Multimodal.bandProbeVerdict(
         Audio.audioBandsOf(s6.select(col("doc_id"))),
         h.audioBands, s6.select(col("doc_id").as("new_doc")),
         Seq("fp"), 3)
@@ -1277,8 +1260,8 @@ object Pipeline {
         flags.filter(acceptedPred).write.parquet(scratch)
         val accepted = spark.read.parquet(scratch)
         val accDocs = accepted.select(col("doc_id"), col("text"))
-        val accImgBands = imageBandsFor(accDocs.select(col("doc_id")),
-          imagePolicy).persist()
+        val accImgBands = imagePolicy.bandsOf(accDocs.select(col("doc_id")))
+          .persist()
         val accAudBands = Audio.audioBandsOf(accDocs.select(col("doc_id")))
           .persist()
         val accTextBands = Dedup.textBandRows(accDocs).persist()
@@ -1294,10 +1277,9 @@ object Pipeline {
           val violations = Dedup.textProbeAgainst(accDocs,
               accTextBands, accTextSets)
             .filter(col("n_matches") >= 2).select(col("new_doc"))
-            .unionByName(imageProbeFor(accImgBands, accImgBands, accNew,
-                imagePolicy)
+            .unionByName(imagePolicy.probe(accImgBands, accImgBands, accNew)
               .filter(col("n_matches") >= 2).select(col("new_doc")))
-            .unionByName(Multimodal.bandProbeVerdictN(accAudBands,
+            .unionByName(Multimodal.bandProbeVerdict(accAudBands,
                 accAudBands, accNew, Seq("fp"), 3)
               .filter(col("n_matches") >= 2).select(col("new_doc")))
             .distinct().count()
@@ -1344,7 +1326,7 @@ object Pipeline {
               () => appendSorted(accAudBands, "band", "bkey")
                 .write.mode("append").partitionBy("band")
                 .parquet(s"$ix/audio_bands"))
-            awaitSettled(appends)
+            graft.util.Concurrency.awaitSettled(appends)
             // keys LAST — the commit marker (see the contract above)
             appendSorted(accepted.select(col("doc_id"), col("ck")), "ck")
               .write.mode("append").parquet(s"$ix/keys")
@@ -1390,7 +1372,7 @@ object Pipeline {
         Dedup.contentKey(col("text")).as("ck")),
       textBands = Dedup.textBandRows(docs),
       textSets = Dedup.shingleSets(docs),
-      imageBands = imageBandsFor(corpus.select(col("doc_id")), imagePolicy),
+      imageBands = imagePolicy.bandsOf(corpus.select(col("doc_id"))),
       audioBands = graft.multimodal.Audio
         .audioBandsOf(corpus.select(col("doc_id"))))
     ingestGauntlet(spark, corpusDir, batch, handles, imagePolicy, None)
@@ -1422,13 +1404,13 @@ object Pipeline {
     // discipline as the append path, so a crashed initial build is
     // distinguishable (no keys => rebuild) exactly like a crashed
     // append.
-    awaitSettled(Seq(
+    graft.util.Concurrency.awaitSettled(Seq(
       () => bandSorted(Dedup.textBandRows(docs))
         .write.mode("overwrite").partitionBy("band")
         .parquet(s"$indexDir/text_bands"),
       () => keySorted(Dedup.shingleSets(docs), "doc_id")
         .write.mode("overwrite").parquet(s"$indexDir/text_shingles"),
-      () => bandSorted(imageBandsFor(corpus.select(col("doc_id")), imagePolicy))
+      () => bandSorted(imagePolicy.bandsOf(corpus.select(col("doc_id"))))
         .write.mode("overwrite").partitionBy("band")
         .parquet(s"$indexDir/image_bands"),
       () => bandSorted(graft.multimodal.Audio
@@ -1520,14 +1502,14 @@ object Pipeline {
       val nTS = needs("text_shingles")
       val nIB = needs("image_bands")
       val nAB = needs("audio_bands")
-      awaitSettled(Seq(
+      graft.util.Concurrency.awaitSettled(Seq(
         () => appendSorted(Dedup.textBandRows(nTB), "band", "bkey")
           .write.mode("append").partitionBy("band")
           .parquet(s"$indexDir/text_bands"),
         () => appendSorted(Dedup.shingleSets(nTS), "doc_id")
           .write.mode("append").parquet(s"$indexDir/text_shingles"),
         () => appendSorted(
-            imageBandsFor(nIB.select(col("doc_id")), policy), "band", "bkey")
+            policy.bandsOf(nIB.select(col("doc_id"))), "band", "bkey")
           .write.mode("append").partitionBy("band")
           .parquet(s"$indexDir/image_bands"),
         () => appendSorted(graft.multimodal.Audio
@@ -1647,14 +1629,13 @@ object Pipeline {
     val ix = graft.util.Scratch.indexDir("graft_ing_audit", dir)
     // the audit reads ONLY the image band asset + policy meta — build
     // exactly those two, via the SAME shared build rules
-    // (imageBandsFor/bandSorted/writePolicyMeta) the full writer
+    // (bandsOf/bandSorted/writePolicyMeta) the full writer
     // uses, so the asset layout cannot fork from saveIngestIndexes'.
     // The first spelling built all five assets and never read the
     // text/audio ones (optimization r16, guide §1.2: don't compute
     // things you throw away — measured 4.4 s at sf0.1).
-    bandSorted(imageBandsFor(
-        load(spark, dir, "documents").select(col("doc_id")),
-        WideRadius7))
+    bandSorted(WideRadius7.bandsOf(
+        load(spark, dir, "documents").select(col("doc_id"))))
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$ix/image_bands")
     writePolicyMeta(spark, WideRadius7, s"$ix/meta")

@@ -1155,13 +1155,11 @@ object Streams {
     val h = kernel.hashCol
     val src = stageOrderedBatches(spark, kernel.render(ids)
       .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")), base)
-    val fanned = kernel.decode(src)
-      .withColumn("ts", expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
-      .withWatermark("ts", horizon)
-      .select(col("doc_id"), col(h), col("ts"),
-        explode(graft.functions.Banding.hashBands(col(h), 4, 16)).as("bk"))
-      .select(col("doc_id"), col(h), col("ts"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    val fanned = graft.functions.Banding.banded(kernel.decode(src)
+        .withColumn("ts", expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
+        .withWatermark("ts", horizon)
+        .select(col("doc_id"), col(h), col("ts")),
+      graft.functions.Banding.multiBands(Seq(col(h)), 4, 16))
     val banded = fanned
       .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
         col("doc_id"), col(h), col("ts"))

@@ -8,6 +8,8 @@ import org.apache.hadoop.fs.{AbstractFileSystem, FileStatus, FileSystem, LocalFi
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 import graft.util.{InProcessLocalFileSystem, InProcessLocalFs, Probes}
 
 /** The engine's local filesystem ([[graft.util.InProcessLocalFileSystem]]):
@@ -26,15 +28,17 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("a stream run and a parquet write fork no chmod, readlink, ls or stat") {
-    val out = Files.createTempDirectory("graft-localfs").toString + "/out"
-    val (_, forks) = Probes.forks {
-      graft.streaming.Streams.streamHourly(spark, Sf).collect()
-      spark.range(100).write.parquet(out)
+    withTempDir("graft-localfs") { tmp =>
+      val out = tmp.toString + "/out"
+      val (_, forks) = Probes.forks {
+        graft.streaming.Streams.streamHourly(spark, Sf).collect()
+        spark.range(100).write.parquet(out)
+      }
+      val metadata = forks.filter { c =>
+        Set("chmod", "readlink", "ls", "stat")(Paths.get(c.trim.split("\\s+").head).getFileName.toString)
+      }
+      assert(metadata.size === 0, s"first: ${metadata.headOption}")
     }
-    val metadata = forks.filter { c =>
-      Set("chmod", "readlink", "ls", "stat")(Paths.get(c.trim.split("\\s+").head).getFileName.toString)
-    }
-    assert(metadata.size === 0, s"first: ${metadata.headOption}")
   }
 
   /** The stock filesystem and the engine's, both on `conf`. */
@@ -53,26 +57,28 @@ class LocalFsSpec extends AnyFunSuite {
       val conf = new Configuration()
       conf.set("fs.permissions.umask-mode", umask)
       val modes = both(conf).map { fs =>
-        val root = new Path(Files.createTempDirectory("graft-localfs-mode").toUri)
-        val perms = Seq(0x1a0, 0x1ed, 0x3ed).map(m => new FsPermission(m.toShort)) // 0640, 0755, 01755
-        val files = perms.zipWithIndex.map { case (perm, i) =>
-          val f = new Path(root, s"f$i")
-          fs.create(f, perm, true, 4096, 1.toShort, 1L << 20, null).close()
-          f
+        withTempDir("graft-localfs-mode") { dir =>
+          val root = new Path(dir.toUri)
+          val perms = Seq(0x1a0, 0x1ed, 0x3ed).map(m => new FsPermission(m.toShort)) // 0640, 0755, 01755
+          val files = perms.zipWithIndex.map { case (perm, i) =>
+            val f = new Path(root, s"f$i")
+            fs.create(f, perm, true, 4096, 1.toShort, 1L << 20, null).close()
+            f
+          }
+          val dirs = perms.zipWithIndex.map { case (perm, i) =>
+            val d = new Path(root, s"d$i/sub")
+            assert(fs.mkdirs(d, perm))
+            d
+          }
+          val plain = new Path(root, "plain")
+          fs.create(plain).close()
+          // create and mkdirs drop a sticky bit with the umask; a direct
+          // setPermission keeps it, which takes Hadoop's shell path
+          val sticky = new Path(root, "sticky")
+          assert(fs.mkdirs(sticky))
+          fs.setPermission(sticky, new FsPermission(0x3ff.toShort)) // 01777
+          (files ++ dirs :+ plain :+ new Path(root, ".plain.crc") :+ sticky).map(mode)
         }
-        val dirs = perms.zipWithIndex.map { case (perm, i) =>
-          val d = new Path(root, s"d$i/sub")
-          assert(fs.mkdirs(d, perm))
-          d
-        }
-        val plain = new Path(root, "plain")
-        fs.create(plain).close()
-        // create and mkdirs drop a sticky bit with the umask; a direct
-        // setPermission keeps it, which takes Hadoop's shell path
-        val sticky = new Path(root, "sticky")
-        assert(fs.mkdirs(sticky))
-        fs.setPermission(sticky, new FsPermission(0x3ff.toShort)) // 01777
-        (files ++ dirs :+ plain :+ new Path(root, ".plain.crc") :+ sticky).map(mode)
       }
       assert(modes(0) === modes(1), s"umask $umask")
       assert(modes(1).last === 0x3ff, f"umask $umask: ${modes(1).last}%o")
@@ -80,20 +86,21 @@ class LocalFsSpec extends AnyFunSuite {
   }
 
   test("getFileLinkStatus matches the stock filesystem on links, qualified paths and files") {
-    val root = Files.createTempDirectory("graft-localfs-link")
-    val target = Files.write(root.resolve("target"), Array[Byte](1, 2, 3))
-    val link = Files.createSymbolicLink(root.resolve("link"), target)
-    def fields(s: FileStatus): Seq[Any] =
-      Seq(s.getPath, s.isSymlink, s.isFile, s.isDirectory, s.getLen, s.getModificationTime) ++
-        (if (s.isSymlink) Seq(s.getSymlink) else Nil)
-    val paths = Seq(
-      new Path(link.toString),           // a real link, unqualified: Hadoop reads it
-      new Path(link.toUri),              // qualified: Hadoop's probe sees no link
-      new Path(target.toString))         // a plain file
-    val Seq(stock, ours) = both(new Configuration()).map(fs =>
-      paths.map(p => fields(fs.getFileLinkStatus(p))))
-    assert(stock === ours)
-    assert(ours.head(1) === true)
-    assert(ours(1)(1) === false)
+    withTempDir("graft-localfs-link") { root =>
+      val target = Files.write(root.resolve("target"), Array[Byte](1, 2, 3))
+      val link = Files.createSymbolicLink(root.resolve("link"), target)
+      def fields(s: FileStatus): Seq[Any] =
+        Seq(s.getPath, s.isSymlink, s.isFile, s.isDirectory, s.getLen, s.getModificationTime) ++
+          (if (s.isSymlink) Seq(s.getSymlink) else Nil)
+      val paths = Seq(
+        new Path(link.toString),           // a real link, unqualified: Hadoop reads it
+        new Path(link.toUri),              // qualified: Hadoop's probe sees no link
+        new Path(target.toString))         // a plain file
+      val Seq(stock, ours) = both(new Configuration()).map(fs =>
+        paths.map(p => fields(fs.getFileLinkStatus(p))))
+      assert(stock === ours)
+      assert(ours.head(1) === true)
+      assert(ours(1)(1) === false)
+    }
   }
 }

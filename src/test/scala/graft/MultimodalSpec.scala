@@ -427,17 +427,55 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("multiBands degenerates to hashBands/pairedBands on 1 and 2 words") {
     import graft.functions.Banding
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
     import spark.implicits._
-    val df = Seq((0x1234567890abcdefL, 0x0fedcba098765432L))
-      .toDF("h1", "h2")
-    val one = df.select(Banding.multiBands(Seq(col("h1")), 8, 8).as("b"),
-      Banding.hashBands(col("h1"), 8, 8).as("e")).head()
-    assert(one.get(0) === one.get(1))
-    val two = df.select(
-      Banding.multiBands(Seq(col("h1"), col("h2")), 8, 8).as("b"),
-      Banding.pairedBands(col("h1"), col("h2"), 8, 8).as("e")).head()
-    assert(two.get(0) === two.get(1))
+    // the one- and two-word formulas multiBands replaced, and q79's
+    // hand-built 4×8 SimHash split, kept here as its reference
+    def hashBands(h: Column, nBands: Int, bits: Int): Column = {
+      val mask = (1L << bits) - 1L
+      array((0 until nBands).map { b =>
+        struct(lit(b).as("band"),
+          shiftright(h, b * bits).bitwiseAND(lit(mask)).as("bkey"))
+      }: _*)
+    }
+    def pairedBands(h1: Column, h2: Column, nBands: Int, bits: Int): Column = {
+      val mask = (1L << bits) - 1L
+      array((0 until nBands).map { b =>
+        struct(lit(b).as("band"),
+          shiftright(h1, b * bits).bitwiseAND(lit(mask))
+            .bitwiseOR(shiftleft(
+              shiftright(h2, b * bits).bitwiseAND(lit(mask)), bits))
+            .as("bkey"))
+      }: _*)
+    }
+    val simhashBands = array((0 until 4).map { b =>
+      struct(lit(b).as("band"),
+        shiftrightunsigned(col("sh"), b * 8).bitwiseAND(lit(255L)).as("bkey"))
+    }: _*)
+    // negative words too: the signed and unsigned shifts must agree
+    // under the mask
+    val df = Seq((0x1234567890abcdefL, 0x0fedcba098765432L, 0x12345678),
+        (-1L, Long.MinValue, -1), (Long.MinValue, -1L, Int.MinValue),
+        (-0x1234567890abcdefL, 42L, -0x1234567))
+      .toDF("h1", "h2", "sh")
+    for (r <- df.select(
+        Banding.multiBands(Seq(col("h1")), 8, 8), hashBands(col("h1"), 8, 8),
+        Banding.multiBands(Seq(col("h1")), 4, 16), hashBands(col("h1"), 4, 16),
+        Banding.multiBands(Seq(col("h1"), col("h2")), 8, 8),
+        pairedBands(col("h1"), col("h2"), 8, 8),
+        Banding.multiBands(Seq(col("sh")), 4, 8), simhashBands).collect()) {
+      assert(r.get(0) === r.get(1))
+      assert(r.get(2) === r.get(3))
+      assert(r.get(4) === r.get(5))
+      assert(r.get(6) === r.get(7))
+    }
+    // the same column types, so index rows written either way read alike
+    val types = df.select(Banding.multiBands(Seq(col("h1")), 4, 16).as("m"),
+      hashBands(col("h1"), 4, 16).as("e"),
+      Banding.multiBands(Seq(col("sh")), 4, 8).as("ms"), simhashBands.as("es"))
+      .schema.map(_.dataType)
+    assert(types(0) === types(1) && types(2) === types(3))
   }
 
   test("q379/q380: image probe never self-matches, index probe is verdict-identical, lone-group deltas come back clean") {

@@ -479,20 +479,22 @@ class OperatorSpec extends AnyFunSuite {
   }
 
   test("streaming foreachBatch fan-out lands every row in BOTH sinks, idempotently") {
-    val base = java.nio.file.Files.createTempDirectory("graft-sfan").toString
-    val n = Tables.load(spark, sf, "events").count()
-    val b1 = streaming.Streams.streamFanOut(spark, sf,
-      s"$base/parquet", s"$base/json", s"$base/ckpt")
-    assert(b1 >= 1)
-    assert(spark.read.parquet(s"$base/parquet").count() === n)
-    assert(spark.read.json(s"$base/json").count() === n)
-    // a SECOND run against the SAME checkpoint replays nothing new and
-    // the by-batchId overwrite keeps both sinks duplicate-free
-    val b2 = streaming.Streams.streamFanOut(spark, sf,
-      s"$base/parquet", s"$base/json", s"$base/ckpt")
-    assert(b2 === 0, s"checkpointed rerun replayed $b2 batches")
-    assert(spark.read.parquet(s"$base/parquet").count() === n)
-    assert(spark.read.json(s"$base/json").count() === n)
+    graft.TempDirs.withTempDir("graft-sfan") { tmp =>
+      val base = tmp.toString
+      val n = Tables.load(spark, sf, "events").count()
+      val b1 = streaming.Streams.streamFanOut(spark, sf,
+        s"$base/parquet", s"$base/json", s"$base/ckpt")
+      assert(b1 >= 1)
+      assert(spark.read.parquet(s"$base/parquet").count() === n)
+      assert(spark.read.json(s"$base/json").count() === n)
+      // a SECOND run against the SAME checkpoint replays nothing new and
+      // the by-batchId overwrite keeps both sinks duplicate-free
+      val b2 = streaming.Streams.streamFanOut(spark, sf,
+        s"$base/parquet", s"$base/json", s"$base/ckpt")
+      assert(b2 === 0, s"checkpointed rerun replayed $b2 batches")
+      assert(spark.read.parquet(s"$base/parquet").count() === n)
+      assert(spark.read.json(s"$base/json").count() === n)
+    }
   }
 
   test("a bounded foreachBatch run whose body throws fails naming the run and leaves no query active") {

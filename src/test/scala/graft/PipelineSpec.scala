@@ -446,13 +446,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val corpus4 = Seq((2L, 0L, 0L, 0L, 0L, 0, 7L))
       .toDF("doc_id", "h1", "h2", "h3", "h4", "band", "bkey")
     val ids = Seq(1L).toDF("new_doc")
-    val wide = graft.multimodal.Multimodal.bandProbeVerdictN(
+    val wide = graft.multimodal.Multimodal.bandProbeVerdict(
       delta4, corpus4, ids, Seq("h1", "h2", "h3", "h4"), 7).collect()
     assert(wide.head.getLong(1) === 1L && wide.head.getInt(3) === 5,
       s"radius-7 probe must flag the distance-5 pair: ${wide.toSeq}")
     val delta1 = Seq((1L, 31L, 0, 7L)).toDF("doc_id", "ahash", "band", "bkey")
     val corpus1 = Seq((2L, 0L, 0, 7L)).toDF("doc_id", "ahash", "band", "bkey")
-    val narrow = graft.multimodal.Multimodal.bandProbeVerdictN(
+    val narrow = graft.multimodal.Multimodal.bandProbeVerdict(
       delta1, corpus1, ids, Seq("ahash"), 3).collect()
     assert(narrow.head.getLong(1) === 0L,
       s"radius-3 probe must not flag distance 5: ${narrow.toSeq}")

@@ -876,7 +876,7 @@ class PlanSpec extends AnyFunSuite {
         "text probe must never scan the corpus parquet")
       assert(!tPlan.contains("CartesianProduct") &&
         !tPlan.contains("BroadcastNestedLoopJoin"), tPlan)
-      val ip = graft.multimodal.Multimodal.bandProbeVerdictN(
+      val ip = graft.multimodal.Multimodal.bandProbeVerdict(
         graft.multimodal.Multimodal.imageBandsOf(batch.select(col("doc_id"))),
         spark.read.parquet(s"$ix/image_bands"),
         batch.select(col("doc_id").as("new_doc")), Seq("ahash"), 3)

@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 import graft.util.Probes
 
 /** [[Tables.read]]: a single-file table read with its footer's schema,
@@ -66,18 +68,21 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a Spark-written single file reads by its row-metadata schema") {
-    val dir = Files.createTempDirectory("graft-tables-spark")
-    Tables.names.foreach { t =>
-      assertParity(sparkFile(spark.read.parquet(s"$Sf/$t.parquet"), dir, t))
+    withTempDir("graft-tables-spark") { dir =>
+      Tables.names.foreach { t =>
+        assertParity(sparkFile(spark.read.parquet(s"$Sf/$t.parquet"), dir, t))
+      }
     }
   }
 
   test("int64 TIMESTAMP(NANOS) reads as a long under nanosAsLong") {
-    val path = Files.createTempDirectory("graft-tables-nanos").resolve("ts.parquet").toString
-    exampleFile(path,
-      "message m { required int64 ts (TIMESTAMP(NANOS,false)); required int64 v; }", 10)
-    assertParity(path)
-    assert(Tables.read(spark, path).schema("ts").dataType === LongType)
+    withTempDir("graft-tables-nanos") { tmp =>
+      val path = tmp.resolve("ts.parquet").toString
+      exampleFile(path,
+        "message m { required int64 ts (TIMESTAMP(NANOS,false)); required int64 v; }", 10)
+      assertParity(path)
+      assert(Tables.read(spark, path).schema("ts").dataType === LongType)
+    }
   }
 
   test("a table load and q40's stream source run no Spark job") {
@@ -96,34 +101,39 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a table rewritten with an extra column between two loads shows it") {
-    val dir = Files.createTempDirectory("graft-tables-rewrite")
-    val path = dir.resolve("t.parquet").toString
-    exampleFile(path, "message m { required int64 a; required int64 b; }", 5)
-    assert(Tables.read(spark, path).columns.toSeq === Seq("a", "b"))
-    exampleFile(path, "message m { required int64 a; required int64 b; required int64 c; }", 5)
-    val again = Tables.read(spark, path)
-    assert(again.columns.toSeq === Seq("a", "b", "c"))
-    assert(again.agg(sum("c")).head().getLong(0) === 30L)
+    withTempDir("graft-tables-rewrite") { dir =>
+      val path = dir.resolve("t.parquet").toString
+      exampleFile(path, "message m { required int64 a; required int64 b; }", 5)
+      assert(Tables.read(spark, path).columns.toSeq === Seq("a", "b"))
+      exampleFile(path, "message m { required int64 a; required int64 b; required int64 c; }", 5)
+      val again = Tables.read(spark, path)
+      assert(again.columns.toSeq === Seq("a", "b", "c"))
+      assert(again.agg(sum("c")).head().getLong(0) === 30L)
+    }
   }
 
   test("a directory keeps Spark's inference") {
-    val dir = Files.createTempDirectory("graft-tables-dir").resolve("t").toString
-    spark.range(10).withColumn("x", col("id") * 2).write.parquet(dir)
-    assertParity(dir)
+    withTempDir("graft-tables-dir") { tmp =>
+      val dir = tmp.resolve("t").toString
+      spark.range(10).withColumn("x", col("id") * 2).write.parquet(dir)
+      assertParity(dir)
+    }
   }
 
   test("staged streams take the schema parquet infers from their files") {
-    val base = Files.createTempDirectory("graft-tables-staged").toString
-    val frames = Seq(
-      Tables.events(spark, Sf).select(col("event_id"), col("user_id"), col("value")),
-      Tables.events(spark, Sf).select(col("user_id"), col("event_type"), col("ts")),
-      Tables.load(spark, Sf, "documents").select(col("doc_id"), col("source"), col("text")))
-    frames.zipWithIndex.foreach { case (df, i) =>
-      val stream = graft.streaming.Streams.splitStream(df, s"$base/split$i")
-      assert(stream.schema === spark.read.parquet(s"$base/split$i/src").schema)
+    withTempDir("graft-tables-staged") { tmp =>
+      val base = tmp.toString
+      val frames = Seq(
+        Tables.events(spark, Sf).select(col("event_id"), col("user_id"), col("value")),
+        Tables.events(spark, Sf).select(col("user_id"), col("event_type"), col("ts")),
+        Tables.load(spark, Sf, "documents").select(col("doc_id"), col("source"), col("text")))
+      frames.zipWithIndex.foreach { case (df, i) =>
+        val stream = graft.streaming.Streams.splitStream(df, s"$base/split$i")
+        assert(stream.schema === spark.read.parquet(s"$base/split$i/src").schema)
+      }
+      val timer = graft.streaming.Streams.timerFlushInput(spark, Sf)
+      timer.write.parquet(s"$base/timer")
+      assert(Tables.readBack(timer.schema) === spark.read.parquet(s"$base/timer").schema)
     }
-    val timer = graft.streaming.Streams.timerFlushInput(spark, Sf)
-    timer.write.parquet(s"$base/timer")
-    assert(Tables.readBack(timer.schema) === spark.read.parquet(s"$base/timer").schema)
   }
 }

@@ -1,0 +1,17 @@
+package graft
+
+import java.nio.file.{Files, Path}
+
+import org.apache.commons.io.FileUtils
+
+/** Temp directories for specs that are gone when the test ends. */
+object TempDirs {
+
+  /** Run `body` with a fresh temp dir named `prefix…`, deleting the dir
+    * and everything under it afterwards, pass or fail. */
+  def withTempDir[T](prefix: String)(body: Path => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try body(dir)
+    finally FileUtils.deleteQuietly(dir.toFile): Unit
+  }
+}
