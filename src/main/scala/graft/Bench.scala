@@ -30,9 +30,7 @@ import graft.util.Json
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
 
     // Left(error) on failure — a failed query must NOT contribute to the
     // total (the old -1.0 sentinel *lowered* it, flattering the bench)

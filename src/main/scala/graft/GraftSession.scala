@@ -96,6 +96,16 @@ object GraftSession {
       .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
 
+  /** The session every command-line main runs in: `local[N]` with N
+    * shuffle partitions, N from `SPARK_GRAFT_CPUS` (default 4), and
+    * Spark's log at `logLevel`. */
+  def forMain(logLevel: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val s = builder(s"local[$cpus]", cpus).getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+
   /** Session for ScalaTest suites (shared across suites via getOrCreate). */
   def test(): SparkSession = {
     val s = builder("local[8]", "8").getOrCreate()

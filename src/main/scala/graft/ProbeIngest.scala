@@ -19,9 +19,7 @@ object ProbeIngest {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val batchK = args.lift(1).map(_.toInt).getOrElse(100)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     val root = graft.util.Scratch.indexDir("graft_probe_ingest", dir)
     val (dirA, dirB, ix) = (s"$root/a", s"$root/b", s"$root/ix")
     def timed[T](f: => T): (T, Double) = {

@@ -90,6 +90,11 @@ object Tables {
   def spread(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
+  /** The incremental split every delta probe and index-seeded stream
+    * shares: a row whose id is a multiple of 10 is the new batch (the
+    * delta), every other row the already-ingested corpus. */
+  def isDelta(id: Column): Column = id % 10 === 0
+
   /** `events.ts` surfaced as timestamp_ntz regardless of the corpus'
     * physical parquet type. The generator has shipped BOTH encodings
     * across corpus regenerations: TIMESTAMP(NANOS) (which Spark's

@@ -7,9 +7,7 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.forMain("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated filter (dev loop; the driver runs all):
     // SPARK_GRAFT_QUERIES=q34_embedding_neardup,q36_ann_ivf

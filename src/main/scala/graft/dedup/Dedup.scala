@@ -1518,8 +1518,8 @@ object Dedup {
     * arrays never ride the band shuffle. */
   def incrementalDedup(spark: SparkSession, dir: String): DataFrame = {
     val docs = spread(load(spark, dir, "documents"))
-    val corpus = docs.filter(col("doc_id") % 10 =!= 0)
-    textProbeAgainst(docs.filter(col("doc_id") % 10 === 0),
+    val corpus = docs.filter(!isDelta(col("doc_id")))
+    textProbeAgainst(docs.filter(isDelta(col("doc_id"))),
       textBandRows(corpus), shingleSets(corpus))
   }
 
@@ -1539,30 +1539,29 @@ object Dedup {
     docs.select(col("doc_id"), shingleHashes(col("text"), mod = false).as("hx"))
       .withColumn("n", size(col("hx")).cast(LongType))
 
+  /** Every verified match of a (doc_id, text) batch against a corpus's
+    * (band rows, shingle sets): [[Banding.bandJoin]] candidates, once per
+    * pair, kept by [[verifyJaccard]] as `(new_doc, match_doc, jaccard, …)`. */
+  private[graft] def textMatches(batch: DataFrame, corpusBands: DataFrame,
+      corpusSets: DataFrame): DataFrame = {
+    val cand = Banding.bandJoin(textBandRows(batch), corpusBands)
+      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"))
+      .distinct()
+    verifyJaccard(cand
+      .join(shingleSets(batch).select(col("doc_id").as("new_doc"),
+        col("hx").as("ha"), col("n").as("na")), "new_doc"), corpusSets)
+  }
+
   /** THE text probe: a (doc_id, text) batch against a corpus handed in
     * as (band rows, shingle sets) — computed inline by q285, read from
     * [[saveLshIndex]]'s parquet by q331 and the index-backed ingest
-    * writer. The batch side is always computed fresh (O(batch)).
-    * Candidates are verified with the exact shingle-set Jaccard >= 0.5,
-    * and every batch doc gets a verdict row: match count, best match
-    * (highest Jaccard, doc-id tie-break), or a clean (0, NULL, NULL). */
+    * writer. The batch side is always computed fresh (O(batch)). Every
+    * batch doc gets a verdict over its [[textMatches]]: match count,
+    * best match (highest Jaccard, doc-id tie-break), or a clean
+    * (0, NULL, NULL). */
   private[graft] def textProbeAgainst(batch: DataFrame,
       corpusBands: DataFrame, corpusSets: DataFrame): DataFrame = {
-    val cand = textBandRows(batch).alias("d")
-      .join(corpusBands.alias("c"),
-        col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
-      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"))
-      .distinct()
-    val ver = cand
-      .join(shingleSets(batch).select(col("doc_id").as("new_doc"),
-        col("hx").as("ha"), col("n").as("na")), "new_doc")
-      .join(corpusSets.select(col("doc_id").as("match_doc"), col("hx").as("hb"),
-        col("n").as("nb")), "match_doc")
-      .withColumn("c", size(array_intersect(col("ha"), col("hb")))
-        .cast(LongType))
-      .withColumn("jaccard",
-        col("c").cast(DoubleType) / (col("na") + col("nb") - col("c")))
-      .filter(col("jaccard") >= 0.5)
+    val ver = textMatches(batch, corpusBands, corpusSets)
     val wBest = Window.partitionBy(col("new_doc"))
       .orderBy(col("jaccard").desc, col("match_doc").desc)
     val best = ver
@@ -1579,6 +1578,21 @@ object Dedup {
       .orderBy(col("new_doc"))
   }
 
+  /** The exact text verify of the batch probe and the indexed stream:
+    * candidates (`match_doc`, shingle set `ha` of size `na`) fetch the
+    * corpus set of `match_doc` and are kept at exact Jaccard
+    * `|a ∩ b| / (na + nb − |a ∩ b|)` >= 0.5, in a `jaccard` column. */
+  private[graft] def verifyJaccard(cand: DataFrame,
+      corpusSets: DataFrame): DataFrame =
+    cand
+      .join(corpusSets.select(col("doc_id").as("match_doc"), col("hx").as("hb"),
+        col("n").as("nb")), "match_doc")
+      .withColumn("c", size(array_intersect(col("ha"), col("hb")))
+        .cast(LongType))
+      .withColumn("jaccard",
+        col("c").cast(DoubleType) / (col("na") + col("nb") - col("c")))
+      .filter(col("jaccard") >= 0.5)
+
   /** Persist the corpus side of the q285 probe as an on-disk index:
     * the band table (partitioned by band, so a probe prunes to its
     * band's files) and the shingle-hash sets (fetched by doc-key join
@@ -1587,7 +1601,7 @@ object Dedup {
     * `saveTextIndex`/`saveIvfIndex` lifecycle carried to dedup. */
   def saveLshIndex(spark: SparkSession, dir: String, indexDir: String): Unit = {
     val corpus = spread(load(spark, dir, "documents"))
-      .filter(col("doc_id") % 10 =!= 0)
+      .filter(!isDelta(col("doc_id")))
     // the two assets are independent shingle passes over the same
     // corpus — build them concurrently so each job's tail back-fills
     // the other (optimization r16, guide §2.6)
@@ -1611,7 +1625,7 @@ object Dedup {
   def incrementalDedupFromIndex(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
     textProbeAgainst(
-      spread(load(spark, dir, "documents")).filter(col("doc_id") % 10 === 0),
+      spread(load(spark, dir, "documents")).filter(isDelta(col("doc_id"))),
       spark.read.parquet(s"$indexDir/bands"),
       spark.read.parquet(s"$indexDir/shingles"))
 

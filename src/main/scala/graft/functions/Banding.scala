@@ -23,8 +23,8 @@ import org.apache.spark.sql.functions._
   * is also the state-partitioning key of the streaming form.
   *
   * [[multiBands]] builds the band array, [[banded]] fans rows out to
-  * it, and [[hammingPairs]] is the self-join every batch detector
-  * runs.
+  * it, [[hammingPairs]] is the self-join every batch detector runs, and
+  * [[bandJoin]]/[[hammingProbe]] the delta-against-corpus probe.
   */
 object Banding {
 
@@ -74,6 +74,25 @@ object Banding {
       transform(bands, b => struct(lit(family).as("family"),
         b.getField("band").as("band"), b.getField("bkey").as("bkey")))
     }: _*)
+
+  /** `delta` band rows joined to the `corpus` band rows with the same
+    * `(band, bkey)`, aliased `d` and `c`: every probe's candidate join. */
+  def bandJoin(delta: DataFrame, corpus: DataFrame): DataFrame =
+    delta.alias("d").join(corpus.alias("c"),
+      col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
+
+  /** The Hamming probe of [[banded]] `delta` rows against `corpus` rows:
+    * every [[bandJoin]] pair whose summed `bit_count` of the xor over the
+    * hash words is at most `maxDist`, as `(new_doc, match_doc, dist)`,
+    * once per colliding band (the caller collapses them). */
+  def hammingProbe(delta: DataFrame, corpus: DataFrame,
+      hashCols: Seq[String], maxDist: Int): DataFrame =
+    bandJoin(delta, corpus)
+      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"),
+        hashCols.map(h =>
+          bit_count(col(s"d.$h").bitwiseXOR(col(s"c.$h"))))
+          .reduce(_ + _).as("dist"))
+      .filter(col("dist") <= maxDist)
 
   /** The Hamming near-dup self-join over [[banded]] rows `(doc_id,
     * hashCols..., band, bkey)`: every pair `doc_a < doc_b` sharing a

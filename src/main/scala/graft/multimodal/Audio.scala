@@ -399,14 +399,9 @@ object Audio {
     * Scale shape: identical to q379 — corpus prunes to colliding band
     * keys, 16-byte band rows are the only shuffle, and at 100 TB the
     * corpus side persists like [[Multimodal.saveImageIndex]]. */
-  def audioIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    val isDelta = col("doc_id") % 10 === 0
-    Multimodal.bandProbeVerdict(fpBands(spark, dir, isDelta),
-      fpBands(spark, dir, !isDelta),
-      load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0),
-      Seq("fp"), 3)
-  }
+  def audioIncrementalDedup(spark: SparkSession, dir: String): DataFrame =
+    Multimodal.deltaVerdicts(spark, dir, audioBandsOf,
+      fpBands(spark, dir, !isDelta(col("doc_id"))), "fp")
 
   /** Persist the corpus side of the q381 probe as an on-disk index —
     * [[Multimodal.saveImageIndex]]'s lifecycle on the acoustic
@@ -415,7 +410,7 @@ object Audio {
     * encode→decode→fingerprint cost is paid once per corpus. */
   def saveAudioIndex(spark: SparkSession, dir: String,
       indexDir: String): Unit =
-    fpBands(spark, dir, col("doc_id") % 10 =!= 0)
+    fpBands(spark, dir, !isDelta(col("doc_id")))
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$indexDir/bands")
 
@@ -427,12 +422,8 @@ object Audio {
     * audio (q382). */
   def audioIndexProbe(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
-    Multimodal.bandProbeVerdict(
-      fpBands(spark, dir, col("doc_id") % 10 === 0),
-      spark.read.parquet(s"$indexDir/bands"),
-      load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0),
-      Seq("fp"), 3)
+    Multimodal.deltaVerdicts(spark, dir, audioBandsOf,
+      spark.read.parquet(s"$indexDir/bands"), "fp")
 
   /** q382's registered form: per-CALL temp index (unique, deleted at
     * JVM exit — [[graft.util.Scratch]]), build then probe. */

@@ -1316,22 +1316,16 @@ object Multimodal {
     * q381/q382 (`fp`, radius 3) and the wide-policy ingest probe (quad
     * words, radius 7): delta/corpus band rows in, one verdict row per
     * delta doc out. Band-key equi-join → summed Hamming ≤ `maxDist`
-    * over `hashCols` → per-delta-doc match count + best match
-    * (smallest distance, doc-id tie-break the q285 spelling), clean
-    * (0, NULL, NULL) rows via the left join. */
+    * over `hashCols` ([[Banding.hammingProbe]], the candidate rule
+    * the index-seeded streams share) → per-delta-doc match count + best
+    * match (smallest distance, doc-id tie-break the q285 spelling),
+    * clean (0, NULL, NULL) rows via the left join. */
   private[graft] def bandProbeVerdict(deltaBands: DataFrame,
       corpusBands: DataFrame, deltaIds: DataFrame,
       hashCols: Seq[String], maxDist: Int): DataFrame = {
-    val cand = deltaBands.alias("d")
-      .join(corpusBands.alias("c"),
-        col("d.band") === col("c.band") && col("d.bkey") === col("c.bkey"))
-      .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"),
-        hashCols.map(h =>
-          bit_count(col(s"d.$h").bitwiseXOR(col(s"c.$h"))))
-          .reduce(_ + _).as("dist"))
-      // distance-filter before the distinct — only true near-matches
-      // reach the verdict shuffle (Banding.hammingPairs' candidate rule)
-      .filter(col("dist") <= maxDist)
+    // distance-filtered before the distinct — only true near-matches
+    // reach the verdict shuffle
+    val cand = Banding.hammingProbe(deltaBands, corpusBands, hashCols, maxDist)
       .distinct()
     val wBest = Window.partitionBy(col("new_doc"))
       .orderBy(col("dist"), col("match_doc").desc)
@@ -1367,19 +1361,24 @@ object Multimodal {
     * rows are 16-byte (hash, key) pairs; the quadratic pair space is
     * never materialized. At 100 TB the corpus side is [[saveImageIndex]]'s
     * persisted asset — q380 is that form, verdict-identical. */
-  def imageIncrementalDedup(spark: SparkSession, dir: String): DataFrame = {
-    // each side filters its doc slice BEFORE the render: a filter above
-    // the codec mapPartitions cannot push through it, so the one-frame
-    // spelling would run the full render+decode+aHash pipeline once
-    // PER JOIN SIDE (measured 1.9x on the probe at heaps1)
+  def imageIncrementalDedup(spark: SparkSession, dir: String): DataFrame =
+    deltaVerdicts(spark, dir, imageBandsOf, imageBandsOf(
+      load(spark, dir, "documents").filter(!isDelta(col("doc_id")))), "ahash")
+
+  /** The radius-3 [[bandProbeVerdict]]s of `dir`'s delta docs, banded by
+    * `bandsOf`, against `corpusBands` of the same kernel: image
+    * q379/q380 and audio q381/q382. Each side filters its doc slice
+    * BEFORE the render: a filter above the codec mapPartitions cannot
+    * push through it, so filtering one banded frame would run the full
+    * render+decode+hash pipeline once PER JOIN SIDE (measured 1.9x on
+    * the probe at heaps1). */
+  private[graft] def deltaVerdicts(spark: SparkSession, dir: String,
+      bandsOf: DataFrame => DataFrame, corpusBands: DataFrame,
+      hashCol: String): DataFrame = {
     val docs = load(spark, dir, "documents")
-    val isDelta = col("doc_id") % 10 === 0
-    bandProbeVerdict(
-      imageBandsOf(docs.filter(isDelta)),
-      imageBandsOf(docs.filter(!isDelta)),
-      docs.select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0),
-      Seq("ahash"), 3)
+    bandProbeVerdict(bandsOf(docs.filter(isDelta(col("doc_id")))), corpusBands,
+      docs.select(col("doc_id").as("new_doc")).filter(isDelta(col("new_doc"))),
+      Seq(hashCol), 3)
   }
 
   /** Persist the corpus side of the q379 probe as an on-disk index:
@@ -1393,7 +1392,7 @@ object Multimodal {
   def saveImageIndex(spark: SparkSession, dir: String,
       indexDir: String): Unit =
     imageBandsOf(load(spark, dir, "documents")
-        .filter(col("doc_id") % 10 =!= 0))
+        .filter(!isDelta(col("doc_id"))))
       .write.mode("overwrite").partitionBy("band")
       .parquet(s"$indexDir/bands")
 
@@ -1406,14 +1405,9 @@ object Multimodal {
     * enforces every round; band files are partition-pruned by the
     * probe's band column. */
   def imageIndexProbe(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame = {
-    val deltaBands = imageBandsOf(load(spark, dir, "documents")
-      .filter(col("doc_id") % 10 === 0))
-    bandProbeVerdict(deltaBands, spark.read.parquet(s"$indexDir/bands"),
-      load(spark, dir, "documents").select(col("doc_id").as("new_doc"))
-        .filter(col("new_doc") % 10 === 0),
-      Seq("ahash"), 3)
-  }
+      indexDir: String): DataFrame =
+    deltaVerdicts(spark, dir, imageBandsOf,
+      spark.read.parquet(s"$indexDir/bands"), "ahash")
 
   /** q380's registered form: build the index fresh in a per-CALL temp
     * dir (unique — concurrent calls never race on overwrite; deleted

@@ -373,10 +373,10 @@ object Pipeline {
     // cannot fan out and flagging replaces the anti-join losslessly.
     val docs = spread(load(spark, dir, "documents"))
       .select(col("doc_id"), col("text"))
-    val delta = docs.filter(col("doc_id") % 10 === 0)
+    val delta = docs.filter(isDelta(col("doc_id")))
     val cont = decontaminate(spark, dir)
       .select(col("doc_id"), lit(true).as("cont"))
-    val corpusKeys = docs.filter(col("doc_id") % 10 =!= 0)
+    val corpusKeys = docs.filter(!isDelta(col("doc_id")))
       .select(graft.dedup.Dedup.contentKey(col("text")).as("ck")).distinct()
       .withColumn("ck_seen", lit(true))
     val dupNew = graft.dedup.Dedup.incrementalDedup(spark, dir)

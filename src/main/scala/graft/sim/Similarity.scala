@@ -315,7 +315,7 @@ object Similarity {
     * maintenance). `k` is THE scale knob for every IVF consumer:
     * probe candidates grow as n_query · n_corpus / k, so a fixed k
     * turns the bucket join super-linear as the corpus grows — k must
-    * scale with n (measured: tools/ProbeAnn + SCALE.md) and the
+    * scale with n (measured in SCALE.md §29) and the
     * quantizer retrains only here, at index build. One body with
     * [[saveIvfIndex]] — the two must never fork. */
   private[graft] def saveIvfIndexOn(spark: SparkSession, v: DataFrame,
@@ -1218,8 +1218,8 @@ object Similarity {
     * the batch. */
   def ivfMaintenance(spark: SparkSession, dir: String): DataFrame = {
     val v = vecs(spark, dir)
-    val base = v.filter(col("vec_id") % 10 =!= 0)
-    val delta = v.filter(col("vec_id") % 10 === 0)
+    val base = v.filter(!isDelta(col("vec_id")))
+    val delta = v.filter(isDelta(col("vec_id")))
     val cent = hashCentroids(base)
     val nb = assignToCentroids(base, cent)
       .groupBy(col("cid")).agg(count(lit(1)).as("n_base"))

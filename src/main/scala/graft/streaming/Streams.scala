@@ -3,7 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 
 import org.apache.commons.io.FileUtils
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -886,7 +886,7 @@ object Streams {
   }
 
   // ---------------------------------------------------------------
-  // TTL-BOUNDED STREAMING NEAR-DUP DETECTION (q319/q338/q366/q369/q371)
+  // TTL-BOUNDED STREAMING NEAR-DUP DETECTION (q319–q389)
   // ---------------------------------------------------------------
 
   /** Event-time origin of the staged dedup streams. Any fixed instant
@@ -897,9 +897,7 @@ object Streams {
     * 3-hour event span, so nothing evicts during the gate and the pair
     * set equals the batch detector's — while a continuous deployment
     * of the SAME code is still state-bounded at one horizon of
-    * colliding payloads per bucket. Since round 13 the unbounded
-    * NoTimeout form no longer exists in the engine; the horizon is the
-    * only knob separating the exact-replay gates from the TTL gates. */
+    * colliding payloads per bucket. */
   private[graft] val ReplayHorizon = "300 minutes"
 
   /** TTL-gate horizon (q369/q371): 90 minutes ⟹ an arrival in batch k
@@ -907,10 +905,12 @@ object Streams {
     * 90 min ⟺ j ≥ k − 2), so gap-3 pairs MUST be suppressed. */
   private[graft] val TtlHorizon = "90 minutes"
 
-  /** Canary doc_id offset (shared with [[graft.dedup.Dedup]]'s planted
-    * canaries and their oracle — 10^9 ≡ 0 mod 4, which is why canary
-    * BATCHES are shifted one forward instead, see lshPairsTtlStream). */
-  private val CanaryShift = 1000000000L
+  /** Canary doc_id offset of q338. It is ≡ 1 mod 4, so the replay's
+    * batch = doc_id mod 4 puts every canary ONE BATCH AFTER its source
+    * doc: an offset ≡ 0 mod 4 (q335's 10^9) would co-batch each canary
+    * with its original, and detection would never exercise the
+    * cross-batch state path. */
+  private val CanaryShift = 1000000001L
 
   /** Stream the parquet files under `src`, written from a frame of
     * `schema`, back one file per micro-batch, oldest mtime first. The
@@ -972,12 +972,34 @@ object Streams {
     fileStream(spark, s"$base/src", df.schema)
   }
 
+  /** The staged replay every streaming near-dup detector reads: `rows`
+    * cut by [[stageOrderedBatches]] into batch = `id` mod 4, `decode`d
+    * per micro-batch, stamped with event time T0 + batch·1h, and put
+    * under the `horizon` watermark. The stamp comes after the decode
+    * (the kernel contract stays payload-only) and re-derives the batch
+    * from the id: a watermark declared before a projection that drops
+    * its column would not reach the stateful operator. */
+  private def stagedReplay(spark: SparkSession, rows: DataFrame, id: String,
+      base: String, horizon: String,
+      decode: DataFrame => DataFrame = identity): DataFrame = {
+    val batch = s"pmod($id, 4)"
+    decode(stageOrderedBatches(spark,
+        rows.withColumn("batch", expr(batch).cast("int")), base))
+      .withColumn("ts", expr(s"$DedupT0 + $batch * INTERVAL '1' HOUR"))
+      .withWatermark("ts", horizon)
+  }
+
+  /** The state bucket of a band row: its band and band key. */
+  private def bandBucket: Column = concat_ws("|", col("band"), col("bkey"))
+
   /** THE one stateful pairing core behind every streaming near-dup
     * detector in the engine (text LSH q319/q371, canaries q338,
-    * perceptual image q366/q369). Input rows are (bucket, doc_id,
-    * payload, event time); per band-bucket state
-    * (flatMapGroupsWithState) holds (doc_id, payload, ts) residents,
-    * and the core both
+    * perceptual image q366/q369, the index-seeded q384–q386 and
+    * semantic q389). Each of `rows` lands in the bucket its `bucket`
+    * column names ([[bandBucket]] for the banded detectors) with its
+    * `id`, `payload` and watermarked event time `ts`; per-bucket state
+    * (flatMapGroupsWithState) holds (id, payload, ts) residents, and
+    * the core both
     *
     *   - EVICTS by watermark: residents whose event time has fallen
     *     behind `state.getCurrentWatermarkMs` are dropped before any
@@ -989,22 +1011,22 @@ object Streams {
     *     next trigger instead of lingering filtered-but-resident.
     *
     * State bound on a continuous stream: one watermark-window of
-    * colliding payloads per bucket, independent of stream length — the
-    * r12 verdict's last unbounded-state liability (q319/q338/q366 ran
-    * NoTimeout) is retired by re-basing all five queries here, with
+    * colliding payloads per bucket, independent of stream length, with
     * the watermark horizon as the only per-query knob. Within-batch
     * arrivals accumulate in a buffer (one state-array concat per batch
     * — per-arrival append would be quadratic in allocations on a hot
     * bucket, which is exactly a duplicate cluster) and compare in
     * doc_id order, so batching cannot change the result. Cross-band
     * duplicate emissions collapse in the callers' final distinct. */
-  private def ttlPairs[P, O](
-      banded: org.apache.spark.sql.Dataset[(String, Long, P, java.sql.Timestamp)],
-      compare: (Long, P, Long, P) => Option[O])(
-      implicit stateEnc: org.apache.spark.sql.Encoder[Array[(Long, P, Long)]],
-      outEnc: org.apache.spark.sql.Encoder[O]): org.apache.spark.sql.Dataset[O] = {
+  private def ttlPairs[P, O](rows: DataFrame, bucket: Column, id: String,
+      payload: Column, compare: (Long, P, Long, P) => Option[O])(
+      implicit rowEnc: Encoder[(String, Long, P, java.sql.Timestamp)],
+      stateEnc: Encoder[Array[(Long, P, Long)]],
+      outEnc: Encoder[O]): org.apache.spark.sql.Dataset[O] = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    banded.groupByKey(_._1)(org.apache.spark.sql.Encoders.STRING)
+    rows.select(bucket.as("bucket"), col(id), payload, col("ts"))
+      .as[(String, Long, P, java.sql.Timestamp)]
+      .groupByKey(_._1)(Encoders.STRING)
       .flatMapGroupsWithState[Array[(Long, P, Long)], O](OutputMode.Append(),
         GroupStateTimeout.EventTimeTimeout) { (_, rows, state) =>
         if (state.hasTimedOut) {
@@ -1047,57 +1069,72 @@ object Streams {
     if (est >= 0.5) Some((math.min(pid, id), math.max(pid, id), est)) else None
   }
 
-  /** The in-stream perceptual verdict (q357/q362's radius): Hamming
-    * distance ≤ 3 between two 64-bit hashes, as an ordered pair. */
-  private def hamming3(id: Long, h: Long, pid: Long,
+  /** The Hamming detector's pigeonhole split and radius: a 64-bit hash
+    * in 4 bands of 16 bits is lossless to Hamming distance 3
+    * (q357/q362's radius, [[graft.functions.Banding]]). */
+  private val HashBands = 4
+  private val HashBandBits = 16
+  private val HashRadius = 3
+
+  /** The in-stream perceptual verdict: Hamming distance ≤
+    * [[HashRadius]] between two 64-bit hashes, as an ordered pair. */
+  private def hammingVerdict(id: Long, h: Long, pid: Long,
       ph: Long): Option[(Long, Long, Int)] = {
     val d = java.lang.Long.bitCount(h ^ ph)
-    if (d <= 3) Some((math.min(pid, id), math.max(pid, id), d)) else None
+    if (d <= HashRadius) Some((math.min(pid, id), math.max(pid, id), d))
+    else None
   }
 
-  /** The text-LSH streaming detector behind q319/q338/q371, returned
-    * UN-STARTED so the spec can drive it and read the state-operator
-    * expiry metrics. Documents are stamped with event time T0 +
-    * batch·1h (batch = doc_id mod 4) and split into mtime-ordered
-    * batch files; per micro-batch, each doc's MinHash signature is
-    * banded with the SAME split as the batch detector
+  /** Corpus-probe hits `(new_doc, match_doc, …)` as a detector's ordered
+    * `(doc_a, doc_b, score)` pairs. */
+  private def orderedPairs(hits: DataFrame, score: Column): DataFrame =
+    hits.select(least(col("new_doc"), col("match_doc")).as("doc_a"),
+      greatest(col("new_doc"), col("match_doc")).as("doc_b"), score)
+
+  /** THE text-LSH streaming detector behind q319/q338/q371 and q385,
+    * returned UN-STARTED so the spec can drive it and read the
+    * state-operator expiry metrics. The (doc_id, text) `docs` replay in
+    * [[stagedReplay]]'s batches; per micro-batch, each doc's MinHash
+    * signature is banded with the SAME split as the batch detector
     * ([[graft.dedup.Dedup.bandKeys]] — the two can never fork) and
-    * paired by [[ttlPairs]] under the caller's watermark horizon.
-    * Emitted pairs verify by the identical signature-overlap estimate
-    * (≥ 0.5). Planted canaries (q338) are shifted ONE BATCH FORWARD of
-    * their source doc — CanaryShift ≡ 0 mod 4 would otherwise co-batch
-    * every canary with its original — so detection always exercises
-    * the cross-batch state path, not just within-batch compares. */
-  private[graft] def lshPairsTtlStream(spark: SparkSession, dir: String,
+    * paired by [[ttlPairs]] under the caller's watermark horizon at the
+    * identical signature-overlap estimate (≥ 0.5).
+    *
+    * INDEX-SEEDED when `indexDir` is given (q385): `docs` is then only
+    * the delta slice, and its band rows also probe
+    * [[graft.dedup.Dedup.saveLshIndex]]'s parquet STREAM-STATIC
+    * ([[graft.functions.Banding.bandJoin]], then q285's exact
+    * [[graft.dedup.Dedup.verifyJaccard]]) — stateless, so the corpus is
+    * never re-shingled into state and a restart loses nothing. The band
+    * rows carry each doc's shingle set: a stream-static join cannot
+    * fetch it afterwards. `est_jaccard` is the signature estimate for
+    * within-stream pairs and the exact Jaccard for corpus hits. */
+  private[graft] def lshPairsTtlStream(spark: SparkSession, docs: DataFrame,
       base: String, horizon: String,
-      plantCanaries: Boolean = false): DataFrame = {
+      indexDir: Option[String] = None): DataFrame = {
     import spark.implicits._
-    val docs = load(spark, dir, "documents")
-      .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int"))
-    val stamped =
-      if (!plantCanaries) docs
-      else docs.unionByName(
-        docs.select((col("doc_id") + CanaryShift).as("doc_id"),
-            concat(col("text"), lit(" canaryx")).as("text"),
-            pmod(col("doc_id") + 1, lit(4)).cast("int").as("batch"))
-          .filter((col("doc_id") - CanaryShift) % 97 === 0))
-    // the watermark-tagged ts attribute itself must flow through every
-    // projection into the stateful operator (a derived copy would fail
-    // the event-time-timeout analysis check)
-    val src = stageOrderedBatches(spark,
-      stamped.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
-      base).withWatermark("ts", horizon)
-    val sigs = src.select(col("doc_id"),
-      call_function("minhash_sig",
-        graft.dedup.Dedup.shingleHashes(col("text"), mod = true)).as("sig"),
-      col("ts"))
-    val banded = graft.dedup.Dedup.bandKeys(sigs)
-      .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
-        col("doc_id"), col("sig"), col("ts"))
-      .as[(String, Long, Array[Long], java.sql.Timestamp)]
-    ttlPairs[Array[Long], (Long, Long, Double)](banded, minhashEstimate)
+    import graft.dedup.Dedup
+    val src = stagedReplay(spark, docs.select(col("doc_id"), col("text")),
+      "doc_id", base, horizon)
+    // O(batch) per micro-batch: the MinHash signature and, for the
+    // index leg, the exact-verify shingle set
+    val banded = Dedup.bandKeys(src.select(col("doc_id"), col("ts"),
+      call_function("minhash_sig", Dedup.shingleHashes(col("text"), mod = true))
+        .as("sig"),
+      Dedup.shingleHashes(col("text"), mod = false).as("ha"))
+      .withColumn("na", size(col("ha")).cast("long")))
+    val streamPairs = ttlPairs[Array[Long], (Long, Long, Double)](banded,
+        bandBucket, "doc_id", col("sig"), minhashEstimate)
       .toDF("doc_a", "doc_b", "est_jaccard")
+    indexDir.fold(streamPairs) { ix =>
+      val cand = graft.functions.Banding.bandJoin(banded,
+          spark.read.parquet(s"$ix/bands"))
+        .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"),
+          col("d.ha"), col("d.na"))
+      streamPairs.unionByName(orderedPairs(
+        Dedup.verifyJaccard(cand, spark.read.parquet(s"$ix/shingles")),
+        col("jaccard").as("est_jaccard")))
+    }
   }
 
   /** A perceptual-hash column: how doc ids render to payload rows, how
@@ -1125,15 +1162,12 @@ object Streams {
 
   /** THE Hamming-banded streaming detector behind the image (q366/q369,
     * q384) and audio (q386) gates — the media twin of
-    * [[lshPairsTtlStream]]. The `ids` docs are rendered ONCE to a
-    * staging table, cut into 4 mtime-ordered batch files (batch =
-    * doc_id mod 4), decoded + hashed per micro-batch by `kernel`,
-    * fanned into the 4×16-bit pigeonhole bands, and paired by
-    * [[ttlPairs]] at Hamming ≤ 3. Event time is re-derived from doc_id
-    * AFTER the decode — the kernel contract stays payload-only, and a
-    * watermark declared before a projection that drops its column
-    * would not reach the stateful operator. Payload bytes never enter
-    * state — only (doc_id, hash, ts), 24 bytes per resident.
+    * [[lshPairsTtlStream]]. The `ids` docs are rendered ONCE to
+    * [[stagedReplay]]'s staging table, decoded + hashed per micro-batch
+    * by `kernel`, fanned into the [[HashBands]]×[[HashBandBits]]
+    * pigeonhole bands, and paired by [[ttlPairs]] at Hamming ≤
+    * [[HashRadius]]. Payload bytes never enter state — only (doc_id,
+    * hash, ts), 24 bytes per resident.
     *
     * INDEX-SEEDED when `indexDir` is given (the streaming twin of the
     * q380 persisted-index probe, VERDICT r15 #6): a (re)started stream
@@ -1142,118 +1176,50 @@ object Streams {
     * corpus were replayed into state on every restart. Instead the
     * corpus side is the persisted band index
     * ([[graft.multimodal.Multimodal.saveImageIndex]],
-    * [[graft.multimodal.Audio.saveAudioIndex]]) joined STREAM-STATIC
-    * per micro-batch on (band, bkey) — stateless, so a restart loses
-    * nothing and the corpus is never re-rendered — while within-stream
-    * duplicates keep flowing through the state core; `ids` is then
-    * only the delta slice. Cross-band duplicate emissions collapse in
-    * the caller's final distinct (the ttlPairs convention). */
+    * [[graft.multimodal.Audio.saveAudioIndex]]) probed STREAM-STATIC per
+    * micro-batch by the batch probes' candidate rule
+    * ([[graft.functions.Banding.hammingProbe]]) — stateless, so a
+    * restart loses nothing and the corpus is never re-rendered — while
+    * within-stream duplicates keep flowing through the state core;
+    * `ids` is then only the delta slice. Cross-band duplicate emissions
+    * collapse in the caller's final distinct (the ttlPairs convention). */
   private[graft] def hammingPairsTtlStream(spark: SparkSession,
       ids: DataFrame, kernel: HashKernel, base: String, horizon: String,
       indexDir: Option[String] = None): DataFrame = {
     import spark.implicits._
+    import graft.functions.Banding
     val h = kernel.hashCol
-    val src = stageOrderedBatches(spark, kernel.render(ids)
-      .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int")), base)
-    val fanned = graft.functions.Banding.banded(kernel.decode(src)
-        .withColumn("ts", expr(s"$DedupT0 + (doc_id % 4) * INTERVAL '1' HOUR"))
-        .withWatermark("ts", horizon)
-        .select(col("doc_id"), col(h), col("ts")),
-      graft.functions.Banding.multiBands(Seq(col(h)), 4, 16))
-    val banded = fanned
-      .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
-        col("doc_id"), col(h), col("ts"))
-      .as[(String, Long, Long, java.sql.Timestamp)]
-    val streamPairs = ttlPairs[Long, (Long, Long, Int)](banded, hamming3)
+    val fanned = Banding.banded(
+      stagedReplay(spark, kernel.render(ids), "doc_id", base, horizon,
+        kernel.decode).select(col("doc_id"), col(h), col("ts")),
+      Banding.multiBands(Seq(col(h)), HashBands, HashBandBits))
+    val streamPairs = ttlPairs[Long, (Long, Long, Int)](fanned, bandBucket,
+        "doc_id", col(h), hammingVerdict)
       .toDF("doc_a", "doc_b", "dist")
     indexDir.fold(streamPairs) { ix =>
-      val corpus = spark.read.parquet(s"$ix/bands")
-        .select(col("doc_id").as("c_doc"), col(h).as("c_hash"),
-          col("band"), col("bkey"))
-      streamPairs.unionByName(fanned.join(corpus, Seq("band", "bkey"))
-        .withColumn("dist", bit_count(col(h).bitwiseXOR(col("c_hash")))
-          .cast(org.apache.spark.sql.types.IntegerType))
-        .filter(col("dist") <= 3)
-        .select(least(col("doc_id"), col("c_doc")).as("doc_a"),
-          greatest(col("doc_id"), col("c_doc")).as("doc_b"), col("dist")))
+      streamPairs.unionByName(orderedPairs(Banding.hammingProbe(fanned,
+        spark.read.parquet(s"$ix/bands"), Seq(h), HashRadius), col("dist")))
     }
   }
 
-  /** The delta slice every index-seeded detector streams (the shared
-    * doc_id % 10 == 0 rule). */
+  /** The delta slice every index-seeded detector streams
+    * ([[graft.Tables.isDelta]]). */
   private[graft] def deltaDocs(spark: SparkSession, dir: String): DataFrame =
-    load(spark, dir, "documents")
-      .filter(col("doc_id") % 10 === 0)
-
-  /** The INDEX-SEEDED streaming TEXT detector — q384's pattern carried
-    * to the LSH column (VERDICT r16 #3): only the delta slice streams;
-    * near-dups of already-ingested corpus docs flag through a
-    * STATELESS stream-static band join against
-    * [[graft.dedup.Dedup.saveLshIndex]]'s parquet, exact-verified by
-    * joining the persisted shingle sets (the q285 verify rule — exact
-    * Jaccard ≥ 0.5 over the candidate's fetched set), so the corpus is
-    * never re-shingled into state and a restart loses nothing.
-    * Within-stream duplicates keep flowing through the [[ttlPairs]]
-    * watermark-bounded core with q319's signature-overlap estimate.
-    * The two paths are structurally disjoint (corpus partners are
-    * never delta docs), so the caller's final distinct only collapses
-    * cross-band duplicate emissions. */
-  private[graft] def lshPairsTtlStreamIndexed(spark: SparkSession,
-      dir: String, base: String, horizon: String,
-      indexDir: String): DataFrame = {
-    import spark.implicits._
-    val delta = deltaDocs(spark, dir)
-      .select(col("doc_id"), col("text"))
-      .withColumn("batch", pmod(col("doc_id"), lit(4)).cast("int"))
-    val src = stageOrderedBatches(spark,
-      delta.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
-      base).withWatermark("ts", horizon)
-    // O(batch) per micro-batch: shingle hashes (exact verify side) and
-    // the MinHash signature, computed once per arriving doc
-    val enriched = src.select(col("doc_id"), col("text"), col("ts"))
-      .withColumn("hx",
-        graft.dedup.Dedup.shingleHashes(col("text"), mod = false))
-      .withColumn("nx", size(col("hx")).cast("long"))
-      .withColumn("sig", call_function("minhash_sig",
-        graft.dedup.Dedup.shingleHashes(col("text"), mod = true)))
-    val banded = graft.dedup.Dedup.bandKeys(enriched)
-    val ixBands = spark.read.parquet(s"$indexDir/bands")
-      .select(col("doc_id").as("match_doc"), col("band"), col("bkey"))
-    val ixSets = spark.read.parquet(s"$indexDir/shingles")
-      .select(col("doc_id").as("match_doc"), col("hx").as("hb"),
-        col("n").as("nb"))
-    val corpusHits = banded
-      .select(col("doc_id"), col("hx"), col("nx"), col("band"), col("bkey"))
-      .join(ixBands, Seq("band", "bkey"))
-      .join(ixSets, Seq("match_doc"))
-      .withColumn("c", size(array_intersect(col("hx"), col("hb")))
-        .cast(org.apache.spark.sql.types.LongType))
-      .withColumn("score",
-        col("c").cast(org.apache.spark.sql.types.DoubleType) /
-          (col("nx") + col("nb") - col("c")))
-      .filter(col("score") >= 0.5)
-      .select(least(col("doc_id"), col("match_doc")).as("doc_a"),
-        greatest(col("doc_id"), col("match_doc")).as("doc_b"),
-        col("score"))
-    val bucketed = banded
-      .select(concat_ws("|", col("band"), col("bkey")).as("bucket"),
-        col("doc_id"), col("sig"), col("ts"))
-      .as[(String, Long, Array[Long], java.sql.Timestamp)]
-    ttlPairs[Array[Long], (Long, Long, Double)](bucketed, minhashEstimate)
-      .toDF("doc_a", "doc_b", "score")
-      .unionByName(corpusHits)
-  }
+    load(spark, dir, "documents").filter(isDelta(col("doc_id")))
 
   /** Run one streaming near-dup detector — staged (by
     * [[stageOrderedBatches]], which wipes it first) under the tmp root
     * of run `name`, which it receives — through the append-mode memory
-    * sink, and collapse its cross-band duplicate emissions. The staging
-    * root is deleted after the run: the pairs live in the memory sink. */
+    * sink, and collapse its cross-band duplicate emissions; the pairs
+    * come ordered by their two ids. The staging root is deleted after
+    * the run: the pairs live in the memory sink. */
   private def detectPairs(spark: SparkSession, dir: String, name: String)(
       detector: String => DataFrame): DataFrame = {
     val base = graft.util.Scratch.tmpPath(name, dir)
-    try runToMemory(detector(base), name, "append").distinct()
-    finally FileUtils.deleteQuietly(new java.io.File(base)): Unit
+    try {
+      val pairs = runToMemory(detector(base), name, "append").distinct()
+      pairs.orderBy(pairs.columns.take(2).map(col).toSeq: _*)
+    } finally FileUtils.deleteQuietly(new java.io.File(base)): Unit
   }
 
   /** q338 — STREAMING CANARY CHECK: q335's planted-duplicate
@@ -1267,8 +1233,12 @@ object Streams {
     * batch and streaming canary checks must agree exactly, because
     * under [[ReplayHorizon]] the streaming pair set equals q31's. */
   def streamCanaries(spark: SparkSession, dir: String): DataFrame = {
+    val docs = load(spark, dir, "documents").select(col("doc_id"), col("text"))
+    val planted = docs.unionByName(docs.filter(col("doc_id") % 97 === 0)
+      .select((col("doc_id") + CanaryShift).as("doc_id"),
+        concat(col("text"), lit(" canaryx")).as("text")))
     val det = detectPairs(spark, dir, "graft_stream_canary")(
-        lshPairsTtlStream(spark, dir, _, ReplayHorizon, plantCanaries = true))
+        lshPairsTtlStream(spark, planted, _, ReplayHorizon))
       .filter(col("doc_a") % 97 === 0 &&
         col("doc_b") === col("doc_a") + CanaryShift)
       .agg(count(lit(1)).as("n_detected"))
@@ -1294,13 +1264,10 @@ object Streams {
     * watermark-tight twin whose gate PROVES eviction is q371. */
   def streamLshDedup(spark: SparkSession, dir: String): DataFrame =
     detectPairs(spark, dir, "graft_stream_lsh_dedup")(
-      lshPairsTtlStream(spark, dir, _, ReplayHorizon)).orderBy("doc_a", "doc_b")
+      lshPairsTtlStream(spark, load(spark, dir, "documents"), _, ReplayHorizon))
 
   /** q371 — TTL-BOUNDED STREAMING LSH DEDUP: q319 under the tight
-    * [[TtlHorizon]] — the r12 verdict's top item, closing the last
-    * unbounded streaming state in the engine by applying q369's
-    * watermark-evict + EventTimeTimeout machinery (now the shared
-    * [[ttlPairs]] core) to the TEXT LSH path. The gate proves both
+    * [[TtlHorizon]] on the shared [[ttlPairs]] core. The gate proves both
     * directions against q31's pair rule RESTRICTED to the watermark
     * window: in-window pairs (batch gap ≤ 2, batch = doc_id mod 4)
     * must all emit with their exact signature-overlap estimates, and
@@ -1310,27 +1277,23 @@ object Streams {
     * colliding signatures, independent of stream length. */
   def streamLshDedupTtl(spark: SparkSession, dir: String): DataFrame =
     detectPairs(spark, dir, "graft_stream_lsh_ttl")(
-      lshPairsTtlStream(spark, dir, _, TtlHorizon)).orderBy("doc_a", "doc_b")
+      lshPairsTtlStream(spark, load(spark, dir, "documents"), _, TtlHorizon))
 
   /** q366 — STREAMING PERCEPTUAL IMAGE DEDUP: q319's ingest-dedup
     * shape applied to MEDIA via [[hammingPairsTtlStream]]. Runs under
     * [[ReplayHorizon]] — the gate is the can-never-fork contract: the
     * emitted pair set must equal batch q357's EXACTLY (oracle = q357's
     * string verbatim), so batching, state carry-over, and the banding
-    * fan-out are all pinned against the batch path. Since round 13
-    * this is NOT the old NoTimeout form: the same TTL machinery runs
-    * here with a replay-wide horizon, so a continuous deployment is
-    * state-bounded; the watermark-tight twin whose gate PROVES
-    * eviction is q369. */
+    * fan-out are all pinned against the batch path. The watermark-tight
+    * twin whose gate PROVES eviction is q369. */
   def streamImageDedup(spark: SparkSession, dir: String): DataFrame =
     detectPairs(spark, dir, "graft_stream_img_dedup")(hammingPairsTtlStream(
       spark, load(spark, dir, "documents"), ImageKernel, _, ReplayHorizon))
-      .orderBy("doc_a", "doc_b")
 
   /** q384 — INDEX-SEEDED STREAMING IMAGE DEDUP: the q380 persisted
     * index composed into the streaming detector
     * ([[hammingPairsTtlStream]], image kernel). Only the DELTA slice
-    * (the shared doc_id % 10 == 0 rule) streams; near-dups of
+    * ([[graft.Tables.isDelta]]) streams; near-dups of
     * already-ingested corpus docs flag through the STATELESS
     * stream-static band join against `saveImageIndex`'s parquet — the
     * corpus is never rendered into the stream or carried in state, so
@@ -1347,11 +1310,10 @@ object Streams {
     graft.multimodal.Multimodal.saveImageIndex(spark, dir, ix)
     detectPairs(spark, dir, "graft_stream_img_ixs")(hammingPairsTtlStream(
       spark, deltaDocs(spark, dir), ImageKernel, _, ReplayHorizon, Some(ix)))
-      .orderBy("doc_a", "doc_b")
   }
 
   /** q385 — INDEX-SEEDED STREAMING TEXT DEDUP: q384's restart-proof
-    * pattern on the LSH column ([[lshPairsTtlStreamIndexed]]). The
+    * pattern on the LSH column ([[lshPairsTtlStream]] with the index). The
     * corpus side is `saveLshIndex`'s parquet — never replayed into
     * state, so a restarted stream re-pays nothing (OperatorSpec pins
     * cold-restart set equality). Oracle: corpus hits are q285's
@@ -1362,9 +1324,9 @@ object Streams {
   def streamLshDedupIndexed(spark: SparkSession, dir: String): DataFrame = {
     val ix = graft.util.Scratch.indexDir("graft_lsh_ixs_index", dir)
     graft.dedup.Dedup.saveLshIndex(spark, dir, ix)
-    detectPairs(spark, dir, "graft_stream_lsh_ixs")(
-      lshPairsTtlStreamIndexed(spark, dir, _, ReplayHorizon, ix))
-      .orderBy("doc_a", "doc_b")
+    detectPairs(spark, dir, "graft_stream_lsh_ixs")(lshPairsTtlStream(
+      spark, deltaDocs(spark, dir), _, ReplayHorizon, Some(ix)))
+      .withColumnRenamed("est_jaccard", "score")
   }
 
   /** q386 — INDEX-SEEDED STREAMING AUDIO DEDUP: the pattern completed
@@ -1382,7 +1344,6 @@ object Streams {
     graft.multimodal.Audio.saveAudioIndex(spark, dir, ix)
     detectPairs(spark, dir, "graft_stream_aud_ixs")(hammingPairsTtlStream(
       spark, deltaDocs(spark, dir), AudioKernel, _, ReplayHorizon, Some(ix)))
-      .orderBy("doc_a", "doc_b")
   }
 
   /** The index-seeded streaming SEMANTIC detector behind q389 —
@@ -1413,20 +1374,16 @@ object Streams {
     *    batch pairs), exact cosine in the comparator with the same
     *    left-fold double op order as `vec_dot`.
     *
-    * Delta slice, batching, event times, and horizon all mirror
-    * q385 (vec_id % 10 = 0; batch = vec_id mod 4; T0 + batch·1h;
-    * [[ReplayHorizon]]). */
+    * The delta slice ([[graft.Tables.isDelta]] on vec_id) and the
+    * [[stagedReplay]] batches mirror q385. */
   private[graft] def semanticPairsStreamIndexed(spark: SparkSession,
       dir: String, base: String, horizon: String,
       indexDir: String): DataFrame = {
     import spark.implicits._
     import graft.sim.Similarity
-    val delta = Similarity.vecs(spark, dir)
-      .filter(col("vec_id") % 10 === 0)
-      .withColumn("batch", pmod(col("vec_id"), lit(4)).cast("int"))
-    val src = stageOrderedBatches(spark,
-      delta.withColumn("ts", expr(s"$DedupT0 + batch * INTERVAL '1' HOUR")),
-      base).withWatermark("ts", horizon)
+    val src = stagedReplay(spark,
+      Similarity.vecs(spark, dir).filter(isDelta(col("vec_id"))), "vec_id",
+      base, horizon)
     // one-row static frame: the whole O(k) quantizer as an array,
     // sorted by cid for a deterministic (if semantically irrelevant)
     // layout
@@ -1450,13 +1407,9 @@ object Streams {
       .filter(col("cosine") >= 0.4)
       .select(least(col("vec_id"), col("m_id")).as("vec_a"),
         greatest(col("vec_id"), col("m_id")).as("vec_b"), col("cosine"))
-    val bucketed = probed
-      .select(concat(lit("c"), col("b1")).as("bucket"), col("vec_id"),
-        struct(col("embedding").as("_1"), col("n2").as("_2")).as("p"),
-        col("ts"))
-      .as[(String, Long, (Array[Float], Double), java.sql.Timestamp)]
     val streamPairs = ttlPairs[(Array[Float], Double), (Long, Long, Double)](
-      bucketed, (id, p, pid, pp) => {
+      probed, concat(lit("c"), col("b1")), "vec_id",
+      struct(col("embedding").as("_1"), col("n2").as("_2")), (id, p, pid, pp) => {
         // identical double op sequence to VecDotFloat's codegen loop
         // (left-fold sum of widened products) and to the oracle's
         // LIST_REDUCE — the three must never fork
@@ -1480,18 +1433,10 @@ object Streams {
     import graft.sim.Similarity
     val ix = graft.util.Scratch.indexDir("graft_sem_ixs_index", dir)
     Similarity.saveIvfIndexOn(spark,
-      Similarity.vecs(spark, dir).filter(col("vec_id") % 10 =!= 0), ix)
-    probeSemanticStreamIndexed(spark, dir, ix)
-      .orderBy(col("vec_a"), col("vec_b"))
-  }
-
-  /** The probe half of q389 against an ALREADY-BUILT index — split
-    * from the gate form so tools/ProbeAnn can time build and probe
-    * separately (and at different k) without forking the detector. */
-  private[graft] def probeSemanticStreamIndexed(spark: SparkSession,
-      dir: String, ix: String): DataFrame =
+      Similarity.vecs(spark, dir).filter(!isDelta(col("vec_id"))), ix)
     detectPairs(spark, dir, "graft_stream_sem_ixs")(
       semanticPairsStreamIndexed(spark, dir, _, ReplayHorizon, ix))
+  }
 
   /** q369 — TTL-BOUNDED STREAMING PERCEPTUAL DEDUP: q366 under the
     * tight [[TtlHorizon]]. The gate proves both directions against a
@@ -1506,7 +1451,6 @@ object Streams {
   def streamImageDedupTtl(spark: SparkSession, dir: String): DataFrame =
     detectPairs(spark, dir, "graft_stream_img_ttl")(hammingPairsTtlStream(
       spark, load(spark, dir, "documents"), ImageKernel, _, TtlHorizon))
-      .orderBy("doc_a", "doc_b")
 
   /** STREAMING RUNNING TOTALS via `transformWithState` — the third
     * implementation of the per-user balance/count semantics, gated on

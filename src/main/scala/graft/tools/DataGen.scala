@@ -255,9 +255,7 @@ object DataGen {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: DataGen <outDir> <sf> [heaps]")
     val heaps = args.length >= 3 && args(2) == "heaps"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.forMain("WARN")
     try generate(spark, args(0), args(1).toDouble, heapsVocab = heaps)
     finally spark.stop()
   }

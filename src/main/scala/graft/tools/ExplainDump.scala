@@ -21,8 +21,8 @@ import graft.{GraftSession, SparkEntry}
   *    dump is the batch tail over the sink, which is still the plan
   *    the noop sink times AFTER the stream completes; the streaming
   *    side's shape lives in the code and OPTIMIZATION notes).
-  *  - Same session config as Bench/Verify (GraftSession), master from
-  *    SPARK_GRAFT_CPUS, data dir from SPARK_GRAFT_SF_DIR.
+  *  - Same session as Bench/Verify (GraftSession.forMain), data dir
+  *    from SPARK_GRAFT_SF_DIR.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -30,9 +30,7 @@ object ExplainDump {
       "usage: ExplainDump <outDir> <tag> <comma-separated query names>")
     val Array(outDir, tag, namesCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.forMain("ERROR")
     Files.createDirectories(Paths.get(outDir))
     namesCsv.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
       val fn = SparkEntry.queries.getOrElse(name,

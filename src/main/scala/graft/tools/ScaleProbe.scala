@@ -85,9 +85,7 @@ object ScaleProbe {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ScaleProbe <sfDir> [sfDir2 ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.GraftSession.builder(s"local[$cpus]", cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.forMain("ERROR")
     try args.foreach { dir =>
       val m = probe(spark, dir)
       val body = m.toSeq.sortBy(_._1)

@@ -134,22 +134,31 @@ class GasPricesSpec extends AnyFunSuite {
 
   test("writeServingJdbc round-trips the gas_prices table through a real JDBC sink") {
     System.setProperty("derby.system.home", sys.props("java.io.tmpdir"))
-    val url =
-      s"jdbc:derby:${sys.props("java.io.tmpdir")}/graft_gp_derby_${ProcessHandle.current().pid()};create=true"
-    // twice: overwrite mode is the reference's daily-replace idempotence
-    GasPrices.writeServingJdbc(parsed, url)
-    val back = GasPrices.writeServingJdbc(parsed, url)
-    assert(back.count() === parsed.count())
-    val direct = parsed.orderBy(col("price")).collect()
-      .map(r => (r.getAs[java.math.BigDecimal]("price").toString,
-        r.getString(r.fieldIndex("station"))))
-    val rt = back.orderBy(col("price")).collect()
-      .map(r => (r.getAs[java.math.BigDecimal]("price").toString,
-        r.getString(r.fieldIndex("station"))))
-    assert(rt.toSeq === direct.toSeq)
-    // the flagship query answers identically off the JDBC store
-    assert(GasPrices.topOfDay(back, day).collect().toSeq ===
-      GasPrices.topOfDay(parsed, day).collect().toSeq)
+    withTempDir("graft-gp-derby") { tmp =>
+      val db = s"$tmp/db"
+      val url = s"jdbc:derby:$db;create=true"
+      try {
+        // twice: overwrite mode is the reference's daily-replace idempotence
+        GasPrices.writeServingJdbc(parsed, url)
+        val back = GasPrices.writeServingJdbc(parsed, url)
+        assert(back.count() === parsed.count())
+        val direct = parsed.orderBy(col("price")).collect()
+          .map(r => (r.getAs[java.math.BigDecimal]("price").toString,
+            r.getString(r.fieldIndex("station"))))
+        val rt = back.orderBy(col("price")).collect()
+          .map(r => (r.getAs[java.math.BigDecimal]("price").toString,
+            r.getString(r.fieldIndex("station"))))
+        assert(rt.toSeq === direct.toSeq)
+        // the flagship query answers identically off the JDBC store
+        assert(GasPrices.topOfDay(back, day).collect().toSeq ===
+          GasPrices.topOfDay(parsed, day).collect().toSeq)
+      } finally {
+        // a booted database holds its files open: shut it down before
+        // the delete (Derby reports a clean shutdown as an SQLException)
+        try java.sql.DriverManager.getConnection(s"jdbc:derby:$db;shutdown=true").close()
+        catch { case _: java.sql.SQLException => }
+      }
+    }
   }
 
   test("compactStore shrinks a fragmented store and preserves every row") {

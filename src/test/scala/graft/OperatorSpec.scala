@@ -4,6 +4,8 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 /** End-to-end operator specs over the sf0.001 corpus: structural
   * invariants that hold regardless of data values (the exact-value gate
   * is the driver's DuckDB crosscheck; these protect refactors between
@@ -3130,42 +3132,55 @@ class OperatorSpec extends AnyFunSuite {
     // bucket's newest resident, the state row is deleted (state.remove)
     // — the metric that separates bounded state from state that merely
     // stops answering. A NoTimeout implementation reports 0 here.
-    val base = s"${sys.props("java.io.tmpdir")}/graft_spec_lsh_ttl_${ProcessHandle.current().pid()}"
-    val pairs = streaming.Streams.lshPairsTtlStream(spark, sf, base, "90 minutes")
-    try {
+    withTempDir("graft-spec-lsh-ttl") { root =>
+      val pairs = streaming.Streams.lshPairsTtlStream(spark,
+        Tables.load(spark, sf, "documents"), root.toString, "90 minutes")
       streaming.Streams.runToMemory(pairs, "graft_spec_lsh_ttl", "append")
       val state = streaming.Streams.progress("graft_spec_lsh_ttl")
         .flatMap(Option(_)).flatMap(_.stateOperators)
       val removed = state.map(_.numRowsRemoved).sum
       assert(removed > 0,
         "no state rows physically removed — buckets linger filtered-but-resident")
-    } finally FileUtils.deleteQuietly(new java.io.File(base))
+    }
   }
+
+  /** The corpus leg of an index-seeded stream: its pairs with a
+    * non-delta endpoint, as (doc_a, doc_b, dist). */
+  private def corpusLeg(pairs: Set[(Long, Long, Int)]): Set[(Long, Long, Int)] =
+    pairs.filter { case (a, b, _) => a % 10 != 0 || b % 10 != 0 }
+
+  /** The batch Hamming probe's candidates of the delta slice against a
+    * persisted band index, as (least, greatest, dist). */
+  private def batchHammingHits(deltaBands: org.apache.spark.sql.DataFrame,
+      ix: String, h: String): Set[(Long, Long, Int)] =
+    graft.functions.Banding.hammingProbe(deltaBands,
+        spark.read.parquet(s"$ix/bands"), Seq(h), 3)
+      .collect().map { r =>
+        val (d, m) = (r.getLong(0), r.getLong(1))
+        (math.min(d, m), math.max(d, m), r.getInt(2))
+      }.toSet
 
   test("index-seeded streaming image dedup: corpus near-dups flag statelessly and survive a cold restart") {
     // VERDICT r15 #6: a restarted detector must flag near-dups of
     // already-ingested corpus docs WITHOUT reprocessing corpus files —
     // the corpus side is saveImageIndex's parquet (stream-static join),
     // not band-bucket state, so a fresh checkpoint loses nothing.
-    val ix = java.nio.file.Files.createTempDirectory("graft_spec_imgix").toString
-    graft.multimodal.Multimodal.saveImageIndex(spark, sf, ix)
-    def runOnce(tag: String): Set[(Long, Long, Int)] = {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_spec_imgix_src_" +
-        s"${tag}_${ProcessHandle.current().pid()}"
-      val pairs = streaming.Streams.hammingPairsTtlStream(spark,
-        streaming.Streams.deltaDocs(spark, sf),
-        streaming.Streams.ImageKernel, base, "4 hours", Some(ix))
-      try streaming.Streams.runToMemory(pairs, s"graft_spec_img_ix_$tag", "append")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      finally FileUtils.deleteQuietly(new java.io.File(base))
-    }
-    try {
+    withTempDir("graft-spec-imgix") { root =>
+      val ix = s"$root/ix"
+      graft.multimodal.Multimodal.saveImageIndex(spark, sf, ix)
+      def runOnce(tag: String): Set[(Long, Long, Int)] = {
+        val pairs = streaming.Streams.hammingPairsTtlStream(spark,
+          streaming.Streams.deltaDocs(spark, sf),
+          streaming.Streams.ImageKernel, s"$root/src_$tag", "4 hours", Some(ix))
+        streaming.Streams.runToMemory(pairs, s"graft_spec_img_ix_$tag", "append")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      }
       val first = runOnce("1")
       // every delta doc's scene group holds 4 corpus members at
       // planted distance <= 2 — all must surface with a CORPUS
       // partner even though the corpus never entered the stream
       val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select(org.apache.spark.sql.functions.col("doc_id"))
+        .select(col("doc_id"))
         .collect().map(_.getLong(0))
       val ids = docs.toSet
       val expected = for {
@@ -3176,12 +3191,18 @@ class OperatorSpec extends AnyFunSuite {
       val firstPairs = first.map(p => (p._1, p._2))
       expected.foreach(p =>
         assert(firstPairs.contains(p), s"missing corpus flag $p"))
+      // the corpus leg IS the batch probe's candidate set (q380's rule)
+      // over the same index — pair for pair, distance for distance
+      assert(corpusLeg(first) === batchHammingHits(
+        graft.multimodal.Multimodal.imageBandsOf(
+          streaming.Streams.deltaDocs(spark, sf).select(col("doc_id"))),
+        ix, "ahash"), "stream corpus leg forked from the batch probe")
       // COLD RESTART: new query, fresh checkpoint, empty state —
       // verdicts must be identical because the corpus side is the
       // persisted index, not state
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally FileUtils.deleteQuietly(new java.io.File(ix))
+    }
   }
 
   test("index-seeded streaming text dedup: corpus matches come from the persisted LSH index and survive a cold restart") {
@@ -3189,54 +3210,55 @@ class OperatorSpec extends AnyFunSuite {
     // side is saveLshIndex's parquet joined stream-static — no corpus
     // signature ever enters band-bucket state, so a fresh checkpoint
     // reproduces the identical pair set.
-    val ix = java.nio.file.Files.createTempDirectory("graft_spec_lshix").toString
-    graft.dedup.Dedup.saveLshIndex(spark, sf, ix)
-    def runOnce(tag: String): Set[(Long, Long)] = {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_spec_lshix_src_" +
-        s"${tag}_${ProcessHandle.current().pid()}"
-      val pairs = streaming.Streams.lshPairsTtlStreamIndexed(
-        spark, sf, base, "4 hours", ix)
-      try streaming.Streams.runToMemory(pairs, s"graft_spec_lsh_ix_$tag", "append")
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      finally FileUtils.deleteQuietly(new java.io.File(base))
-    }
-    try {
+    withTempDir("graft-spec-lshix") { root =>
+      val ix = s"$root/ix"
+      graft.dedup.Dedup.saveLshIndex(spark, sf, ix)
+      def runOnce(tag: String): Set[(Long, Long, Double)] = {
+        val pairs = streaming.Streams.lshPairsTtlStream(spark,
+          streaming.Streams.deltaDocs(spark, sf), s"$root/src_$tag",
+          "4 hours", Some(ix))
+        streaming.Streams.runToMemory(pairs, s"graft_spec_lsh_ix_$tag", "append")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      }
       val first = runOnce("1")
-      // every corpus partner must be a NON-delta doc reached through
-      // the index (delta-delta pairs are the within-stream path), and
-      // the corpus-hit set must be exactly q285's verified matches
-      val verdicts = SparkEntry.queries("q285_incremental_dedup")(spark, sf)
-        .collect()
-      val expected = verdicts.filter(_.getLong(1) > 0)
-        .map(r => (r.getLong(0), r.getLong(2))) // (new_doc, best_match)
-        .map(p => (math.min(p._1, p._2), math.max(p._1, p._2))).toSet
-      expected.foreach(p =>
-        assert(first.contains(p), s"missing corpus flag $p"))
+      // every corpus partner is a NON-delta doc reached through the
+      // index (delta-delta pairs are the within-stream path), and the
+      // corpus-hit set is exactly the batch probe's verified matches
+      // (q285/q331's rule) over the same index, Jaccard included
+      val corpusHits = first.filter { case (a, b, _) => a % 10 != 0 || b % 10 != 0 }
+      val batchMatches = graft.dedup.Dedup.textMatches(
+          streaming.Streams.deltaDocs(spark, sf).select(col("doc_id"), col("text")),
+          spark.read.parquet(s"$ix/bands"), spark.read.parquet(s"$ix/shingles"))
+        .select(col("new_doc"), col("match_doc"), col("jaccard"))
+        .collect().map { r =>
+          val (d, m) = (r.getLong(0), r.getLong(1))
+          (math.min(d, m), math.max(d, m), r.getDouble(2))
+        }.toSet
+      assert(batchMatches.nonEmpty)
+      assert(corpusHits === batchMatches,
+        "stream corpus leg forked from the batch probe's verified matches")
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally FileUtils.deleteQuietly(new java.io.File(ix))
+    }
   }
 
   test("index-seeded streaming audio dedup: corpus matches come from the persisted audio index and survive a cold restart") {
-    val ix = java.nio.file.Files.createTempDirectory("graft_spec_audix").toString
-    graft.multimodal.Audio.saveAudioIndex(spark, sf, ix)
-    def runOnce(tag: String): Set[(Long, Long, Int)] = {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_spec_audix_src_" +
-        s"${tag}_${ProcessHandle.current().pid()}"
-      val pairs = streaming.Streams.hammingPairsTtlStream(spark,
-        streaming.Streams.deltaDocs(spark, sf),
-        streaming.Streams.AudioKernel, base, "4 hours", Some(ix))
-      try streaming.Streams.runToMemory(pairs, s"graft_spec_aud_ix_$tag", "append")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-      finally FileUtils.deleteQuietly(new java.io.File(base))
-    }
-    try {
+    withTempDir("graft-spec-audix") { root =>
+      val ix = s"$root/ix"
+      graft.multimodal.Audio.saveAudioIndex(spark, sf, ix)
+      def runOnce(tag: String): Set[(Long, Long, Int)] = {
+        val pairs = streaming.Streams.hammingPairsTtlStream(spark,
+          streaming.Streams.deltaDocs(spark, sf),
+          streaming.Streams.AudioKernel, s"$root/src_$tag", "4 hours", Some(ix))
+        streaming.Streams.runToMemory(pairs, s"graft_spec_aud_ix_$tag", "append")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+      }
       val first = runOnce("1")
       // every delta doc's clip group (div 4) holds 3 corpus members at
       // planted distance <= 2 — all must surface with a corpus partner
       // even though the corpus never entered the stream
       val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select(org.apache.spark.sql.functions.col("doc_id"))
+        .select(col("doc_id"))
         .collect().map(_.getLong(0))
       val ids = docs.toSet
       val expected = for {
@@ -3248,9 +3270,14 @@ class OperatorSpec extends AnyFunSuite {
       val firstPairs = first.map(p => (p._1, p._2))
       expected.foreach(p =>
         assert(firstPairs.contains(p), s"missing corpus flag $p"))
+      // the corpus leg IS the batch probe's candidate set (q382's rule)
+      assert(corpusLeg(first) === batchHammingHits(
+        graft.multimodal.Audio.audioBandsOf(
+          streaming.Streams.deltaDocs(spark, sf).select(col("doc_id"))),
+        ix, "fp"), "stream corpus leg forked from the batch probe")
       val second = runOnce("2")
       assert(second === first, "restart changed the verdict set")
-    } finally FileUtils.deleteQuietly(new java.io.File(ix))
+    }
   }
 
   test("index-seeded streaming semantic dedup: stateless probe matches the batch probe, corpus side is the IVF index, planted within-stream pairs emit, and the set survives a cold restart") {
@@ -3259,10 +3286,10 @@ class OperatorSpec extends AnyFunSuite {
     // --- never-fork pin on the REAL corpus: the streaming stateless
     // probe (higher-order array expr) must choose exactly the batch
     // probeBuckets bucket set for every delta vector
-    val ix = java.nio.file.Files.createTempDirectory("graft_spec_semix").toString
-    val v = Sim.vecs(spark, sf)
-    Sim.saveIvfIndexOn(spark, v.filter(col("vec_id") % 10 =!= 0), ix)
-    try {
+    withTempDir("graft-spec-semix") { root =>
+      val ix = s"$root/ix"
+      val v = Sim.vecs(spark, sf)
+      Sim.saveIvfIndexOn(spark, v.filter(col("vec_id") % 10 =!= 0), ix)
       val cent = spark.read.parquet(s"$ix/centroids")
       val delta = v.filter(col("vec_id") % 10 === 0)
       val batchProbe = Sim.probeBuckets(
@@ -3285,18 +3312,13 @@ class OperatorSpec extends AnyFunSuite {
       // least one delta vector (the index side never self-pairs), and
       // a cold restart (fresh checkpoint + state) reproduces the set
       def runOnce(dir: String, tag: String): Set[(Long, Long, Double)] = {
-        val base = s"${sys.props("java.io.tmpdir")}/graft_spec_semix_src_" +
-          s"${tag}_${ProcessHandle.current().pid()}"
-        val ixr = java.nio.file.Files
-          .createTempDirectory(s"graft_spec_semix_$tag").toString
+        val ixr = s"$root/ix_$tag"
         val vv = Sim.vecs(spark, dir)
         Sim.saveIvfIndexOn(spark, vv.filter(col("vec_id") % 10 =!= 0), ixr)
         val pairs = streaming.Streams.semanticPairsStreamIndexed(
-          spark, dir, base, "4 hours", ixr)
-        try streaming.Streams.runToMemory(pairs, s"graft_spec_sem_ix_$tag", "append")
+          spark, dir, s"$root/src_$tag", "4 hours", ixr)
+        streaming.Streams.runToMemory(pairs, s"graft_spec_sem_ix_$tag", "append")
           .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-        finally { FileUtils.deleteQuietly(new java.io.File(base))
-          FileUtils.deleteQuietly(new java.io.File(ixr)) }
       }
       val first = runOnce(sf, "1")
       assert(first.nonEmpty)
@@ -3313,8 +3335,7 @@ class OperatorSpec extends AnyFunSuite {
       // three pairwise matches, including the same-micro-batch pair
       // (10,30), and the shared base partner must flag through the
       // index for each
-      val synth = java.nio.file.Files
-        .createTempDirectory("graft_spec_semsyn").toString
+      val synth = s"$root/synth"
       val dim = 64
       def unit(ax: Int, sc: Float, ax2: Int = -1, sc2: Float = 0f) = {
         val a = Array.fill(dim)(0f); a(ax) = sc
@@ -3337,21 +3358,19 @@ class OperatorSpec extends AnyFunSuite {
       spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$synth/embeddings.parquet")
-      try {
-        val planted = runOnce(synth, "3")
-        val pairSet = planted.map(p => (p._1, p._2))
-        Seq((0L, 10L), (0L, 30L), (10L, 30L)).foreach(p =>
-          assert(pairSet.contains(p), s"missing within-stream pair $p"))
-        Seq((5L, 10L), (0L, 5L), (5L, 30L)).foreach(p =>
-          assert(pairSet.contains(p), s"missing corpus partner pair $p"))
-        // orthogonal vectors must not pair: everything emitted involves
-        // the planted direction
-        val involved = Set(0L, 5L, 10L, 30L)
-        pairSet.foreach { case (a, b) =>
-          assert(involved.contains(a) && involved.contains(b),
-            s"unplanted pair ($a,$b) emitted") }
-      } finally FileUtils.deleteQuietly(new java.io.File(synth))
-    } finally FileUtils.deleteQuietly(new java.io.File(ix))
+      val planted = runOnce(synth, "3")
+      val pairSet = planted.map(p => (p._1, p._2))
+      Seq((0L, 10L), (0L, 30L), (10L, 30L)).foreach(p =>
+        assert(pairSet.contains(p), s"missing within-stream pair $p"))
+      Seq((5L, 10L), (0L, 5L), (5L, 30L)).foreach(p =>
+        assert(pairSet.contains(p), s"missing corpus partner pair $p"))
+      // orthogonal vectors must not pair: everything emitted involves
+      // the planted direction
+      val involved = Set(0L, 5L, 10L, 30L)
+      pairSet.foreach { case (a, b) =>
+        assert(involved.contains(a) && involved.contains(b),
+          s"unplanted pair ($a,$b) emitted") }
+    }
   }
 
   test("replica bucket diff flags only faulted buckets and q98-equal replicas flag none") {
