@@ -80,6 +80,15 @@ object Tables {
     nullable(schema).asInstanceOf[StructType]
   }
 
+  /** A parquet directory the engine wrote from a frame of `schema` (a
+    * file sink's output, a state snapshot, a persisted index), read with
+    * that schema's [[readBack]] form instead of Spark's inference, which
+    * would run a job that reads the files' footers. A partitioned
+    * directory lists its partition column last in `schema`, as a read
+    * gives it back. */
+  def readWritten(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    spark.read.schema(readBack(schema)).parquet(path)
+
   /** Round-robin repartition to the cluster's parallelism. The corpus
     * stores each table as ONE parquet file with ONE row group, which
     * Spark cannot split — so a scan feeding compute-heavy per-row work

@@ -338,8 +338,11 @@ object Dedup {
     * (typically the exact-Jaccard reduction): a lazy localCheckpoint
     * protects it from recomputation — the sf1 soak measured exchange
     * reuse failing to dedupe it under AQE — at the cost of extra job +
-    * block machinery per consumer. Lazy (eager = false): plan
-    * CONSTRUCTION must not run Spark jobs.
+    * block machinery per consumer. Lazy (eager = false) defers only the
+    * final stage: under AQE the call itself is one SQL execution that
+    * runs every shuffle-map stage of `df` before it returns, so plan
+    * construction does run those jobs. The final stage runs with the
+    * first action on the result.
     *
     * MEASURED A/B at sf0.1 (26-query graph family, same host window,
     * r11): materialize-always 55.5 s vs fused-plan-never 60.2 s — the
@@ -349,26 +352,48 @@ object Dedup {
   private[graft] def oneShot(df: DataFrame): DataFrame =
     df.localCheckpoint(eager = false)
 
+  /** `df` materialized by one eager localCheckpoint — one SQL execution —
+    * with the aggregates `metrics` observed as `name` inside that same
+    * execution. The observed row is read from the execution's own plan
+    * once the checkpoint has returned, when every task's accumulator
+    * update has been merged, so nothing waits on the listener bus. A
+    * missing row is an error naming `what`, never a default. */
+  private def checkpointObserved(df: DataFrame, name: String, what: String,
+      metrics: Column*): (DataFrame, org.apache.spark.sql.Row) = {
+    val observed = df.observe(name, metrics.head, metrics.tail: _*)
+    val out = observed.localCheckpoint(eager = true)
+    val row = observed.queryExecution.observedMetrics.getOrElse(name,
+      throw new IllegalStateException(s"connectedComponents: $what " +
+        s"finished without its observed metric '$name'"))
+    (out, row)
+  }
+
   /** Connected components over an undirected pair list (first two
     * columns = the two endpoint ids): every node labeled with the
-    * minimum id reachable from it.
+    * minimum id reachable from it. `propagationBudget` (at least 2)
+    * caps the propagation rounds, round one included.
     *
     * Two regimes behind one operator:
     *  1. min-label propagation for up to `propagationBudget` rounds —
-    *     O(component diameter) rounds, ONE shuffle join + one count
-    *     over the localCheckpoint-materialized frame per round (the
-    *     changed-count rides in the propagation select; no second
-    *     join). Near-dup graphs are shallow, so this is the common
-    *     exit.
+    *     O(component diameter) rounds. Round one is the seed, the least
+    *     of each node's id and its neighbours' ids; it runs fused into
+    *     round two. Every later round is ONE SQL execution: an eager
+    *     localCheckpoint of the round's joins, whose changed-label count
+    *     is observed inside that execution. Under AQE each such execution
+    *     runs its shuffle-map stages and its final stage as separate
+    *     jobs. Near-dup graphs are shallow, so this is the common exit.
     *  2. if the fixpoint is NOT reached in budget (adversarial
     *     long-chain graphs), fall back to alternating
     *     large-star/small-star contraction, which converges in
     *     O(log n) rounds regardless of diameter — no silent wrong
-    *     labels at any depth.
+    *     labels at any depth. Each of its rounds is likewise one eager
+    *     localCheckpoint that observes the edge count and checksum.
     * `localCheckpoint` truncates lineage each round so the plan never
     * grows with the loop; the driver only ever sees per-round scalar
-    * counts — no data rides through the driver. */
+    * metrics — no data rides through the driver. */
   def connectedComponents(pairs: DataFrame, propagationBudget: Int = 20): DataFrame = {
+    require(propagationBudget >= 2,
+      "the propagation budget counts round one, the seed, and at least one checked round")
     val Seq(a, b) = pairs.columns.take(2).toSeq
     // SINGLE-REFERENCE symmetrize: explode each pair into both
     // orientations, so the caller's (typically expensive) pair
@@ -385,45 +410,56 @@ object Dedup {
         struct(col(b).as("s"), col(a).as("d")))).as("e"))
       .select(col("e.s").as("src"), col("e.d").as("dst"))
       .persist()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .localCheckpoint(eager = false)
-    var converged = false
-    var iters = 0
-    while (!converged && iters < propagationBudget) {
+    // every checked round is one eager localCheckpoint of `frame` (id,
+    // label, old_label) that counts the changed labels in the same run
+    def checked(frame: DataFrame, round: Int): (DataFrame, Boolean) = {
+      val (next, changed) = checkpointObserved(frame, "cc_changed",
+        s"propagation round $round", count(when(col("label") =!= col("old_label"), 1)))
+      (next.drop("old_label"), changed.getLong(0) == 0)
+    }
+    // rounds one and two in one pass over the cached edges. Round one
+    // (the seed) labels each node with the least id of its closed
+    // neighbourhood; every node is a src of the symmetric edges, so it
+    // covers the node set. A window over dst gives each edge (v, u) u's
+    // seed, and grouping by src gives v's seed (old_label) and round
+    // two's label. Each further scan of the edges in this plan would be
+    // one more job that builds the same cache, since AQE never reuses a
+    // cached-table stage.
+    val seedOfDst = least(col("dst"),
+      min(col("src")).over(Window.partitionBy(col("dst"))))
+    var (labels, converged) = checked(
+      edges.select(col("src"), col("dst"), seedOfDst.as("nbr_label"))
+        .groupBy(col("src"))
+        .agg(least(col("src"), min(col("dst"))).as("old_label"),
+          min(col("nbr_label")).as("nbr_min"))
+        .select(col("src").as("id"), least(col("old_label"), col("nbr_min")).as("label"),
+          col("old_label")), 2)
+    var round = 2
+    while (!converged && round < propagationBudget) {
+      round += 1
       val nbrMin = edges.join(labels, edges("dst") === labels("id"))
         .groupBy(col("src"))
         .agg(min(col("label")).as("nbr_min"))
-      val next = labels.withColumnRenamed("label", "old_label")
-        .join(nbrMin, col("id") === col("src"), "left")
-        .select(col("id"),
-          least(col("old_label"), coalesce(col("nbr_min"), col("old_label")))
-            .as("label"),
-          col("old_label"))
-        // lazy: the count below materializes it in the SAME job, and
-        // later rounds re-scan the blocks, never the lineage
-        .localCheckpoint(eager = false)
-      converged = next.filter(col("label") =!= col("old_label")).count() == 0
-      labels = next.drop("old_label")
-      iters += 1
+      val (next, done) = checked(labels.withColumnRenamed("label", "old_label")
+        .join(nbrMin, col("id") === col("src"))
+        .select(col("id"), least(col("old_label"), col("nbr_min")).as("label"),
+          col("old_label")), round)
+      labels = next
+      converged = done
     }
     if (!converged) {
       // star contraction: converged when an alternating round leaves
-      // the edge set unchanged (compared via count + order-insensitive
-      // hash checksum of the materialized frames — two scalar scans).
-      // Rebuilt from the PERSISTED symmetric edges (one canonical
+      // the edge set unchanged. Each round's checkpoint observes the
+      // count and an order-insensitive hash checksum of its edges
+      // (decimal(38,0) sum: ANSI-safe against long overflow at any
+      // size). Rebuilt from the PERSISTED symmetric edges (one canonical
       // orientation per pair), not the caller's derivation — entering
       // the fallback must not re-run the upstream reduction.
-      var e = edges.filter(col("src") < col("dst")).distinct()
-        .localCheckpoint(eager = false)
-      def checksum(d: DataFrame): (Long, String) = {
-        // decimal(38,0) sum: ANSI-safe against long overflow at any size
-        val r = d.agg(count(lit(1)),
-          coalesce(sum(xxhash64(col("src"), col("dst")).cast(DecimalType(38, 0))),
-            lit(0)).cast(StringType)).head()
-        (r.getLong(0), r.getString(1))
-      }
-      var prev = checksum(e)
+      def starRound(d: DataFrame, what: String) = checkpointObserved(d,
+        "cc_star", what, count(lit(1)),
+        sum(xxhash64(col("src"), col("dst")).cast(DecimalType(38, 0))))
+      var (e, prev) = starRound(edges.filter(col("src") < col("dst")).distinct(),
+        "star contraction seed")
       var stable = false
       var rounds = 0
       while (!stable) {
@@ -433,19 +469,21 @@ object Dedup {
         // unconverged labels
         require(rounds <= 64,
           s"star contraction did not converge after $rounds rounds")
-        val next = smallStar(largeStar(e)).localCheckpoint(eager = false)
-        val cur = checksum(next) // materializes next's blocks
+        val (next, cur) = starRound(smallStar(largeStar(e)),
+          s"star contraction round $rounds")
         // checksum equality is only necessary; confirm with an exact
-        // multiset compare (runs ~once, at the end) so a 64-bit hash
-        // collision can never bless a non-fixpoint as converged
-        stable = cur == prev &&
-          next.exceptAll(e).isEmpty && e.exceptAll(next).isEmpty
+        // compare (runs ~once, at the end) so a 64-bit hash collision
+        // can never bless a non-fixpoint as converged. Both frames are
+        // distinct and their counts are equal, so next ⊆ e is next = e.
+        stable = cur == prev && next.exceptAll(e).isEmpty
         prev = cur
         e = next
       }
-      // at fixpoint e is a star forest pointing at component minima
+      // at fixpoint e is a star forest pointing at component minima;
+      // the node set comes from the last propagated labels, so the
+      // result never re-derives the edges after they are unpersisted
       val centers = e.groupBy(col("src")).agg(min(col("dst")).as("label"))
-      labels = edges.select(col("src").as("id")).distinct()
+      labels = labels.select(col("id"))
         .join(centers, col("id") === centers("src"), "left")
         .select(col("id"), coalesce(col("label"), col("id")).as("label"))
     }
@@ -1613,6 +1651,17 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$indexDir/shingles")))
   }
 
+  /** [[saveLshIndex]]'s `(bands, shingles)`, read with the schemas it
+    * writes ([[textBandRows]] with the `band` partition column last, and
+    * [[shingleSets]]) — no schema-inference job. */
+  private[graft] def lshIndex(spark: SparkSession, indexDir: String): (DataFrame, DataFrame) =
+    (readWritten(spark, s"$indexDir/bands", StructType(Seq(
+        StructField("doc_id", LongType), StructField("bkey", StringType),
+        StructField("band", IntegerType)))),
+      readWritten(spark, s"$indexDir/shingles", StructType(Seq(
+        StructField("doc_id", LongType), StructField("hx", ArrayType(LongType)),
+        StructField("n", LongType)))))
+
   /** q331 — INCREMENTAL DEDUP FROM THE PERSISTED INDEX: the q285
     * probe with its corpus side READ from [[saveLshIndex]]'s parquet
     * instead of recomputed — the actual production ingest shape
@@ -1623,11 +1672,12 @@ object Dedup {
     * every round. Band files are partition-pruned by the probe's
     * band column; shingle sets are joined only for candidates. */
   def incrementalDedupFromIndex(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame =
+      indexDir: String): DataFrame = {
+    val (bands, sets) = lshIndex(spark, indexDir)
     textProbeAgainst(
       spread(load(spark, dir, "documents")).filter(isDelta(col("doc_id"))),
-      spark.read.parquet(s"$indexDir/bands"),
-      spark.read.parquet(s"$indexDir/shingles"))
+      bands, sets)
+  }
 
   /** q331's registered form: build the index fresh in a temp dir,
     * probe from it. */

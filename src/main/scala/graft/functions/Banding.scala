@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** PIGEONHOLE BANDING over fixed-width integer fingerprints — the one
   * shared spelling of the blocking step every Hamming-distance
@@ -74,6 +75,15 @@ object Banding {
       transform(bands, b => struct(lit(family).as("family"),
         b.getField("band").as("band"), b.getField("bkey").as("bkey")))
     }: _*)
+
+  /** A persisted Hamming band index at `path`: [[banded]] `(doc_id,
+    * hashCols...)` rows over [[multiBands]] written partitioned by band,
+    * read with that schema (`band` last, as a read gives it back) instead
+    * of Spark's schema-inference job. */
+  def readHashBands(spark: SparkSession, path: String, hashCols: Seq[String]): DataFrame =
+    graft.Tables.readWritten(spark, path, StructType(
+      ("doc_id" +: hashCols :+ "bkey").map(StructField(_, LongType)) :+
+        StructField("band", IntegerType)))
 
   /** `delta` band rows joined to the `corpus` band rows with the same
     * `(band, bkey)`, aliased `d` and `c`: every probe's candidate join. */

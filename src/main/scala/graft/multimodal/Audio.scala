@@ -423,7 +423,7 @@ object Audio {
   def audioIndexProbe(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
     Multimodal.deltaVerdicts(spark, dir, audioBandsOf,
-      spark.read.parquet(s"$indexDir/bands"), "fp")
+      Banding.readHashBands(spark, s"$indexDir/bands", Seq("fp")), "fp")
 
   /** q382's registered form: per-CALL temp index (unique, deleted at
     * JVM exit — [[graft.util.Scratch]]), build then probe. */

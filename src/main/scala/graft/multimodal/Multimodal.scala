@@ -1407,7 +1407,7 @@ object Multimodal {
   def imageIndexProbe(spark: SparkSession, dir: String,
       indexDir: String): DataFrame =
     deltaVerdicts(spark, dir, imageBandsOf,
-      spark.read.parquet(s"$indexDir/bands"), "ahash")
+      Banding.readHashBands(spark, s"$indexDir/bands", Seq("ahash")), "ahash")
 
   /** q380's registered form: build the index fresh in a per-CALL temp
     * dir (unique — concurrent calls never race on overwrite; deleted

@@ -438,9 +438,8 @@ object Pipeline {
     * ordinal preserves the (round, source) lexicographic order, so a
     * corpus with ≥1024 sources cannot bleed src_ord into the next
     * round's keyspace. `mult` is derived IN-PLAN (a window count over
-    * the already-single-partition ordinal frame), so constructing the
-    * DataFrame runs NO Spark job (the repo convention, Dedup.scala
-    * `connectedComponents` note) and the distinct-source subtree is
+    * the already-single-partition ordinal frame), so deriving it runs
+    * no Spark job of its own and the distinct-source subtree is
     * computed exactly once. */
   private def interleaveKeyed(docs: DataFrame): DataFrame = {
     val wSrc = Window.partitionBy(col("source")).orderBy(col("doc_id"))

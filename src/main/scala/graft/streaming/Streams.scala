@@ -6,7 +6,7 @@ import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQueryProgress, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import graft.Tables._
 
 /** Structured Streaming coverage (SURVEY.md §2.10 — the reference
@@ -205,7 +205,7 @@ object Streams {
     val base = freshTmp(name, dir)
     runBounded(df, name, s"$base/ckpt", stateful = true)(
       _.format("parquet").option("path", s"$base/out").outputMode("append"))
-    df.sparkSession.read.parquet(s"$base/out")
+    readWritten(df.sparkSession, s"$base/out", df.schema)
   }
 
   /** Streaming exactly-once dedup + aggregation: dropDuplicates keyed
@@ -593,6 +593,10 @@ object Streams {
     val stream = splitStream(
       events(spark, dir).select(col("event_id"), col("user_id"), col("value")), base)
     var version = -1L
+    // every version holds (user_id, balance, n_events) in these types
+    val snapshotSchema = StructType(Seq(stream.schema("user_id"),
+      StructField("balance", dec), StructField("n_events", LongType)))
+    def snapshot() = readWritten(spark, s"$stateDir/v=$version", snapshotSchema)
     runBounded(stream, "graft_stream_merge", s"$base/ckpt", stateful = false)(
       _.foreachBatch { (batch: DataFrame, batchId: Long) =>
         val delta = batch
@@ -603,7 +607,7 @@ object Streams {
           if (version < 0)
             delta.select(col("user_id"), col("delta").as("balance"),
               col("dn").as("n_events"))
-          else spark.read.parquet(s"$stateDir/v=$version")
+          else snapshot()
             .join(delta, Seq("user_id"), "full_outer")
             .select(col("user_id"),
               (coalesce(col("balance"), lit(0).cast(dec))
@@ -615,7 +619,7 @@ object Streams {
         version = batchId
       })
     require(version >= 3, s"expected >=4 micro-batches, last id $version")
-    spark.read.parquet(s"$stateDir/v=$version")
+    snapshot()
       .select(col("user_id"), col("balance").cast("double").as("balance"),
         col("n_events"))
       .orderBy(col("user_id"))
@@ -947,7 +951,7 @@ object Streams {
       base: String): DataFrame = {
     FileUtils.deleteQuietly(new java.io.File(base)): Unit
     df.write.mode("overwrite").parquet(s"$base/all")
-    val staged = spark.read.schema(readBack(df.schema)).parquet(s"$base/all")
+    val staged = readWritten(spark, s"$base/all", df.schema)
     new java.io.File(s"$base/src").mkdirs(): Unit
     val mtime0 = new java.io.File(base).lastModified()
     // the batch cuts are independent single-file jobs off the same
@@ -1127,12 +1131,11 @@ object Streams {
         bandBucket, "doc_id", col("sig"), minhashEstimate)
       .toDF("doc_a", "doc_b", "est_jaccard")
     indexDir.fold(streamPairs) { ix =>
-      val cand = graft.functions.Banding.bandJoin(banded,
-          spark.read.parquet(s"$ix/bands"))
+      val (bands, sets) = Dedup.lshIndex(spark, ix)
+      val cand = graft.functions.Banding.bandJoin(banded, bands)
         .select(col("d.doc_id").as("new_doc"), col("c.doc_id").as("match_doc"),
           col("d.ha"), col("d.na"))
-      streamPairs.unionByName(orderedPairs(
-        Dedup.verifyJaccard(cand, spark.read.parquet(s"$ix/shingles")),
+      streamPairs.unionByName(orderedPairs(Dedup.verifyJaccard(cand, sets),
         col("jaccard").as("est_jaccard")))
     }
   }
@@ -1198,7 +1201,8 @@ object Streams {
       .toDF("doc_a", "doc_b", "dist")
     indexDir.fold(streamPairs) { ix =>
       streamPairs.unionByName(orderedPairs(Banding.hammingProbe(fanned,
-        spark.read.parquet(s"$ix/bands"), Seq(h), HashRadius), col("dist")))
+        Banding.readHashBands(spark, s"$ix/bands", Seq(h)), Seq(h), HashRadius),
+        col("dist")))
     }
   }
 

@@ -99,25 +99,26 @@ class PlanSpec extends AnyFunSuite {
   test("dynamic partition pruning: a filtered dim prunes fact partitions at runtime") {
     import org.apache.spark.sql.functions._
     run("q64_partition_pruning").collect() // materializes the partitioned store
-    val safe = sf.replaceAll("[^A-Za-z0-9]", "_")
     val fact = spark.read.parquet(graft.util.Scratch.tmpPath("graft_events_by_day", sf))
     val twoDays = fact.select(col("day")).distinct().orderBy(col("day"))
       .limit(2).collect().map(_.getDate(0))
     import spark.implicits._
     // the dim must be a FILE source: a local relation constant-folds
     // its filter away and leaves DPP nothing to hook
-    val dimPath = s"${sys.props("java.io.tmpdir")}/graft_dpp_dim$safe"
-    Seq((twoDays(0), "keep"), (twoDays(1), "drop")).toDF("d", "flag")
-      .write.mode("overwrite").parquet(dimPath)
-    val dim = spark.read.parquet(dimPath)
-    val joined = fact.join(dim.filter(col("flag") === "keep"),
-      fact("day") === dim("d"))
-      .groupBy(col("event_type")).count()
-    val plan = formatted(joined)
-    // the fact scan's PartitionFilters must carry a runtime
-    // (dynamicpruning) predicate fed by the dim filter — at 10k
-    // partitions this is the difference between 1 and all partitions
-    assert(plan.contains("dynamicpruning"), plan)
+    TempDirs.withTempDir("graft_dpp_dim") { root =>
+      val dimPath = s"$root/dim"
+      Seq((twoDays(0), "keep"), (twoDays(1), "drop")).toDF("d", "flag")
+        .write.mode("overwrite").parquet(dimPath)
+      val dim = spark.read.parquet(dimPath)
+      val joined = fact.join(dim.filter(col("flag") === "keep"),
+        fact("day") === dim("d"))
+        .groupBy(col("event_type")).count()
+      val plan = formatted(joined)
+      // the fact scan's PartitionFilters must carry a runtime
+      // (dynamicpruning) predicate fed by the dim filter — at 10k
+      // partitions this is the difference between 1 and all partitions
+      assert(plan.contains("dynamicpruning"), plan)
+    }
   }
 
   test("q35 knn broadcasts the query side (no shuffle of the corpus)") {
@@ -856,9 +857,9 @@ class PlanSpec extends AnyFunSuite {
     // nothing else — a corpus-side recompute would (a) scan the corpus
     // parquet and (b) add a second render chain (SerializeFromObject)
     // to the image plan. Both are pinned absent here.
-    val corp = java.nio.file.Files.createTempDirectory("graft_pp_c").toString
-    val ix = java.nio.file.Files.createTempDirectory("graft_pp_ix").toString
-    try {
+    TempDirs.withTempDir("graft_pp") { root =>
+      val corp = s"$root/corpus"
+      val ix = s"$root/index"
       graft.Tables.load(spark, sf, "documents").limit(40)
         .write.mode("overwrite").parquet(corp)
       graft.ops.Pipeline.saveIngestIndexes(spark, corp, ix)
@@ -922,9 +923,6 @@ class PlanSpec extends AnyFunSuite {
         assert(countShuffles(plan) <= 1, // the post-semi tiny distinct
           s"the $key probe may shuffle only the tiny hit set:\n$plan")
       }
-    } finally {
-      Seq(corp, ix).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
@@ -969,11 +967,11 @@ class PlanSpec extends AnyFunSuite {
     import spark.implicits._
     val gp = graft.ingest.GasPrices
     val day = java.time.LocalDate.of(2023, 4, 1)
-    val dir = java.nio.file.Files.createTempDirectory("graft-plan-gas").toString
-    try {
+    TempDirs.withTempDir("graft-plan-gas") { root =>
+      val dir = root.toString
       gp.writeCanonical(gp.parse(Seq((1L, gp.fixtureHtml)).toDF("page_id", "html"), day), dir)
       val plan = preparedPlan(gp.topOfDay(spark.read.parquet(dir), day))
       assert(countShuffles(plan) === 0, plan.toString)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir)): Unit
+    }
   }
 }

@@ -18,8 +18,9 @@ import graft.util.Probes
 
 /** [[Tables.read]]: a single-file table read with its footer's schema,
   * read on the driver, is the frame `spark.read.parquet` infers, with no
-  * Spark job; and the staged streams take the schema parquet would infer
-  * from what they just wrote ([[Tables.readBack]]). */
+  * Spark job; the staged streams take the schema parquet would infer
+  * from what they just wrote ([[Tables.readBack]]); and so do the reads
+  * of directories the engine wrote ([[Tables.readWritten]]). */
 class TablesSpec extends AnyFunSuite {
 
   private lazy val spark = GraftSession.test()
@@ -134,6 +135,53 @@ class TablesSpec extends AnyFunSuite {
       val timer = graft.streaming.Streams.timerFlushInput(spark, Sf)
       timer.write.parquet(s"$base/timer")
       assert(Tables.readBack(timer.schema) === spark.read.parquet(s"$base/timer").schema)
+    }
+  }
+
+  /** `read` of `path`, a directory the engine wrote, runs no job and gives
+    * the schema and rows of Spark's inferring read, which runs one. */
+  private def assertNoJobRead(path: String)(read: => DataFrame): Unit = {
+    val (ours, jobs) = Probes.jobs(spark)(read)
+    assert(jobs === 0, path)
+    val (inferred, inferJobs) = Probes.jobs(spark)(spark.read.parquet(path))
+    assert(inferJobs > 0, path)
+    assert(ours.schema === inferred.schema, path)
+    assert(ours.exceptAll(inferred).isEmpty && inferred.exceptAll(ours).isEmpty, path)
+  }
+
+  test("a file sink's output and a v=<n> snapshot read back with their writer's schema and no job") {
+    withTempDir("graft-tables-written") { tmp =>
+      val base = tmp.toString
+      // a bounded stream into a parquet file sink, as Streams.runToFiles runs it
+      val stream = graft.streaming.Streams.splitStream(Tables.events(spark, Sf)
+        .select(col("event_id"), col("user_id"), col("value")), s"$base/sink")
+      graft.streaming.Streams.runBounded(stream, "graft_tables_sink", s"$base/sink/ckpt",
+        stateful = false)(_.format("parquet").option("path", s"$base/sink/out")
+        .outputMode("append"))
+      assertNoJobRead(s"$base/sink/out")(
+        Tables.readWritten(spark, s"$base/sink/out", stream.schema))
+      // a state snapshot directory named like a partition, as q188 writes it
+      val snap = Tables.events(spark, Sf).groupBy(col("user_id"))
+        .agg(sum(col("value")).cast("decimal(28,2)").as("balance"),
+          count(lit(1)).as("n_events"))
+      snap.write.parquet(s"$base/state/v=3")
+      assertNoJobRead(s"$base/state/v=3")(
+        Tables.readWritten(spark, s"$base/state/v=3", snap.schema))
+    }
+  }
+
+  test("persisted band and shingle indexes read back with their writer's schema and no job") {
+    withTempDir("graft-tables-index") { root =>
+      val ix = root.toString
+      graft.multimodal.Multimodal.saveImageIndex(spark, Sf, s"$ix/img")
+      assertNoJobRead(s"$ix/img/bands")(
+        graft.functions.Banding.readHashBands(spark, s"$ix/img/bands", Seq("ahash")))
+      graft.multimodal.Audio.saveAudioIndex(spark, Sf, s"$ix/aud")
+      assertNoJobRead(s"$ix/aud/bands")(
+        graft.functions.Banding.readHashBands(spark, s"$ix/aud/bands", Seq("fp")))
+      graft.dedup.Dedup.saveLshIndex(spark, Sf, s"$ix/lsh")
+      assertNoJobRead(s"$ix/lsh/bands")(graft.dedup.Dedup.lshIndex(spark, s"$ix/lsh")._1)
+      assertNoJobRead(s"$ix/lsh/shingles")(graft.dedup.Dedup.lshIndex(spark, s"$ix/lsh")._2)
     }
   }
 }
