@@ -89,6 +89,16 @@ object Tables {
   def readWritten(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.schema(readBack(schema)).parquet(path)
 
+  /** `df` materialized once: written to `path` (a dir the caller owns,
+    * replaced if present) and read back in `spark` by [[readWritten]]
+    * with `df`'s schema. Every later consumer scans the files instead of
+    * re-running `df`'s lineage, and no later append to a path `df` reads
+    * can reach it. */
+  def snapshot(spark: SparkSession, df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    readWritten(spark, path, df.schema)
+  }
+
   /** Round-robin repartition to the cluster's parallelism. The corpus
     * stores each table as ONE parquet file with ONE row group, which
     * Spark cannot split — so a scan feeding compute-heavy per-row work

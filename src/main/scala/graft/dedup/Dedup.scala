@@ -1651,16 +1651,22 @@ object Dedup {
         .write.mode("overwrite").parquet(s"$indexDir/shingles")))
   }
 
+  /** The persisted schema of [[textBandRows]], written partitioned by
+    * band (`band` last, as a read gives it back). */
+  private[graft] val TextBandSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("bkey", StringType),
+    StructField("band", IntegerType)))
+
+  /** The persisted schema of [[shingleSets]]. */
+  private[graft] val ShingleSetSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("hx", ArrayType(LongType)),
+    StructField("n", LongType)))
+
   /** [[saveLshIndex]]'s `(bands, shingles)`, read with the schemas it
-    * writes ([[textBandRows]] with the `band` partition column last, and
-    * [[shingleSets]]) — no schema-inference job. */
+    * writes — no schema-inference job. */
   private[graft] def lshIndex(spark: SparkSession, indexDir: String): (DataFrame, DataFrame) =
-    (readWritten(spark, s"$indexDir/bands", StructType(Seq(
-        StructField("doc_id", LongType), StructField("bkey", StringType),
-        StructField("band", IntegerType)))),
-      readWritten(spark, s"$indexDir/shingles", StructType(Seq(
-        StructField("doc_id", LongType), StructField("hx", ArrayType(LongType)),
-        StructField("n", LongType)))))
+    (readWritten(spark, s"$indexDir/bands", TextBandSchema),
+      readWritten(spark, s"$indexDir/shingles", ShingleSetSchema))
 
   /** q331 — INCREMENTAL DEDUP FROM THE PERSISTED INDEX: the q285
     * probe with its corpus side READ from [[saveLshIndex]]'s parquet

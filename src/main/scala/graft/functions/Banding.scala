@@ -76,14 +76,17 @@ object Banding {
         b.getField("band").as("band"), b.getField("bkey").as("bkey")))
     }: _*)
 
-  /** A persisted Hamming band index at `path`: [[banded]] `(doc_id,
+  /** The schema of a persisted Hamming band index: [[banded]] `(doc_id,
     * hashCols...)` rows over [[multiBands]] written partitioned by band,
-    * read with that schema (`band` last, as a read gives it back) instead
-    * of Spark's schema-inference job. */
+    * with `band` last, as a read gives it back. */
+  def hashBandSchema(hashCols: Seq[String]): StructType =
+    StructType(("doc_id" +: hashCols :+ "bkey").map(StructField(_, LongType)) :+
+      StructField("band", IntegerType))
+
+  /** A persisted Hamming band index at `path`, read with
+    * [[hashBandSchema]] instead of Spark's schema-inference job. */
   def readHashBands(spark: SparkSession, path: String, hashCols: Seq[String]): DataFrame =
-    graft.Tables.readWritten(spark, path, StructType(
-      ("doc_id" +: hashCols :+ "bkey").map(StructField(_, LongType)) :+
-        StructField("band", IntegerType)))
+    graft.Tables.readWritten(spark, path, hashBandSchema(hashCols))
 
   /** `delta` band rows joined to the `corpus` band rows with the same
     * `(band, bkey)`, aliased `d` and `c`: every probe's candidate join. */

@@ -620,9 +620,8 @@ object Multimodal {
     * is ≪ 1e-12 per pair, so the oracle is sound through sf10 —
     * same probabilistic-ceiling bookkeeping as q368/q372. */
   def clipNearDup(spark: SparkSession, dir: String): DataFrame = {
-    val scratch = graft.util.Scratch.indexDir("graft_clip_fh", dir)
-    clipFrameHashes(spark, dir).write.parquet(scratch)
-    val fh = spark.read.parquet(scratch)
+    val fh = snapshot(spark, clipFrameHashes(spark, dir),
+      graft.util.Scratch.indexDir("graft_clip_fh", dir))
     val bands = Banding.banded(
       fh.select(col("doc_id"), col("frame_idx"), col("fhash")),
       Banding.multiBands(Seq(col("fhash")), 4, 16))
@@ -732,8 +731,7 @@ object Multimodal {
   def clipNearDupTrimTolerant(spark: SparkSession, dir: String): DataFrame = {
     // decode-once discipline (q383's): one decode pass to scratch,
     // read by the band side and both verify sides
-    val scratch: String = graft.util.Scratch.indexDir("graft_trim_fh", dir)
-    locally {
+    val fh = snapshot(spark, {
       import spark.implicits._
       generatedTrimClips(spark, dir).mapPartitions { it =>
         it.grouped(DecodeBatch).flatMap(_.flatMap { r =>
@@ -742,9 +740,8 @@ object Multimodal {
             (r.doc_id, f, aHash64(px, 64, 64), frames.length)
           }
         })
-      }.toDF("doc_id", "frame_idx", "fhash", "nf").write.parquet(scratch)
-    }
-    val fh = spark.read.parquet(scratch)
+      }.toDF("doc_id", "frame_idx", "fhash", "nf")
+    }, graft.util.Scratch.indexDir("graft_trim_fh", dir))
     val bands = Banding.banded(
       fh.select(col("doc_id"), col("frame_idx"), col("fhash")),
       Banding.multiBands(Seq(col("fhash")), 4, 16))

@@ -907,11 +907,9 @@ object Pipeline {
     // guard and the image cluster stage — one decode, two consumers.
     val quadHashes: Option[DataFrame] = imagePolicy match {
       case WideRadius7 =>
-        val scratch = graft.util.Scratch.indexDir("graft_wide_quad", dir)
-        graft.multimodal.Multimodal.quadHash(
-            graft.multimodal.Multimodal.generatedMediaQuad256(spark, dir))
-          .toDF().write.parquet(scratch)
-        val h = spark.read.parquet(scratch)
+        val h = snapshot(spark, graft.multimodal.Multimodal.quadHash(
+            graft.multimodal.Multimodal.generatedMediaQuad256(spark, dir)).toDF(),
+          graft.util.Scratch.indexDir("graft_wide_quad", dir))
         guardWideBandingFrom(h)
         Some(h)
       case NarrowRadius3 => None
@@ -983,35 +981,102 @@ object Pipeline {
     * per corpus and a batch pays O(batch) plus band-pruned joins. The
     * gauntlet itself ([[ingestGauntlet]]) is one shared function, so
     * the two forms can never fork. */
-  private case class IngestHandles(keys: DataFrame, textBands: DataFrame,
+  private[graft] case class IngestHandles(keys: DataFrame, textBands: DataFrame,
     textSets: DataFrame, imageBands: DataFrame, audioBands: DataFrame)
 
-  /** SORTED index layout (VERDICT r15 #1): every band asset is range-
-    * partitioned and sorted on (band, bkey) before it lands, so each
-    * parquet file/row-group covers a tight bkey range and min/max
-    * stats can skip everything a probe's key set doesn't touch —
-    * range partitioning (not `repartition(col("band"))`) keeps the
-    * write parallel at any asset size instead of collapsing to one
-    * task per band. */
-  private def bandSorted(df: DataFrame): DataFrame =
-    df.repartitionByRange(col("band"), col("bkey"))
-      .sortWithinPartitions(col("band"), col("bkey"))
+  private[graft] object IngestHandles {
+    /** The five handles of a (doc_id, text) frame under `policy`. */
+    def of(docs: DataFrame, policy: ImageDedupPolicy): IngestHandles = {
+      val ids = docs.select(col("doc_id"))
+      IngestHandles(
+        keys = docs.select(col("doc_id"),
+          graft.dedup.Dedup.contentKey(col("text")).as("ck")),
+        textBands = graft.dedup.Dedup.textBandRows(docs),
+        textSets = graft.dedup.Dedup.shingleSets(docs),
+        imageBands = policy.bandsOf(ids),
+        audioBands = graft.multimodal.Audio.audioBandsOf(ids))
+    }
 
-  /** The non-band assets' sorted layout: keys by content key (the
-    * exact-stage probe key), shingle sets by doc_id (the candidate-
-    * fetch join key). */
-  private def keySorted(df: DataFrame, k: String): DataFrame =
-    df.repartitionByRange(col(k)).sortWithinPartitions(col(k))
+    /** The handles whose every frame is `frame` of its [[IndexAsset]]. */
+    def from(frame: IndexAsset => DataFrame): IngestHandles =
+      IngestHandles(frame(KeysAsset), frame(TextBandsAsset),
+        frame(TextSetsAsset), frame(ImageBandsAsset), frame(AudioBandsAsset))
+  }
 
-  /** The APPEND-path variant: sort only, never re-range — a per-batch
-    * append is small, and repartitionByRange's sampling pass + 32-way
-    * shuffle would add fixed jobs and a fan of tiny files to every
-    * ingest (measured ~2 s/batch at ProbeIngest's 100-doc batch).
-    * Each appended file still lands internally sorted, so its row-
-    * group min/max stats stay tight; the file-count growth is the
+  /** One asset of the persisted ingest index: its directory name, the
+    * handle it stores, its schema under a policy, and its layout. A band
+    * asset (`sortKey` None) is partitioned by band and sorted on (band,
+    * bkey); the others are sorted on `sortKey` — keys by content key (the
+    * exact-stage probe key), shingle sets by doc_id (the candidate-fetch
+    * join key).
+    *
+    * A build lands SORTED (VERDICT r15 #1): range-partitioned and sorted
+    * before it is written, so each parquet file/row-group covers a tight
+    * key range and min/max stats can skip everything a probe's key set
+    * does not touch — range partitioning (not `repartition(col("band"))`)
+    * keeps the write parallel at any asset size instead of collapsing to
+    * one task per band. An append sorts only, never re-ranges: a per-
+    * batch append is small, and repartitionByRange's sampling pass and
+    * 32-way shuffle would add fixed jobs and a fan of tiny files to every
+    * ingest. Each appended file still lands internally sorted, so its
+    * row-group min/max stats stay tight; the file-count growth is the
     * compaction routine's job, not the writer's. */
-  private def appendSorted(df: DataFrame, cols: String*): DataFrame =
-    df.sortWithinPartitions(cols.map(col): _*)
+  private[graft] case class IndexAsset(name: String,
+      of: IngestHandles => DataFrame, schema: ImageDedupPolicy => StructType,
+      sortKey: Option[String] = None) {
+    def write(df: DataFrame, indexDir: String, append: Boolean): Unit = {
+      val sortCols = sortKey.fold(Seq("band", "bkey"))(Seq(_)).map(col)
+      val ranged = if (append) df else df.repartitionByRange(sortCols: _*)
+      val w = ranged.sortWithinPartitions(sortCols: _*)
+        .write.mode(if (append) "append" else "overwrite")
+      (if (sortKey.isEmpty) w.partitionBy("band") else w)
+        .parquet(s"$indexDir/$name")
+    }
+
+    def read(spark: SparkSession, indexDir: String,
+        policy: ImageDedupPolicy): DataFrame =
+      readWritten(spark, s"$indexDir/$name", schema(policy))
+  }
+
+  private val KeysAsset = IndexAsset("keys", _.keys,
+    _ => StructType(Seq(StructField("doc_id", LongType),
+      StructField("ck", StringType))), Some("ck"))
+  private val TextBandsAsset = IndexAsset("text_bands", _.textBands,
+    _ => graft.dedup.Dedup.TextBandSchema)
+  private val TextSetsAsset = IndexAsset("text_shingles", _.textSets,
+    _ => graft.dedup.Dedup.ShingleSetSchema, Some("doc_id"))
+  private val ImageBandsAsset = IndexAsset("image_bands", _.imageBands,
+    p => graft.functions.Banding.hashBandSchema(p.hashCols))
+  private val AudioBandsAsset = IndexAsset("audio_bands", _.audioBands,
+    _ => graft.functions.Banding.hashBandSchema(Seq("fp")))
+
+  /** Write one frame per asset (`frame`) into the index at `indexDir`:
+    * the four band/set assets target disjoint paths, so they run
+    * CONCURRENTLY (optimization r16, guide §2.6: wall-clock pays
+    * max(write), not Σ(write), and independent jobs back-fill each
+    * other's straggler tails); `frame` is evaluated inside each asset's
+    * own job. The KEYS asset writes LAST and alone, after every band/set
+    * write has succeeded — the keys sidecar is the index's COMMIT MARKER
+    * (VERDICT r15 #2): a doc present in keys is guaranteed fully
+    * indexed, so [[repairIngestIndexes]]' keys anti-join finds EVERY
+    * partially-indexed doc, and a crashed build (no keys) is told apart
+    * exactly like a crashed append. */
+  private def writeIndex(indexDir: String, append: Boolean)(
+      frame: IndexAsset => DataFrame): Unit = {
+    graft.util.Concurrency.awaitSettled(
+      Seq(TextBandsAsset, TextSetsAsset, ImageBandsAsset, AudioBandsAsset)
+        .map(a => () => a.write(frame(a), indexDir, append)))
+    KeysAsset.write(frame(KeysAsset), indexDir, append)
+  }
+
+  /** The persisted ingest index at `indexDir`: its recorded image policy
+    * (one job, the meta row) and its five assets, each read with its
+    * writer's schema — no schema-inference job. */
+  private[graft] def openIngestIndex(spark: SparkSession,
+      indexDir: String): (ImageDedupPolicy, IngestHandles) = {
+    val policy = readPolicy(spark, s"$indexDir/meta")
+    (policy, IngestHandles.from(_.read(spark, indexDir, policy)))
+  }
 
   /** The stage-1/3 corpus-key probe of the ingest gauntlet, factored
     * so PlanSpec can pin its physical shape: which of the batch's keys
@@ -1047,16 +1112,21 @@ object Pipeline {
         "word before a radius-7 build is safe (q376's tripwire)")
   }
 
-  private def policyOf(name: String): ImageDedupPolicy =
-    Seq(NarrowRadius3, WideRadius7).find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(
-        s"unknown image policy in index meta: $name"))
+  private val PolicySchema = StructType(Seq(StructField("image_policy", StringType)))
 
   private def writePolicyMeta(spark: SparkSession, p: ImageDedupPolicy,
       path: String): Unit = {
     import spark.implicits._
     Seq(p.name).toDF("image_policy")
       .write.mode("overwrite").parquet(path)
+  }
+
+  /** The policy [[writePolicyMeta]] recorded at `path`. */
+  private def readPolicy(spark: SparkSession, path: String): ImageDedupPolicy = {
+    val name = readWritten(spark, path, PolicySchema).head().getString(0)
+    Seq(NarrowRadius3, WideRadius7).find(_.name == name).getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown image policy in index meta: $name"))
   }
 
   /** The policy recorded in the artifact by [[prepareCorpus]] — None
@@ -1066,9 +1136,7 @@ object Pipeline {
       corpusDir: String): Option[ImageDedupPolicy] = {
     val path = new org.apache.hadoop.fs.Path(corpusDir, "_image_policy")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path))
-      Some(policyOf(spark.read.parquet(path.toString).head().getString(0)))
-    else None
+    if (fs.exists(path)) Some(readPolicy(spark, path.toString)) else None
   }
 
   /** Fail loudly when a writer's policy disagrees with the one the
@@ -1133,11 +1201,11 @@ object Pipeline {
     *
     * Returns the stage-count audit (q329's dashboard shape). Stage
     * counts are materialized BEFORE any append (one aggregation over
-    * one persisted O(batch) flag frame, then the accepted media bands
-    * are counted), so the audit reads the pre-append handles and no
-    * append can feed back into a probe's lineage; the writes then
-    * reuse the same cached frames. `batch` must not itself be a live
-    * read of `corpusDir` or the index. */
+    * one persisted O(batch) flag frame, then the accepted docs' bands
+    * are snapshotted and self-probed), so the audit reads the pre-append
+    * handles and no append can feed back into a probe's lineage; the
+    * writes then read the same snapshots. `batch` must not itself be a
+    * live read of `corpusDir` or the index. */
   private def ingestGauntlet(spark: SparkSession, corpusDir: String,
       batch: DataFrame, h: IngestHandles, imagePolicy: ImageDedupPolicy,
       maintainIndex: Option[String]): DataFrame = {
@@ -1165,11 +1233,8 @@ object Pipeline {
     // once, and everything downstream — including the repeated base
     // subtrees inside the flags plan — broadcasts a KB-sized parquet
     // instead of re-deriving a semi-join
-    def snapHits(df: DataFrame, tag: String): DataFrame = {
-      val s = graft.util.Scratch.indexDir(s"graft_hits_$tag", corpusDir)
-      df.write.parquet(s)
-      spark.read.parquet(s)
-    }
+    def snapHits(df: DataFrame, tag: String): DataFrame =
+      snapshot(spark, df, graft.util.Scratch.indexDir(s"graft_hits_$tag", corpusDir))
     val idHits = snapHits(indexHits(h.keys, batch.select(col("doc_id")),
       "doc_id", "id0"), "id")
     val ckHits = snapHits(indexHits(h.keys,
@@ -1256,87 +1321,53 @@ object Pipeline {
       // state) skips the snapshot, the self-probes, and every append:
       // each would be a fixed-cost Spark job writing nothing
       val intra = if (c.getLong(6) == 0L) 0L else {
-        flags.filter(acceptedPred).write.parquet(scratch)
-        val accepted = spark.read.parquet(scratch)
+        val accepted = snapshot(spark, flags.filter(acceptedPred), s"$scratch/accepted")
         val accDocs = accepted.select(col("doc_id"), col("text"))
-        val accImgBands = imagePolicy.bandsOf(accDocs.select(col("doc_id")))
-          .persist()
-        val accAudBands = Audio.audioBandsOf(accDocs.select(col("doc_id")))
-          .persist()
-        val accTextBands = Dedup.textBandRows(accDocs).persist()
-        val accTextSets = Dedup.shingleSets(accDocs).persist()
-        try {
-          // within-batch near-dup audit (the batch contract,
-          // measured): self-probes over the ACCEPTED set only —
-          // O(batch) band joins, zero corpus work. ALL FOUR accepted
-          // band/set frames are persisted and reused by the index
-          // maintenance below — the signature/shingle/decode work per
-          // accepted doc is paid once, not once per consumer.
-          val accNew = accDocs.select(col("doc_id").as("new_doc"))
-          val violations = Dedup.textProbeAgainst(accDocs,
-              accTextBands, accTextSets)
-            .filter(col("n_matches") >= 2).select(col("new_doc"))
-            .unionByName(imagePolicy.probe(accImgBands, accImgBands, accNew)
-              .filter(col("n_matches") >= 2).select(col("new_doc")))
-            .unionByName(Multimodal.bandProbeVerdict(accAudBands,
-                accAudBands, accNew, Seq("fp"), 3)
-              .filter(col("n_matches") >= 2).select(col("new_doc")))
-            .distinct().count()
-          // APPEND ORDER IS A RECOVERY CONTRACT, two-phase: (1) the
-          // artifact append runs FIRST and alone — the append-only
-          // artifact is the source of truth, and a doc must never be
-          // CLAIMED by the index (id-guard keys) before it exists in
-          // the artifact, or a failed ingest re-delivered would drop
-          // the docs at stage 1 and silently lose them; (2) the KEYS
-          // append runs LAST and alone, after every band/set append
-          // has succeeded — the keys sidecar is the index's COMMIT
-          // MARKER (VERDICT r15 #2): a doc present in keys is
-          // guaranteed fully indexed, so [[repairIngestIndexes]]'
-          // keys anti-join finds EVERY partially-indexed doc, not
-          // just the all-assets-missing case. A failure anywhere
-          // between (1) and (2) leaves the artifact ahead of keys —
-          // one DETECTABLE divergence class, reconciled in O(missing
-          // docs); run repair before the next batch.
-          withSplit(accepted
-              .drop(IngestReserved.filterNot(_ == "split"): _*))
-            .select(artifactCols.map(col): _*)
-            .write.mode("append").partitionBy("split")
-            .parquet(corpusDir)
-          // the four band/set appends (the accepted docs' rows APPEND
-          // to the same assets the probe read, so batch N+1 probes
-          // the grown index without a rebuild: the q331/q380/q382
-          // asset lifecycle kept current by the writer itself) target
-          // four DISJOINT paths and read only materialized snapshot/
-          // band frames, so they run CONCURRENTLY: wall-clock pays
-          // max(append), not Σ(append) — driver-serialized small
-          // writes are a fixed tax that dwarfs the O(batch) work.
-          // Every append lands SORTED (bandSorted/ckSorted) so parquet
-          // row-group min/max stats stay selective as the asset grows.
-          maintainIndex.foreach { ix =>
-            val appends = Seq[() => Unit](
-              () => appendSorted(accTextBands, "band", "bkey")
-                .write.mode("append").partitionBy("band")
-                .parquet(s"$ix/text_bands"),
-              () => appendSorted(accTextSets, "doc_id")
-                .write.mode("append").parquet(s"$ix/text_shingles"),
-              () => appendSorted(accImgBands, "band", "bkey")
-                .write.mode("append").partitionBy("band")
-                .parquet(s"$ix/image_bands"),
-              () => appendSorted(accAudBands, "band", "bkey")
-                .write.mode("append").partitionBy("band")
-                .parquet(s"$ix/audio_bands"))
-            graft.util.Concurrency.awaitSettled(appends)
-            // keys LAST — the commit marker (see the contract above)
-            appendSorted(accepted.select(col("doc_id"), col("ck")), "ck")
-              .write.mode("append").parquet(s"$ix/keys")
-          }
-          violations
-        } finally {
-          accImgBands.unpersist()
-          accAudBands.unpersist()
-          accTextBands.unpersist()
-          accTextSets.unpersist(): Unit
-        }
+        // each accepted band/set frame is materialized exactly ONCE, to
+        // scratch, before anything reads it: the self-probes below and
+        // the index appends all scan those files, so the signature/
+        // shingle/decode work per accepted doc is paid once, not once
+        // per consumer. A persist() would not do that here: the self-
+        // probe plan scans each frame twice before its cache exists,
+        // and AQE gives every such scan its own cache-building job.
+        val accH = IngestHandles.of(accDocs, imagePolicy)
+        val acc = IngestHandles.from(a => if (a == KeysAsset) accH.keys
+          else snapshot(spark, a.of(accH), s"$scratch/${a.name}"))
+        // within-batch near-dup audit (the batch contract, measured):
+        // self-probes over the ACCEPTED set only — O(batch) band joins,
+        // zero corpus work
+        val accNew = accDocs.select(col("doc_id").as("new_doc"))
+        val violations = Dedup.textProbeAgainst(accDocs,
+            acc.textBands, acc.textSets)
+          .filter(col("n_matches") >= 2).select(col("new_doc"))
+          .unionByName(imagePolicy.probe(acc.imageBands, acc.imageBands, accNew)
+            .filter(col("n_matches") >= 2).select(col("new_doc")))
+          .unionByName(Multimodal.bandProbeVerdict(acc.audioBands,
+              acc.audioBands, accNew, Seq("fp"), 3)
+            .filter(col("n_matches") >= 2).select(col("new_doc")))
+          .distinct().count()
+        // APPEND ORDER IS A RECOVERY CONTRACT, two-phase: (1) the
+        // artifact append runs FIRST and alone — the append-only
+        // artifact is the source of truth, and a doc must never be
+        // CLAIMED by the index (id-guard keys) before it exists in the
+        // artifact, or a failed ingest re-delivered would drop the docs
+        // at stage 1 and silently lose them; (2) the index appends
+        // ([[writeIndex]]: band/set assets, then keys, the commit
+        // marker). A failure anywhere between (1) and the keys append
+        // leaves the artifact ahead of keys — one DETECTABLE divergence
+        // class, reconciled in O(missing docs); run repair before the
+        // next batch.
+        withSplit(accepted
+            .drop(IngestReserved.filterNot(_ == "split"): _*))
+          .select(artifactCols.map(col): _*)
+          .write.mode("append").partitionBy("split")
+          .parquet(corpusDir)
+        // the accepted docs' rows APPEND to the same assets the probe
+        // read, so batch N+1 probes the grown index without a rebuild:
+        // the q331/q380/q382 asset lifecycle kept current by the writer
+        // itself. They read only the snapshots above.
+        maintainIndex.foreach(ix => writeIndex(ix, append = true)(_.of(acc)))
+        violations
       }
       import spark.implicits._
       Seq(("1_batch_total", c.getLong(0)), ("2_id_new", c.getLong(1)),
@@ -1361,20 +1392,11 @@ object Pipeline {
   def ingestBatch(spark: SparkSession, corpusDir: String,
       batch: DataFrame,
       imagePolicy: ImageDedupPolicy = NarrowRadius3): DataFrame = {
-    import graft.dedup.Dedup
     requirePolicyMatches(spark, corpusDir, imagePolicy,
       "ingestBatch's imagePolicy parameter")
-    val corpus = spark.read.parquet(corpusDir)
-    val docs = corpus.select(col("doc_id"), col("text"))
-    val handles = IngestHandles(
-      keys = docs.select(col("doc_id"),
-        Dedup.contentKey(col("text")).as("ck")),
-      textBands = Dedup.textBandRows(docs),
-      textSets = Dedup.shingleSets(docs),
-      imageBands = imagePolicy.bandsOf(corpus.select(col("doc_id"))),
-      audioBands = graft.multimodal.Audio
-        .audioBandsOf(corpus.select(col("doc_id"))))
-    ingestGauntlet(spark, corpusDir, batch, handles, imagePolicy, None)
+    val docs = spark.read.parquet(corpusDir).select(col("doc_id"), col("text"))
+    ingestGauntlet(spark, corpusDir, batch,
+      IngestHandles.of(docs, imagePolicy), imagePolicy, None)
   }
 
   /** Build (or rebuild) the PERSISTED INGEST INDEXES for an existing
@@ -1385,40 +1407,17 @@ object Pipeline {
     * partitioned by band so a probe prunes to its band's files, plus
     * a meta row recording the image policy — the probe reads the
     * policy FROM the index, so a corpus built wide can never be
-    * accidentally probed narrow. */
+    * accidentally probed narrow. Every asset lands range-sorted (see
+    * [[IndexAsset]]): one extra range shuffle per asset, paid once per
+    * corpus; keys land after the other assets and meta seals the build
+    * (see [[writeIndex]]). */
   def saveIngestIndexes(spark: SparkSession, corpusDir: String,
       indexDir: String,
       imagePolicy: ImageDedupPolicy = NarrowRadius3): Unit = {
-    import graft.dedup.Dedup
-    import spark.implicits._
-    val corpus = spark.read.parquet(corpusDir)
-    val docs = corpus.select(col("doc_id"), col("text"))
-    // sorted layout throughout (see [[bandSorted]]): build-time sort
-    // is one extra range shuffle per asset, paid once per corpus.
-    // The four band/set assets build CONCURRENTLY (optimization r16,
-    // guide §2.6: independent jobs back-fill each other's straggler
-    // tails — the decode-heavy image asset overlaps the shingle-heavy
-    // text assets); the KEYS sidecar writes after all of them land
-    // and meta seals the build — the same keys-last commit-marker
-    // discipline as the append path, so a crashed initial build is
-    // distinguishable (no keys => rebuild) exactly like a crashed
-    // append.
-    graft.util.Concurrency.awaitSettled(Seq(
-      () => bandSorted(Dedup.textBandRows(docs))
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$indexDir/text_bands"),
-      () => keySorted(Dedup.shingleSets(docs), "doc_id")
-        .write.mode("overwrite").parquet(s"$indexDir/text_shingles"),
-      () => bandSorted(imagePolicy.bandsOf(corpus.select(col("doc_id"))))
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$indexDir/image_bands"),
-      () => bandSorted(graft.multimodal.Audio
-          .audioBandsOf(corpus.select(col("doc_id"))))
-        .write.mode("overwrite").partitionBy("band")
-        .parquet(s"$indexDir/audio_bands")))
-    keySorted(docs.select(col("doc_id"),
-        Dedup.contentKey(col("text")).as("ck")), "ck")
-      .write.mode("overwrite").parquet(s"$indexDir/keys")
+    val h = IngestHandles.of(
+      spark.read.parquet(corpusDir).select(col("doc_id"), col("text")),
+      imagePolicy)
+    writeIndex(indexDir, append = false)(_.of(h))
     writePolicyMeta(spark, imagePolicy, s"$indexDir/meta")
   }
 
@@ -1435,15 +1434,8 @@ object Pipeline {
     * pins audit + artifact equality across multi-batch scenarios. */
   def ingestBatchIndexed(spark: SparkSession, corpusDir: String,
       batch: DataFrame, indexDir: String): DataFrame = {
-    val policy = policyOf(
-      spark.read.parquet(s"$indexDir/meta").head().getString(0))
+    val (policy, handles) = openIngestIndex(spark, indexDir)
     requirePolicyMatches(spark, corpusDir, policy, "the index meta")
-    val handles = IngestHandles(
-      keys = spark.read.parquet(s"$indexDir/keys"),
-      textBands = spark.read.parquet(s"$indexDir/text_bands"),
-      textSets = spark.read.parquet(s"$indexDir/text_shingles"),
-      imageBands = spark.read.parquet(s"$indexDir/image_bands"),
-      audioBands = spark.read.parquet(s"$indexDir/audio_bands"))
     ingestGauntlet(spark, corpusDir, batch, handles, policy, Some(indexDir))
   }
 
@@ -1465,20 +1457,14 @@ object Pipeline {
     * docs repaired. */
   def repairIngestIndexes(spark: SparkSession, corpusDir: String,
       indexDir: String): Long = {
-    import graft.dedup.Dedup
-    val policy = policyOf(
-      spark.read.parquet(s"$indexDir/meta").head().getString(0))
-    val missing = spark.read.parquet(corpusDir)
-      .select(col("doc_id"), col("text"))
-      .join(spark.read.parquet(s"$indexDir/keys").select(col("doc_id")),
-        Seq("doc_id"), "left_anti")
+    val (policy, ix) = openIngestIndex(spark, indexDir)
     // snapshot before appending — the recache-by-path discipline the
     // writer itself follows (the anti-join reads the keys asset the
     // final append below grows)
-    val scratch = graft.util.Scratch.indexDir("graft_ingest_repair",
-      corpusDir)
-    missing.write.parquet(scratch)
-    val docs = spark.read.parquet(scratch)
+    val docs = snapshot(spark, spark.read.parquet(corpusDir)
+        .select(col("doc_id"), col("text"))
+        .join(ix.keys.select(col("doc_id")), Seq("doc_id"), "left_anti"),
+      graft.util.Scratch.indexDir("graft_ingest_repair", corpusDir))
     val n = docs.count()
     if (n > 0L) {
       val ids = docs.select(col("doc_id"))
@@ -1486,40 +1472,16 @@ object Pipeline {
       // (never read a path a concurrent job appends to): the asset's
       // doc_ids semi-joined against the tiny missing set — a narrow
       // column scan — anti-joined back so only genuinely absent docs
-      // re-derive rows
-      def needs(asset: String): DataFrame = {
-        val have = spark.read.parquet(s"$indexDir/$asset")
-          .select(col("doc_id"))
+      // re-derive rows. Keys need every missing doc, by definition.
+      def needs(a: IndexAsset): DataFrame = {
+        val have = a.of(ix).select(col("doc_id"))
           .join(broadcast(ids), Seq("doc_id"), "left_semi")
           .distinct()
-        val nd = docs.join(broadcast(have), Seq("doc_id"), "left_anti")
-        val s = graft.util.Scratch.indexDir(s"graft_repair_$asset", corpusDir)
-        nd.write.parquet(s)
-        spark.read.parquet(s)
+        snapshot(spark, docs.join(broadcast(have), Seq("doc_id"), "left_anti"),
+          graft.util.Scratch.indexDir(s"graft_repair_${a.name}", corpusDir))
       }
-      val nTB = needs("text_bands")
-      val nTS = needs("text_shingles")
-      val nIB = needs("image_bands")
-      val nAB = needs("audio_bands")
-      graft.util.Concurrency.awaitSettled(Seq(
-        () => appendSorted(Dedup.textBandRows(nTB), "band", "bkey")
-          .write.mode("append").partitionBy("band")
-          .parquet(s"$indexDir/text_bands"),
-        () => appendSorted(Dedup.shingleSets(nTS), "doc_id")
-          .write.mode("append").parquet(s"$indexDir/text_shingles"),
-        () => appendSorted(
-            policy.bandsOf(nIB.select(col("doc_id"))), "band", "bkey")
-          .write.mode("append").partitionBy("band")
-          .parquet(s"$indexDir/image_bands"),
-        () => appendSorted(graft.multimodal.Audio
-            .audioBandsOf(nAB.select(col("doc_id"))), "band", "bkey")
-          .write.mode("append").partitionBy("band")
-          .parquet(s"$indexDir/audio_bands")))
-      // keys LAST — the commit marker: by definition every missing
-      // doc is absent from keys, so the full set appends
-      appendSorted(docs.select(col("doc_id"),
-          Dedup.contentKey(col("text")).as("ck")), "ck")
-        .write.mode("append").parquet(s"$indexDir/keys")
+      writeIndex(indexDir, append = true)(a =>
+        a.of(IngestHandles.of(if (a == KeysAsset) docs else needs(a), policy)))
     }
     n
   }
@@ -1537,8 +1499,8 @@ object Pipeline {
     *  - a micro-batch that fails mid-gauntlet leaves at most "artifact
     *    ahead of keys" (the writer's two-phase append order);
     *  - on restart, `foreachBatch` re-delivers that batch (the
-    *    checkpoint WAL marks it uncommitted) — and the gauntlet run
-    *    starts by [[repairIngestIndexes]] (default on), reconciling
+    *    checkpoint WAL marks it uncommitted) — and every gauntlet run
+    *    starts by [[repairIngestIndexes]], reconciling
     *    the partial append before any probe; re-delivered docs the
     *    artifact already holds then reject at the id-guard, novel
     *    remainder ingests once. Repair on a CONSISTENT state is one
@@ -1555,24 +1517,21 @@ object Pipeline {
     * return value. */
   def streamIngestIndexed(spark: SparkSession, corpusDir: String,
       indexDir: String, batches: DataFrame, checkpointDir: String,
-      repairOnStart: Boolean = true,
       onAudit: (Long, DataFrame) => Unit = (_, _) => ()): Unit = {
     graft.streaming.Streams.runBounded(batches, "graft_stream_ingest",
         checkpointDir, stateful = false)(
       _.foreachBatch { (b: DataFrame, batchId: Long) =>
-        if (repairOnStart) {
-          repairIngestIndexes(spark, corpusDir, indexDir): Unit
-        }
+        repairIngestIndexes(spark, corpusDir, indexDir): Unit
         val snap = graft.util.Scratch.indexDir(
           s"graft_stream_ingest_b$batchId", corpusDir)
-        b.write.parquet(snap)
         try {
-          // the returned audit is a driver-local frame (collected
-          // stage counts) and every index/artifact append has run by
-          // the time the gauntlet returns, so nothing references the
-          // snapshot afterwards
+          // read back in `spark`, not the stream's own session (which
+          // runs without AQE). The returned audit is a driver-local
+          // frame (collected stage counts) and every index/artifact
+          // append has run by the time the gauntlet returns, so nothing
+          // references the snapshot afterwards
           val audit = ingestBatchIndexed(spark, corpusDir,
-            spark.read.parquet(snap), indexDir)
+            snapshot(spark, b, snap), indexDir)
           onAudit(batchId, audit)
         } finally {
           // delete per batch, not at JVM exit: a continuous stream
@@ -1601,9 +1560,8 @@ object Pipeline {
     * not a per-batch gauntlet stage. */
   def auditIngestIndexBanding(spark: SparkSession,
       indexDir: String): DataFrame = {
-    val policy = policyOf(
-      spark.read.parquet(s"$indexDir/meta").head().getString(0))
-    val bands = spark.read.parquet(s"$indexDir/image_bands")
+    val policy = readPolicy(spark, s"$indexDir/meta")
+    val bands = ImageBandsAsset.read(spark, indexDir, policy)
     val hashes = policy match {
       case WideRadius7 => bands
         .select(col("doc_id"), col("h1"), col("h2"), col("h3"), col("h4"))
@@ -1627,16 +1585,13 @@ object Pipeline {
   def ingestIndexAudit(spark: SparkSession, dir: String): DataFrame = {
     val ix = graft.util.Scratch.indexDir("graft_ing_audit", dir)
     // the audit reads ONLY the image band asset + policy meta — build
-    // exactly those two, via the SAME shared build rules
-    // (bandsOf/bandSorted/writePolicyMeta) the full writer
-    // uses, so the asset layout cannot fork from saveIngestIndexes'.
-    // The first spelling built all five assets and never read the
-    // text/audio ones (optimization r16, guide §1.2: don't compute
-    // things you throw away — measured 4.4 s at sf0.1).
-    bandSorted(WideRadius7.bandsOf(
-        load(spark, dir, "documents").select(col("doc_id"))))
-      .write.mode("overwrite").partitionBy("band")
-      .parquet(s"$ix/image_bands")
+    // exactly those two, via the SAME asset definition and meta writer
+    // the full writer uses, so the asset layout cannot fork from
+    // saveIngestIndexes'. The first spelling built all five assets and
+    // never read the text/audio ones (optimization r16, guide §1.2:
+    // don't compute things you throw away — measured 4.4 s at sf0.1).
+    ImageBandsAsset.write(WideRadius7.bandsOf(
+      load(spark, dir, "documents").select(col("doc_id"))), ix, append = false)
     writePolicyMeta(spark, WideRadius7, s"$ix/meta")
     auditIngestIndexBanding(spark, ix)
   }

@@ -324,11 +324,10 @@ object Similarity {
 
   private def saveIvfQuantizerAndAssign(spark: SparkSession, v: DataFrame,
       quantizer: DataFrame, indexDir: String): Unit = {
-    quantizer.write.mode("overwrite").parquet(s"$indexDir/centroids")
     // assign from the WRITTEN centroids: skips a second quantizer-sample
     // corpus scan, and the saved assignment is provably derived from
     // the saved centroid table rather than a recomputation
-    val cent = spark.read.parquet(s"$indexDir/centroids")
+    val cent = snapshot(spark, quantizer, s"$indexDir/centroids")
     assignToCentroids(v, cent)
       .write.mode("overwrite").parquet(s"$indexDir/assign")
   }
@@ -363,9 +362,21 @@ object Similarity {
     * without rebuilding either — spec-pinned in OperatorSpec. */
   def annIvfFromIndex(spark: SparkSession, dir: String,
       indexDir: String): DataFrame = {
-    val cent = spark.read.parquet(s"$indexDir/centroids")
-    val assign = spark.read.parquet(s"$indexDir/assign")
+    val (cent, assign) = ivfIndex(spark, indexDir)
     probeIvf(queryVecs(vecs(spark, dir)), cent, assign)
+  }
+
+  /** [[saveIvfIndex]]'s `(centroids, assign)` — `(cid, ce, cn)` and
+    * `(vec_id, embedding, n2, cid)` — read with the schemas it writes,
+    * no schema-inference job. */
+  private[graft] def ivfIndex(spark: SparkSession,
+      indexDir: String): (DataFrame, DataFrame) = {
+    val ce = StructField("ce", ArrayType(FloatType))
+    (readWritten(spark, s"$indexDir/centroids", StructType(Seq(
+        StructField("cid", LongType), ce, StructField("cn", DoubleType)))),
+      readWritten(spark, s"$indexDir/assign", StructType(Seq(
+        StructField("vec_id", LongType), ce.copy(name = "embedding"),
+        StructField("n2", DoubleType), StructField("cid", LongType)))))
   }
 
   /** INT8 scalar quantization of the embedding column — the 4×

@@ -1391,17 +1391,16 @@ object Streams {
     // one-row static frame: the whole O(k) quantizer as an array,
     // sorted by cid for a deterministic (if semantically irrelevant)
     // layout
-    val centArr = spark.read.parquet(s"$indexDir/centroids")
-      .agg(array_sort(collect_list(
-        struct(col("cid"), col("ce"), col("cn")))).as("cents"))
+    val (cent, assign) = Similarity.ivfIndex(spark, indexDir)
+    val centArr = cent.agg(array_sort(collect_list(
+      struct(col("cid"), col("ce"), col("cn")))).as("cents"))
     val probed = src.crossJoin(broadcast(centArr))
       .withColumn("cids", Similarity.probeCidsExpr(
         col("cents"), col("embedding"), col("n2")))
       .withColumn("b1", col("cids").getItem(0))
       .drop("cents")
-    val ixAssign = spark.read.parquet(s"$indexDir/assign")
-      .select(col("vec_id").as("m_id"), col("embedding").as("me"),
-        col("n2").as("mn"), col("cid"))
+    val ixAssign = assign.select(col("vec_id").as("m_id"),
+      col("embedding").as("me"), col("n2").as("mn"), col("cid"))
     val corpusHits = probed
       .select(col("vec_id"), col("embedding"), col("n2"),
         explode(col("cids")).as("cid"))

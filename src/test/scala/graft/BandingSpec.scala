@@ -142,6 +142,16 @@ class BandingSpec extends AnyFunSuite {
         assert(at(s"$out/text_bands") === textBands)
         assert(at(s"$out/image_bands") === image, policy)
         assert(at(s"$out/audio_bands") === audioBands)
+        // the index reader takes its writer's schemas: exactly what Spark
+        // infers, with one job (the policy row) for the whole open
+        val ((read, h), jobs) = graft.util.Probes.jobs(spark)(
+          graft.ops.Pipeline.openIngestIndex(spark, out))
+        assert(jobs === 1, policy)
+        assert(read === policy)
+        for ((asset, df) <- Seq("keys" -> h.keys, "text_bands" -> h.textBands,
+            "text_shingles" -> h.textSets, "image_bands" -> h.imageBands,
+            "audio_bands" -> h.audioBands))
+          assert(df.schema === at(s"$out/$asset"), s"$policy $asset")
       }
     }
   }

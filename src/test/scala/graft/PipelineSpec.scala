@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Pipeline
+import graft.TempDirs.withTempDirs
 
 /** End-to-end corpus-build specs: the operator COMPOSITION contracts
   * that no single-query oracle covers — survivor accounting across
@@ -158,8 +159,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"stratified HT estimate $est far from true mass $truth")
     // DLT boundary: a stratum with <= k docs samples everything and
     // tau = 0, so every HT weight is EXACTLY the doc's own w
-    val tiny = java.nio.file.Files.createTempDirectory("graft_q378").toString
-    try {
+    withTempDirs("graft_q378") { case Seq(tiny) =>
       import spark.implicits._
       Seq((0L, "only", "a b c"), (1L, "only", "d e"), (2L, "only", "f"))
         .toDF("doc_id", "source", "text")
@@ -168,18 +168,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(t.length === 3)
       assert(t.forall(r => r.getDouble(4) === r.getLong(3).toDouble),
         "tiny stratum must carry exact weights (tau = 0)")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tiny))
     }
   }
 
   test("layout maintenance chains onto the built corpus: compact then retire") {
     import graft.ingest.GasPrices
-    val compacted =
-      java.nio.file.Files.createTempDirectory("graft_corpus_compact").toString
-    val fragmented =
-      java.nio.file.Files.createTempDirectory("graft_corpus_frag").toString
-    try {
+    withTempDirs("graft_corpus_compact", "graft_corpus_frag") {
+        case Seq(compacted, fragmented) =>
       def parquetFiles(p: String): Int = {
         def walk(f: java.io.File): Int = {
           val kids = f.listFiles()
@@ -215,12 +210,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       // kept rows untouched by the drop
       assert(remaining.count() ===
         before.filter(col("split") =!= "test").count())
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-        f.delete(): Unit
-      }
-      rm(new java.io.File(compacted)); rm(new java.io.File(fragmented))
     }
   }
 
@@ -232,9 +221,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // radius knob without forking the waterfall oracle. A policy
     // wiring bug (wrong pipeline, wrong banding, lost pairs) breaks
     // this equality even though each pair pipeline is gated standalone
-    val wideOut =
-      java.nio.file.Files.createTempDirectory("graft_corpus_wide").toString
-    try {
+    withTempDirs("graft_corpus_wide") { case Seq(wideOut) =>
       Pipeline.prepareCorpus(spark, sf, wideOut, Pipeline.WideRadius7)
       val narrow = corpus.select(col("doc_id"), col("split"))
         .orderBy(col("doc_id")).collect().toSeq
@@ -247,8 +234,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         .groupBy(expr("doc_id div 5")).count()
         .agg(max(col("count"))).collect()(0).getLong(0)
       assert(maxPerScene === 1L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wideOut))
     }
     val base = Pipeline.buildWaterfall(spark, sf).collect().map(_.toString)
     val wideWf = Pipeline.buildWaterfall(spark, sf, Pipeline.WideRadius7)
@@ -258,8 +243,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("incremental ingest: probes the artifact, accepts only novel docs, re-ingest is a no-op") {
-    val work = java.nio.file.Files.createTempDirectory("graft_ingest").toString
-    try {
+    withTempDirs("graft_ingest") { case Seq(work) =>
       Pipeline.prepareCorpus(spark, sf, work)
       val art0 = spark.read.parquet(work)
       val n0 = art0.count()
@@ -314,8 +298,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
           (col("eb") === 8 && col("split") =!= "val") ||
           (col("eb") === 9 && col("split") =!= "test"))
       assert(wrong.count() === 0L)
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
     }
   }
 
@@ -327,10 +309,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // The index maintenance contract rides the same scenario: batch 2
     // must reject against a doc ACCEPTED in batch 1, which only works
     // if batch 1's accepted band rows were appended to the index.
-    val dirA = java.nio.file.Files.createTempDirectory("graft_ing_a").toString
-    val dirB = java.nio.file.Files.createTempDirectory("graft_ing_b").toString
-    val ix = java.nio.file.Files.createTempDirectory("graft_ing_ix").toString
-    try {
+    withTempDirs("graft_ing_a", "graft_ing_b", "graft_ing_ix") {
+        case Seq(dirA, dirB, ix) =>
       corpus // force the shared build
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(dirA))
@@ -378,15 +358,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val imgDocs = spark.read.parquet(s"$ix/image_bands")
         .select(col("doc_id")).distinct().count()
       assert(imgDocs === nFinal, "image band rows must cover the grown corpus")
-    } finally {
-      Seq(dirA, dirB, ix).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
   test("ingest batch contracts: duplicate doc_ids collapse to one canonical; mutual near-dups are accepted but audited") {
-    val work = java.nio.file.Files.createTempDirectory("graft_ing_c").toString
-    try {
+    withTempDirs("graft_ing_c") { case Seq(work) =>
       corpus
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(work))
@@ -428,8 +404,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val a3 = Pipeline.ingestBatch(spark, work, mk(base + 60, novelText(9)))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(a3("8_intra_batch_neardup") === 0L, s"clean batch: $a3")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(work))
     }
   }
 
@@ -465,10 +439,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // its radius still catches the pair (narrow distance 2), but the
     // fingerprints, bands, and index rows would be the wrong family,
     // which the h1..h4 index schema and this audit equality pin.
-    val wDir = java.nio.file.Files.createTempDirectory("graft_wide_a").toString
-    val wDir2 = java.nio.file.Files.createTempDirectory("graft_wide_b").toString
-    val wIx = java.nio.file.Files.createTempDirectory("graft_wide_ix").toString
-    try {
+    withTempDirs("graft_wide_a", "graft_wide_b", "graft_wide_ix") {
+        case Seq(wDir, wDir2, wIx) =>
       Pipeline.prepareCorpus(spark, sf, wDir, Pipeline.WideRadius7)
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(wDir), new java.io.File(wDir2))
@@ -491,9 +463,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(inline === indexed, s"wide writers diverged: $inline vs $indexed")
       assert(inline("5_neardup_new") === 1L && inline("6_image_new") === 0L,
         s"radius>=4 group variant must drop at the wide image stage: $inline")
-    } finally {
-      Seq(wDir, wDir2, wIx).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
@@ -504,9 +473,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // writer grew an artifact that also has persisted indexes).
     // Without repair, a re-delivery would re-accept those docs off
     // the stale keys sidecar and append duplicate doc_ids.
-    val work = java.nio.file.Files.createTempDirectory("graft_rep_w").toString
-    val ix = java.nio.file.Files.createTempDirectory("graft_rep_ix").toString
-    try {
+    withTempDirs("graft_rep_w", "graft_rep_ix") { case Seq(work, ix) =>
       corpus
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(work))
@@ -531,9 +498,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(spark.read.parquet(work).count() === n1)
       // and repair is idempotent
       assert(Pipeline.repairIngestIndexes(spark, work, ix) === 0L)
-    } finally {
-      Seq(work, ix).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
@@ -547,9 +511,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // five-way re-append would duplicate the assets that landed), and
     // seal with the keys append — after which a re-delivered near-dup
     // of that doc is rejected by every gate.
-    val work = java.nio.file.Files.createTempDirectory("graft_pr_w").toString
-    val ix = java.nio.file.Files.createTempDirectory("graft_pr_ix").toString
-    try {
+    withTempDirs("graft_pr_w", "graft_pr_ix") { case Seq(work, ix) =>
       corpus
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(work))
@@ -618,9 +580,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"text gate must reject the near-dup of the repaired doc: $a4")
       // and repair is idempotent
       assert(Pipeline.repairIngestIndexes(spark, work, ix) === 0L)
-    } finally {
-      Seq(work, ix).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
@@ -629,9 +588,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // on a wide-built corpus must not silently probe narrow —
     // prepareCorpus records the policy in the artifact and both
     // writers validate against it.
-    val work = java.nio.file.Files.createTempDirectory("graft_pm_w").toString
-    val ix = java.nio.file.Files.createTempDirectory("graft_pm_ix").toString
-    try {
+    withTempDirs("graft_pm_w", "graft_pm_ix") { case Seq(work, ix) =>
       corpus // built NarrowRadius3 → meta says narrow
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(work))
@@ -656,9 +613,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val a = Pipeline.ingestBatch(spark, work, b)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(a("7_audio_new_accepted") === 1L, s"$a")
-    } finally {
-      Seq(work, ix).foreach(d =>
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
     }
   }
 
@@ -693,8 +647,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // pair within their scene groups at Hamming distance 1 with
     // group-distinct bytes in every h1 lane (zero cross-group
     // collisions); noise docs are group-less all-identical hashes.
-    val ix = java.nio.file.Files.createTempDirectory("graft_ixa").toString
-    try {
+    withTempDirs("graft_ixa") { case Seq(ix) =>
       def bandsOf(h: org.apache.spark.sql.DataFrame) = {
         val hs = Seq(col("h1"), col("h2"), col("h3"), col("h4"))
         h.select((col("doc_id") +: hs) :+
@@ -726,8 +679,6 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val grown = quadRow()
       assert(grown.getBoolean(5),
         s"noise-dominated grown index must flag: $grown")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ix))
     }
   }
 
@@ -738,16 +689,9 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     // to three sequential ingestBatchIndexed calls on a twin corpus —
     // and re-running the whole stream with a fresh checkpoint (total
     // redelivery, the crash-recovery worst case) must change nothing.
-    val dirSeq = java.nio.file.Files.createTempDirectory("graft_sing_a").toString
-    val dirStr = java.nio.file.Files.createTempDirectory("graft_sing_b").toString
-    val ixSeq = java.nio.file.Files.createTempDirectory("graft_sing_ixa").toString
-    val ixStr = java.nio.file.Files.createTempDirectory("graft_sing_ixb").toString
-    val stage = java.nio.file.Files.createTempDirectory("graft_sing_src").toString
-    def rm(f: java.io.File): Unit = {
-      val kids = f.listFiles(); if (kids != null) kids.foreach(rm)
-      f.delete(): Unit
-    }
-    try {
+    withTempDirs("graft_sing_a", "graft_sing_b", "graft_sing_ixa",
+        "graft_sing_ixb", "graft_sing_src") {
+        case Seq(dirSeq, dirStr, ixSeq, ixStr, stage) =>
       corpus // force the shared build
       org.apache.commons.io.FileUtils.copyDirectory(
         new java.io.File(out), new java.io.File(dirSeq))
@@ -830,8 +774,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(m("7_audio_new_accepted") === 0L,
           s"redelivered batch $id re-ingested") }
       assert(snap(dirStr, ixStr) === before, "redelivery changed state")
-    } finally Seq(dirSeq, dirStr, ixSeq, ixStr, stage)
-      .foreach(d => rm(new java.io.File(d)))
+    }
   }
 
   test("rerun writes the identical corpus (deterministic artifact)") {

@@ -182,6 +182,31 @@ class TablesSpec extends AnyFunSuite {
       graft.dedup.Dedup.saveLshIndex(spark, Sf, s"$ix/lsh")
       assertNoJobRead(s"$ix/lsh/bands")(graft.dedup.Dedup.lshIndex(spark, s"$ix/lsh")._1)
       assertNoJobRead(s"$ix/lsh/shingles")(graft.dedup.Dedup.lshIndex(spark, s"$ix/lsh")._2)
+      for ((kind, trained) <- Seq("hash" -> false, "trained" -> true)) {
+        graft.sim.Similarity.saveIvfIndex(spark, Sf, s"$ix/ivf_$kind", trained)
+        val (cent, assign) = graft.sim.Similarity.ivfIndex(spark, s"$ix/ivf_$kind")
+        assertNoJobRead(s"$ix/ivf_$kind/centroids")(cent)
+        assertNoJobRead(s"$ix/ivf_$kind/assign")(assign)
+      }
+    }
+  }
+
+  test("snapshot materializes a frame once and reads it back with its schema and no job") {
+    withTempDir("graft-tables-snapshot") { tmp =>
+      // nested, decimal and binary columns, built through a shuffle
+      val df = Tables.events(spark, Sf).groupBy(col("user_id"))
+        .agg(sum(col("value")).cast("decimal(28,2)").as("balance"),
+          sort_array(collect_list(col("event_id"))).as("ids"),
+          struct(count(lit(1)).as("n"), max(col("ts")).as("last")).as("s"))
+        .withColumn("key", md5(col("user_id").cast("string")).cast("binary"))
+      val (_, writeJobs) = Probes.jobs(spark)(df.write.parquet(s"$tmp/plain"))
+      val (snap, snapJobs) = Probes.jobs(spark)(
+        Tables.snapshot(spark, df, s"$tmp/snap"))
+      assert(snapJobs === writeJobs, "the read-back must add no job")
+      val inferred = spark.read.parquet(s"$tmp/snap")
+      assert(snap.schema === inferred.schema)
+      assert(snap.exceptAll(inferred).isEmpty && inferred.exceptAll(snap).isEmpty)
+      assert(snap.count() === df.count())
     }
   }
 }

@@ -14,4 +14,11 @@ object TempDirs {
     try body(dir)
     finally FileUtils.deleteQuietly(dir.toFile): Unit
   }
+
+  /** [[withTempDir]] for several dirs at once: `body` gets one fresh dir
+    * path per prefix, in order, and every one is deleted afterwards. */
+  def withTempDirs[T](prefixes: String*)(body: Seq[String] => T): T =
+    if (prefixes.isEmpty) body(Nil)
+    else withTempDir(prefixes.head)(d =>
+      withTempDirs(prefixes.tail: _*)(ds => body(d.toString +: ds)))
 }
